@@ -15,8 +15,13 @@ import org.apache.spark.sql.functions._
   *
   *   read (text/ORC/parquet) → exclude fields → stringly parity →
   *   null-normalize + sanitize → dt/additional columns → wire rows →
-  *   weighted shard assignment → co-locate by shard →
-  *   direct sink (micro-batched, retried) | staged temp-table commit
+  *   weighted shard assignment ([[mapSide]]), then either
+  *   - direct sink in the same task: per-shard micro-batches, retried
+  *     (map-only, no shuffle — the reference sets `numReduceTasks=0`,
+  *     `ClickhouseHdfsLoader.java:181-183`), or
+  *   - co-locate by shard ([[plan]], one exchange) → staged commit
+  *     (the reference's reduce side, which only the two-phase path
+  *     has, `ClickhouseHdfsLoader.java:142-154, 184-188`)
   *
   * A user of the reference maps their CLI invocation onto
   * [[LoaderConfig]] (see [[graft.cli.Args]]) and gets the same load
@@ -24,15 +29,16 @@ import org.apache.spark.sql.functions._
   */
 object LoaderJob {
 
-  /** Build the transform half (everything before the sink): returns
-    * the wire-row frame with a `shard` column. Pure plan — no actions:
-    * the text source's field count is derived from the target schema
-    * (target width minus the appended dt/additional/hive-partition
-    * columns plus the excluded source fields), so no max-arity
-    * inference scan runs (op #19 analogue of the reference pulling the
-    * column count from `system.columns`).
+  /** The map side (everything before the shard exchange): returns the
+    * wire-row frame with a `shard` column, partitioned as the source
+    * splits are. Pure plan — no actions: the text source's field count
+    * is derived from the target schema (target width minus the
+    * appended dt/additional/hive-partition columns plus the excluded
+    * source fields), so no max-arity inference scan runs (op #19
+    * analogue of the reference pulling the column count from
+    * `system.columns`).
     */
-  def plan(spark: SparkSession, cfg: LoaderConfig, target: TargetSchema,
+  def mapSide(spark: SparkSession, cfg: LoaderConfig, target: TargetSchema,
       shards: ShardSpec): DataFrame = {
     val hiveKeys =
       if (cfg.extractHivePartitions)
@@ -53,9 +59,17 @@ object LoaderJob {
     val wire = TransformStage.transform(excluded, cfg, target.stringCols)
     target.validate(wire.drop("wire_row"))
     val keyCol = target.shardingKey.getOrElse(wire.columns.head)
-    Sharding.partitionByShard(
-      Sharding.assign(wire, keyCol, shards), shards, cfg.loaderTaskExecutor)
+    Sharding.assign(wire, keyCol, shards)
   }
+
+  /** [[mapSide]] co-located by shard: one exchange that gives each
+    * shard its own `--loader-task-executor` partitions — the input of
+    * the staged paths.
+    */
+  def plan(spark: SparkSession, cfg: LoaderConfig, target: TargetSchema,
+      shards: ShardSpec): DataFrame =
+    Sharding.partitionByShard(
+      mapSide(spark, cfg, target, shards), shards, cfg.loaderTaskExecutor)
 
   /** Production executor wiring for [[runDirect]]: a single JDBC
     * endpoint gets the pooled FORMAT-insert executor; several (the
@@ -75,16 +89,19 @@ object LoaderJob {
         cfg.password, cfg.clickhouseFormat, lookupReplicated, cfg.maxTries)
   }
 
-  /** Direct load (§3.1, `--direct true`): per-partition micro-batched
-    * inserts through `executor` with retry + metrics; fails the job if
-    * any batch exhausted its retries (the reference's counters
+  /** Direct load (§3.1, `--direct true`) as one stage: scan →
+    * transform → shard → sink, no shuffle. Each scan task keeps one
+    * micro-batch buffer per shard (at most shards × batchSize rows, the
+    * reference mapper's bound, `AbstractClickhouseLoaderMapper.java:270-298`)
+    * and inserts through `executor` with retry + metrics; fails the job
+    * if any batch exhausted its retries (the reference's counters
     * contract, `ClickhouseHdfsLoader.java:203-207`).
     */
   def runDirect(spark: SparkSession, cfg: LoaderConfig, target: TargetSchema,
       shards: ShardSpec, executor: BatchExecutor): LoadReport = {
     val metrics = LoadMetrics(spark)
     val report = new DirectSink(executor, cfg, metrics)
-      .write(plan(spark, cfg, target, shards), cfg.table)
+      .write(mapSide(spark, cfg, target, shards), cfg.table)
     report.failIfAnyFailed()
     report
   }

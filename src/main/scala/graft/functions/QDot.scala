@@ -275,14 +275,17 @@ object SignPack32 {
   *
   * Rounding parity: Spark's `round(d)` is decimal HALF_UP. For scale 0
   * the decision boundary x.5 is exactly representable for every double
-  * that has a fractional part, so binary-exact and decimal-string
+  * that has a fractional part, and `Double.toString` round-trips (its
+  * decimal lies within half an ulp of the double, so on the same side
+  * of a representable x.5), so binary-exact and decimal-string
   * BigDecimal constructions agree for ALL doubles — the kernel's fast
   * path resolves every value whose fraction is clearly on one side and
   * defers the guard band around .5 to the same BigDecimal arithmetic
   * Spark uses ([[QuantizeVec.gridRound]]). InterpretedParitySpec pins
   * kernel == HOF (incl. exact-tie values) across both eval modes.
-  * Magnitudes are < 2^53 by the repo's quantization contract; values
-  * beyond long range would wrap where the HOF's ANSI cast errors.
+  * Magnitudes are < 2^53 by the repo's quantization contract; NaN, ±∞
+  * and values past long range throw, exactly where the HOF's ANSI
+  * cast does.
   */
 case class QuantizeVec(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -348,10 +351,19 @@ object QuantizeVec {
     * fractions clearly on one side of .5 (pure floor/compare, no
     * allocation); the ±1e-7 guard band around .5 — which contains
     * every representable exact tie — goes through the same BigDecimal
-    * HALF_UP arithmetic Spark's Round uses.
+    * HALF_UP arithmetic Spark's Round uses. Throws where the ANSI
+    * double→long cast after `round` does: NaN, ±∞, and d outside
+    * [-2^63, 2^63] (Spark's `DoubleExactNumeric.toLong` bounds, which
+    * for doubles reduce to this closed range). From 2^52 up every
+    * double is an integer and converts directly (2^63 saturates to
+    * Long.MaxValue, as in Spark).
     */
   def gridRound(d: Double): Long = {
+    if (!(d >= Long.MinValue.toDouble && d <= Long.MaxValue.toDouble))
+      throw new ArithmeticException(
+        s"quantize_vec: $d does not fit a BIGINT (ANSI cast overflow)")
     val a = math.abs(d)
+    if (a >= 4503599627370496d) return d.toLong // 2^52
     val fl = math.floor(a)
     val af = a - fl // exact: fl = floor(a), difference < 1, both < 2^53
     val r =

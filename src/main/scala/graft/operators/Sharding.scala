@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * The murmur expression is codegen'd ([[graft.functions.Murmur3ShardCode]]),
   * and the weight walk compiles to a nested CASE WHEN over the
   * cumulative bounds — the whole assignment stays inside whole-stage
-  * codegen and never shuffles by itself. Downstream co-location with a
-  * shard-local sink is then one `repartition(n, $"shard")`.
+  * codegen and never shuffles by itself. The direct load writes this
+  * frame as-is (the reference's map-only job); only the staged paths
+  * co-locate rows with their shard through [[Sharding.partitionByShard]].
   */
 final case class ShardSpec(weights: Seq[Int]) {
   require(weights.nonEmpty && weights.forall(_ > 0), "weights must be positive")
@@ -56,10 +57,20 @@ object Sharding {
   }
 
   /** Co-locate rows with their shard for a shard-local sink: one
-    * shuffle keyed by shard, `partitionsPerShard` splits each shard's
-    * stream for write parallelism (the reference's
-    * `--loader-task-executor` reducer fan-out, ClickhouseHdfsLoader.java:142-154).
+    * shuffle that sends shard `s` to partitions
+    * `[s·pps, (s+1)·pps)` exactly, `pps = partitionsPerShard`
+    * splitting each shard's stream by a whole-row hash for write
+    * parallelism (the reference's `--loader-task-executor` reducer
+    * fan-out, ClickhouseHdfsLoader.java:142-154). The partition id is
+    * computed, not hashed from the shard id, so no two shards ever
+    * share a partition.
     */
-  def partitionByShard(df: DataFrame, spec: ShardSpec, partitionsPerShard: Int = 1): DataFrame =
-    df.repartition(spec.weights.size * partitionsPerShard, col("shard"))
+  def partitionByShard(df: DataFrame, spec: ShardSpec, partitionsPerShard: Int = 1): DataFrame = {
+    val pps = partitionsPerShard
+    val id =
+      if (pps == 1) col("shard")
+      else col("shard") * pps +
+        pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(pps.toLong)).cast("int")
+    df.repartitionById(spec.weights.size * pps, id)
+  }
 }

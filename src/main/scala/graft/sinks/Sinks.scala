@@ -2,7 +2,9 @@ package graft.sinks
 
 import graft.config.LoaderConfig
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.util.LongAccumulator
+import scala.collection.mutable
 
 /** Load metrics — the reference's Hadoop counters (SURVEY.md §2.A #24:
   * Success/Failed/Illegal records, temp tables), carried by Spark
@@ -60,12 +62,17 @@ trait BatchExecutor extends Serializable {
   def close(): Unit = ()
 }
 
-/** Direct sink (SURVEY.md §2.A #13/#14/#23/#24): per partition, group
-  * rows into `batchSize` micro-batches (capped at the 1,048,576
-  * atomic-insert limit, `AbstractClickhouseLoaderMapper.java:294-295`)
-  * and execute each with retry/backoff. One connection per partition,
-  * no driver round-trips — the partition count is the write
-  * parallelism, which is how this scales to 1000 executors.
+/** Direct sink (SURVEY.md §2.A #13/#14/#23/#24): each task keeps one
+  * buffer per `shard` value and sends it as a micro-batch when it
+  * reaches `batchSize` rows (capped at the 1,048,576 atomic-insert
+  * limit, `AbstractClickhouseLoaderMapper.java:294-295`); leftovers go
+  * out at task end in shard order. A batch never mixes shards, and a
+  * task holds at most shards × batchSize rows — the reference mapper's
+  * bound (`AbstractClickhouseLoaderMapper.java:270-298`). A frame
+  * without a `shard` column is one group. Every batch is executed with
+  * retry/backoff. One connection per task, no driver round-trips — the
+  * partition count is the write parallelism, which is how this scales
+  * to 1000 executors.
   */
 final class DirectSink(
     executor: BatchExecutor,
@@ -74,19 +81,28 @@ final class DirectSink(
 
   private val effectiveBatch = math.min(cfg.batchSize, 1048576)
 
-  /** Write the `wire_row` column of `df` to `target`. */
+  /** Write the `wire_row` column of `df` to `target`, batched by `shard`. */
   def write(df: DataFrame, target: String): LoadReport = {
     val (exec, tries, batchSz, m) = (executor, cfg.maxTries, effectiveBatch, metrics)
-    df.select("wire_row").foreachPartition { (rows: Iterator[Row]) =>
+    val shard = if (df.columns.contains("shard")) col("shard") else lit(0)
+    df.select(shard, col("wire_row")).foreachPartition { (rows: Iterator[Row]) =>
+      def send(batch: Seq[String]): Unit =
+        try {
+          Retry.withRetries(tries)(_ => exec.execute(target, batch))
+          m.success.add(batch.size)
+          m.batches.add(1)
+        } catch {
+          case _: Throwable => m.failed.add(batch.size)
+        }
+      val open = mutable.HashMap.empty[Int, mutable.Builder[String, Vector[String]]]
       try {
-        rows.map(_.getString(0)).grouped(batchSz).foreach { batch =>
-          try {
-            Retry.withRetries(tries)(_ => exec.execute(target, batch))
-            m.success.add(batch.size)
-            m.batches.add(1)
-          } catch {
-            case _: Throwable => m.failed.add(batch.size)
-          }
+        rows.foreach { r =>
+          val buf = open.getOrElseUpdate(r.getInt(0), Vector.newBuilder[String])
+          buf += r.getString(1)
+          if (buf.knownSize == batchSz) { send(buf.result()); buf.clear() }
+        }
+        open.toSeq.sortBy(_._1).foreach { case (_, buf) =>
+          if (buf.knownSize > 0) send(buf.result())
         }
       } finally exec.close() // one per task — releases the connection
     }

@@ -84,8 +84,12 @@ object StreamingIndex {
     * 32 partitions), passes through untouched and keeps the fully
     * parallel plan. Row-multiset-invisible: same rows, same
     * aggregation results, only the exchange placement changes.
+    * Real foreachBatch frames are LogicalRDD-backed and carry their
+    * source plan's stats, so the size gate sees a real estimate;
+    * StreamingSpec pins that, since without those stats the regime
+    * would never engage.
     */
-  private def microPlan(batch: DataFrame): DataFrame = {
+  private[graft] def microPlan(batch: DataFrame): DataFrame = {
     val small = batch.queryExecution.analyzed.stats.sizeInBytes <
       MicroBatchMaxBytes
     if (small && batch.rdd.getNumPartitions == 1) batch.coalesce(1) else batch

@@ -159,6 +159,49 @@ class InterpretedParitySpec extends SparkSpec {
     assert(cp.forall(r => r.getSeq[java.lang.Long](1) == r.getSeq[java.lang.Long](2)))
   }
 
+  test("QuantizeVec keeps HOF parity at |v·1000| ≈ 2^40 and fails like the " +
+      "ANSI cast past long range, in both eval modes") {
+    // 2^40 = 1099511627776: ulp there is 2^-12, so v·1000 still carries
+    // fractions (incl. near-.5 ones) through the kernel's fast path;
+    // ±2^52.. rows take its integral path
+    val big = Seq(1099511627.776, -1099511627.776, 1099511627.7765, -1099511627.7765,
+      1099511627.77649, 1099511627.77651, 1099511627.7764999, 1099511627.7765001,
+      4503599627370.4966, -9007199254740.993, 9.2233720368547E15, -9.2233720368547E15)
+    val hof = transform($"v", x => round(x.cast("double") * 1000).cast("long"))
+    val df = Seq((1L, big)).toDF("id", "v").cache()
+    def build = df.select(QuantizeVec.quantizeVec($"v").as("qv"), hof.as("hof"))
+    val (compiled, interpreted) = bothModes(build)
+    assert(compiled == interpreted)
+    assert(compiled.head.getSeq[Long](0) == compiled.head.getSeq[Long](1))
+    assert(compiled.head.getSeq[Long](0).take(2) == Seq(1099511627776L, -1099511627776L))
+
+    // 1e17·1000 = 1e20 > 2^63: the HOF's cast raises, so must the kernel
+    val out = Seq((2L, Seq(0.5, 1e17))).toDF("id", "v").cache()
+    def arithmetic(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+    val conf = "spark.sql.codegen.factoryMode"
+    for (mode <- Seq("FALLBACK", "NO_CODEGEN")) {
+      val orig = spark.conf.getOption(conf)
+      spark.conf.set(conf, mode)
+      try {
+        for ((name, c) <- Seq("kernel" -> QuantizeVec.quantizeVec($"v"), "hof" -> hof)) {
+          val e = intercept[Exception](out.select(c).collect())
+          assert(arithmetic(e), s"$name in $mode: want an ArithmeticException, got $e")
+        }
+      } finally orig match {
+        case Some(v) => spark.conf.set(conf, v)
+        case None => spark.conf.unset(conf)
+      }
+    }
+    // gridRound itself: the cast's closed range [-2^63, 2^63], NaN and ±∞
+    assert(QuantizeVec.gridRound(9.223372036854775807E18) == Long.MaxValue)
+    assert(QuantizeVec.gridRound(-9.223372036854775808E18) == Long.MinValue)
+    Seq(Math.nextUp(9.223372036854775807E18), Math.nextDown(-9.223372036854775808E18),
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { d =>
+      intercept[ArithmeticException](QuantizeVec.gridRound(d))
+    }
+  }
+
   test("QDot and the sketch expressions agree across eval modes") {
     val docs = Tables(spark, sf).documents.limit(100).cache()
     def build = docs.select($"doc_id",

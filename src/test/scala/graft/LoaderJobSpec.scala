@@ -144,6 +144,85 @@ class LoaderJobSpec extends SparkSpec {
     CollectingExecutor.batches.forEach { case (_, sz) => assert(sz <= 30) }
   }
 
+  /** A text export of `files` files × `rows` lines: a row number, then
+    * one of 97 keys.
+    */
+  private def textExport(name: String, files: Int, rows: Int): java.nio.file.Path = {
+    val dir = Files.createTempDirectory(name)
+    (0 until files).foreach { f =>
+      Files.writeString(dir.resolve(s"part-$f.txt"),
+        (1 to rows).map(i => s"${f * rows + i}|key_${(f * rows + i) % 97}").mkString("\n"))
+    }
+    dir
+  }
+
+  test("direct load is map-only: one job, one stage, no Exchange") {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val dir = textExport("graft-maponly", files = 3, rows = 100)
+    val cfg = Args.parse(Seq("--export-dir", dir.toString, "--table", "t_maponly",
+      "--dt", "2017-01-07"))
+    val target = TargetSchema.fromDDL("c0 STRING, c1 STRING, dt STRING",
+      shardingKey = Some("c1"))
+    val shards = ShardSpec(Seq(3, 2, 2, 1))
+    val mapPlan = LoaderJob.mapSide(spark, cfg, target, shards).queryExecution.executedPlan.toString
+    assert(!mapPlan.contains("Exchange"), s"the map side must not shuffle:\n$mapPlan")
+    // listener events arrive asynchronously and in order: once the
+    // marker job's end is seen, every event of the load has been too
+    val (group, marker) = (s"maponly-${System.nanoTime()}", s"marker-${System.nanoTime()}")
+    val jobs, stages, markerJobs, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def inGroup(props: java.util.Properties, g: String) =
+      props != null && props.getProperty("spark.jobGroup.id") == g
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        if (inGroup(e.properties, group)) jobs.add(e.jobId)
+        if (inGroup(e.properties, marker)) markerJobs.add(e.jobId)
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (inGroup(e.properties, group)) stages.add(e.stageInfo.stageId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      CollectingExecutor.clear()
+      sc.setJobGroup(group, "direct load", interruptOnCancel = false)
+      val report =
+        try LoaderJob.runDirect(spark, cfg, target, shards, CollectingExecutor)
+        finally sc.clearJobGroup()
+      assert(report.success == 300 && CollectingExecutor.totalRows("t_maponly") == 300)
+      sc.setJobGroup(marker, "listener barrier", interruptOnCancel = false)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!(markerJobs.asScala.nonEmpty && markerJobs.asScala.forall(ended.contains)) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    assert(markerJobs.asScala.nonEmpty, "listener never saw the marker job")
+    assert(jobs.size == 1 && stages.size == 1,
+      s"direct load ran ${jobs.size} jobs / ${stages.size} stages, want 1 / 1")
+  }
+
+  test("direct load batches never mix shards and stay within batchSize") {
+    val dir = textExport("graft-shardbatch", files = 2, rows = 500)
+    val cfg = Args.parse(Seq("--export-dir", dir.toString, "--table", "t_shardbatch",
+      "--batch-size", "64"))
+    val target = TargetSchema.fromDDL("c0 STRING, c1 STRING", shardingKey = Some("c1"))
+    val shards = ShardSpec(Seq(1, 1, 1))
+    val shardOf = LoaderJob.mapSide(spark, cfg, target, shards)
+      .select("wire_row", "shard").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(shardOf.size == 1000 && shardOf.values.toSet == Set(0, 1, 2))
+    BatchRecorder.batches.clear()
+    val report = LoaderJob.runDirect(spark, cfg, target, shards, BatchRecorder)
+    val batches = BatchRecorder.recorded
+    assert(report.success == 1000 && report.batches == batches.size)
+    batches.foreach { b =>
+      assert(b.size <= 64, s"batch of ${b.size} rows exceeds batchSize")
+      assert(b.map(shardOf).distinct.size == 1, "a batch mixes shards")
+    }
+    assert(batches.flatten.sorted == shardOf.keys.toSeq.sorted,
+      "every input row is sent exactly once")
+  }
+
   test("staged load lands rows in the catalog target atomically") {
     val dir = Files.createTempDirectory("graft-job2")
     Files.writeString(dir.resolve("data.txt"), "1|a\n2|b\n3|\\N\n")

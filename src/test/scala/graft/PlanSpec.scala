@@ -18,13 +18,22 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"unexpected shuffle:\n$p")
   }
 
-  test("shard co-location is exactly one hash exchange") {
-    val df = Sharding.partitionByShard(
-      Sharding.assign(Tables(spark, sf).customer, "c_name", ShardSpec(Seq(1, 2, 1))),
-      ShardSpec(Seq(1, 2, 1)))
-    val p = plan(df)
-    assert("Exchange".r.findAllIn(p).size == 1, s"expected 1 exchange:\n$p")
-    assert(p.contains("hashpartitioning(shard"), s"expected shard partitioning:\n$p")
+  test("shard co-location is exactly one exchange, one shard per partition") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val spec = ShardSpec(Seq(1, 2, 1))
+    val assigned = Sharding.assign(Tables(spark, sf).customer, "c_name", spec)
+    // partition id → the shards found in it
+    def layout(pps: Int): Map[Int, Set[Int]] = {
+      val df = Sharding.partitionByShard(assigned, spec, pps)
+      val p = plan(df)
+      assert("Exchange".r.findAllIn(p).size == 1, s"expected 1 exchange:\n$p")
+      df.select(spark_partition_id(), col("shard")).distinct().collect()
+        .groupBy(_.getInt(0)).map { case (pid, rs) => pid -> rs.map(_.getInt(1)).toSet }
+    }
+    assert(layout(1) == Map(0 -> Set(0), 1 -> Set(1), 2 -> Set(2)),
+      "each shard must own exactly one partition")
+    assert(layout(2) == (0 until 6).map(pid => pid -> Set(pid / 2)).toMap,
+      "with 2 partitions per shard, shard s must fill partitions 2s and 2s+1")
   }
 
   test("q24 carries no window at all: total fans back through a bounded aggregate") {

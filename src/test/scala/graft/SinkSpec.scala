@@ -20,6 +20,15 @@ object ReplicaProbeB extends BatchExecutor {
     rows.addAndGet(batch.size)
 }
 
+/** Records every batch's rows, in send order (singleton for the same
+  * reason as the replica probes).
+  */
+object BatchRecorder extends BatchExecutor {
+  val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+  override def execute(target: String, batch: Seq[String]): Unit = batches.add(batch)
+  def recorded: Seq[Seq[String]] = batches.toArray(Array.empty[Seq[String]]).toSeq
+}
+
 class SinkSpec extends SparkSpec {
 
   private def wireFrame(n: Int) = {
@@ -38,6 +47,27 @@ class SinkSpec extends SparkSpec {
     val sizes = CollectingExecutor.batches.toArray.map(_.asInstanceOf[(String, Int)]._2)
     assert(sizes.forall(_ <= 100))
     report.failIfAnyFailed()
+  }
+
+  test("DirectSink buffers per shard: each shard flushes at batchSize on its own") {
+    import spark.implicits._
+    // one task, rows alternating between two shards: a shared buffer
+    // would send mixed batches; per-shard buffers fill in lockstep and
+    // leave one 50-row leftover each, flushed at task end in shard order
+    val df = (0 until 500).toDF("i")
+      .select(($"i" % 2).as("shard"), concat_ws("-", concat(lit("s"), ($"i" % 2).cast("string")), $"i".cast("string"))
+        .as("wire_row"))
+      .coalesce(1)
+    BatchRecorder.batches.clear()
+    val report = new DirectSink(BatchRecorder, LoaderConfig(batchSize = 100), LoadMetrics(spark))
+      .write(df, "t_shard")
+    assert(report.success == 500 && report.batches == 6 && report.failed == 0)
+    val sent = BatchRecorder.recorded.map { b =>
+      val shards = b.map(_.takeWhile(_ != '-')).distinct
+      assert(shards.size == 1, s"batch mixes shards: $shards")
+      (shards.head, b.size)
+    }
+    assert(sent == Seq("s0" -> 100, "s1" -> 100, "s0" -> 100, "s1" -> 100, "s0" -> 50, "s1" -> 50))
   }
 
   test("DirectSink retries transient failures with backoff and succeeds") {

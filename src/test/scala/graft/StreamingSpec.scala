@@ -328,6 +328,44 @@ class StreamingSpec extends SparkSpec {
       .select("_batch_id").distinct().count() == batches)
   }
 
+  test("microPlan engages on real foreachBatch frames (LogicalRDD with origin stats)") {
+    import graft.streaming.StreamingIndex
+    import java.nio.file.{Files => JFiles}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.LogicalRDD
+    // the micro regime gates on the batch's size estimate; a foreachBatch
+    // frame is a LogicalRDD, whose stats are only useful while Spark
+    // carries the source plan's stats over (else Long.MaxValue, and the
+    // regime would silently never engage outside file-backed frames)
+    val dir = JFiles.createTempDirectory("graft-micro").toString
+    val ckpt = JFiles.createTempDirectory("graft-microck").toString
+    val docs = Tables(spark, sf).documents.select("doc_id", "text").limit(200)
+    docs.coalesce(1).write.mode("overwrite").parquet(dir)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, BigInt, Int, Boolean)]()
+    val q = spark.readStream.schema(docs.schema).parquet(dir).writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        val analyzed = b.queryExecution.analyzed
+        seen.add((analyzed.collectFirst { case r: LogicalRDD => r }.isDefined,
+          analyzed.stats.sizeInBytes, b.rdd.getNumPartitions,
+          StreamingIndex.microPlan(b).queryExecution.executedPlan.outputPartitioning ==
+            SinglePartition))
+        ()
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    q.stop()
+    val batches = seen.toArray(Array.empty[(Boolean, BigInt, Int, Boolean)]).toSeq
+    assert(batches.size == 1, s"expected one batch, saw $batches")
+    val (logicalRdd, size, parts, micro) = batches.head
+    assert(logicalRdd, "foreachBatch frames are LogicalRDD-backed")
+    assert(parts == 1 && size < BigInt(Long.MaxValue),
+      s"a one-file batch must be one split with real stats: $parts partitions, $size bytes")
+    assert(micro, "microPlan must take the micro regime on a small one-split batch")
+  }
+
   test("event-time timeout evicts idle users' session state (stream == batch)") {
     import spark.implicits._
     import java.nio.file.{Files => JFiles, Paths}
