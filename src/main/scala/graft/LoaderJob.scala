@@ -56,7 +56,14 @@ object LoaderJob {
         TransformStage.appendHivePartitions(src, hiveKeys, input_file_name())
       else src
     val excluded = TransformStage.excludeFields(withHive, cfg.excludeFields)
-    val wire = TransformStage.transform(excluded, cfg, target.stringCols)
+    // take the target's names by position, so its string columns and
+    // sharding key resolve (a text source names its fields c<i>); a
+    // frame wider than the target is left to fail `validate`
+    val names = target.schema.fieldNames.take(excluded.columns.length)
+    val named =
+      if (names.length == excluded.columns.length) excluded.toDF(names.toIndexedSeq: _*)
+      else excluded
+    val wire = TransformStage.transform(named, cfg, target.stringCols)
     target.validate(wire.drop("wire_row"))
     val keyCol = target.shardingKey.getOrElse(wire.columns.head)
     Sharding.assign(wire, keyCol, shards)

@@ -103,10 +103,6 @@ object Murmur3 {
   def hash64(s: CharSequence): Long = hashUnencodedChars(s)._1
 }
 
-/** Catalyst expression: murmur3_128(str).asInt() & Int.MaxValue.
-  * Codegen emits a static call, so it stays inside whole-stage codegen
-  * (no UDF serialization, no row-at-a-time iterator break).
-  */
 /** Catalyst expression: murmur3_128(str) h1 as a 64-bit hash — the
   * stable shingle/token hash used by minhash/simhash (cheaper and
   * better-distributed than 32-bit, deterministic across sessions,
@@ -125,6 +121,10 @@ object Murmur3Hash64 {
   def hash64(c: Column): Column = column(Murmur3Hash64(expression(c)))
 }
 
+/** Catalyst expression: murmur3_128(str).asInt() & Int.MaxValue.
+  * Codegen emits a static call, so it stays inside whole-stage codegen
+  * (no UDF serialization, no row-at-a-time iterator break).
+  */
 case class Murmur3ShardCode(child: Expression) extends UnaryExpression {
   override def dataType: DataType = IntegerType
   override def nullSafeEval(v: Any): Any =

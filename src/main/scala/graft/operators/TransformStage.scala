@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.config.LoaderConfig
+import graft.functions.WireBytes
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -21,11 +22,11 @@ object TransformStage {
   /** Literal `\N` — the TSV NULL marker the reference recognizes. */
   val NullMarker = "\\N"
 
-  /** Op #3: tokenize a delimited line, keeping trailing empty fields
-    * (`TextRecordDecoder.java:31-46` splits with limit -1).
+  /** Op #3: tokenize a delimited line on the literal `sep`, keeping
+    * trailing empty fields (`TextRecordDecoder.java:31-46` splits with
+    * limit -1); a byte scan, see [[WireBytes.split]].
     */
-  def tokenize(line: Column, sep: String): Column =
-    split(line, java.util.regex.Pattern.quote(sep), -1)
+  def tokenize(line: Column, sep: String): Column = WireBytes.split(line, sep)
 
   /** Op #5: positional projection — drop 0-based indexes in `excluded`,
     * keep remaining columns in order (`RowRecordDecoderConfigurable.java:65-78`).
@@ -38,26 +39,13 @@ object TransformStage {
   }
 
   /** Op #7: sanitize a non-null value: embedded separator →
-    * `replaceChar`, every backslash → `/`
-    * (`AbstractClickhouseLoaderMapper.java:201`).
-    *
-    * Single-char sep/replacement (the common case) uses `translate` —
-    * one char-map pass instead of two regex passes (~4× cheaper on the
-    * 600k-row wire-format path).
+    * `replaceChar`, then every backslash → `/`, so a backslash
+    * `replaceChar` ends as `/` (`AbstractClickhouseLoaderMapper.java:201`).
+    * One byte scan that returns the value itself when there is nothing
+    * to replace, see [[WireBytes.sanitize]].
     */
-  def sanitize(c: Column, cfg: LoaderConfig): Column = {
-    val sep = cfg.clickhouseFormat.separator
-    if (sep.length == 1 && cfg.replaceChar.length == 1) {
-      // cascade parity: the reference replaces sep first, THEN every
-      // backslash — so a backslash replaceChar itself becomes '/'
-      val effectiveRepl = cfg.replaceChar.replace('\\', '/')
-      translate(c, sep + "\\", effectiveRepl + "/")
-    } else
-      regexp_replace(
-        regexp_replace(c, java.util.regex.Pattern.quote(sep),
-          java.util.regex.Matcher.quoteReplacement(cfg.replaceChar)),
-        "\\\\", "/")
-  }
+  def sanitize(c: Column, cfg: LoaderConfig): Column =
+    WireBytes.sanitize(c, cfg.clickhouseFormat.separator, cfg.replaceChar)
 
   /** Op #6 + #7 fused: the full per-field rule of §1.4. `isStringCol`
     * picks the null replacement exactly like the reference's
@@ -94,9 +82,11 @@ object TransformStage {
     * `AbstractClickhouseLoaderMapper.java:40,658-676`. For partitioned
     * parquet/orc layouts Spark surfaces these natively; this is the
     * text-path equivalent over `input_file_name()` or any path column.
+    * Compiled, the regex runs once per change of path (once per file
+    * over `input_file_name()`), not once per row, see [[WireBytes.hiveValue]].
     */
   def extractHivePartition(path: Column, key: String): Column =
-    regexp_extract(path, java.util.regex.Pattern.quote(key) + "=([0-9a-zA-Z_\\-]+)", 1)
+    WireBytes.hiveValue(path, java.util.regex.Pattern.quote(key) + "=([0-9a-zA-Z_\\-]+)")
 
   /** Op #8 full parity — auto-discovery: the reference walks the input
     * path and appends EVERY `k=v` pair in path order

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.config.{InputFormat, LoaderConfig}
+import graft.operators.TransformStage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -19,7 +20,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
 object Readers {
 
   /** Delimited text → typed-by-position string columns c0..cN.
-    * Reads as raw lines + split (limit -1 keeps trailing empties —
+    * Reads raw lines and splits each on the literal delimiter bytes
+    * ([[TransformStage.tokenize]]: trailing empties kept —
     * `TextRecordDecoder.java:31-46` semantics), NOT the csv reader:
     * the reference does no quoting/escaping, so csv quote handling
     * would silently alter rows.
@@ -28,8 +30,7 @@ object Readers {
       numFields: Option[Int] = None): DataFrame = {
     applySplitConf(spark, cfg)
     val lines = spark.read.text(cfg.exportDir)
-    val sep = java.util.regex.Pattern.quote(cfg.fieldsTerminatedBy)
-    val fields = split(col("value"), sep, -1)
+    val fields = TransformStage.tokenize(col("value"), cfg.fieldsTerminatedBy)
     // column count: explicit (from the catalog — TargetSchema — in a
     // real load) or inferred as the MAX arity over the data. Sampling
     // one arbitrary line would silently truncate wider rows AND make

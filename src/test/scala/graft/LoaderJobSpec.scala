@@ -3,7 +3,7 @@ package graft
 import graft.catalog.TargetSchema
 import graft.cli.Args
 import graft.config.{InputFormat, WireFormat}
-import graft.operators.{ShardSpec, Skew}
+import graft.operators.{Sharding, ShardSpec, Skew}
 import graft.sinks.{CollectingExecutor, PartitionedSink}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -221,6 +221,29 @@ class LoaderJobSpec extends SparkSpec {
     }
     assert(batches.flatten.sorted == shardOf.keys.toSeq.sorted,
       "every input row is sent exactly once")
+  }
+
+  test("a target with its own column names: string \\N gets --null-string " +
+      "and the sharding key resolves") {
+    import spark.implicits._
+    // the reference's production target names, not the source's c<i>
+    val dir = Files.createTempDirectory("graft-named")
+    Files.writeString(dir.resolve("data.txt"),
+      "android|\\N|\\N|d1\nios|7|tom\\x|d2\npc|\\N|\\N|\\N\n")
+    val cfg = Args.parse(Seq("--export-dir", dir.toString, "--table", "t_named",
+      "--null-string", "NS", "--null-non-string", "NN"))
+    val target = TargetSchema.fromDDL("plat STRING, uid BIGINT, name STRING, h_did STRING",
+      shardingKey = Some("h_did"))
+    val shards = ShardSpec(Seq(3, 2, 2, 1))
+    val out = LoaderJob.mapSide(spark, cfg, target, shards)
+    assert(out.columns.toSeq == Seq("plat", "uid", "name", "h_did", "wire_row", "shard"))
+    val rows = out.select("wire_row", "h_did", "shard").collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getInt(2))).toMap
+    assert(rows.keySet == Set("android\tNN\tNS\td1", "ios\t7\ttom/x\td2", "pc\tNN\tNS\tNS"))
+    // the shard comes from h_did, not from the first column
+    val byKey = Sharding.assign(Seq("d1", "d2", "NS").toDF("k"), "k", shards)
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    rows.values.foreach { case (k, shard) => assert(shard == byKey(k), s"shard of $k") }
   }
 
   test("staged load lands rows in the catalog target atomically") {

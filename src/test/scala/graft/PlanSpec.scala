@@ -115,6 +115,33 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("*(1)"), s"transform should be one codegen stage:\n$p")
   }
 
+  test("the direct load plans no regex or translate: byte kernels for split, " +
+      "sanitize and hive values") {
+    import graft.cli.Args
+    import graft.functions.{HiveValue, WireSanitize, WireSplit}
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val base = java.nio.file.Files.createTempDirectory("graft-kernels")
+    val day = base.resolve("dt=2017-01-07/pt=ios")
+    java.nio.file.Files.createDirectories(day)
+    java.nio.file.Files.writeString(day.resolve("f.txt"), "1|a\\b|\\N\n2|c|d\n")
+    val cfg = Args.parse(Seq("--export-dir", s"$base/dt=2017-01-07/pt=*", "--table", "t",
+      "--extract-hive-partitions", "true"))
+    val target = graft.catalog.TargetSchema.fromDDL(
+      "c0 STRING, c1 STRING, c2 STRING, dt STRING, pt STRING", Some("c1"))
+    val executed = graft.LoaderJob.mapSide(spark, cfg, target, ShardSpec(Seq(1, 1)))
+      .queryExecution.executedPlan
+    val exprs = new AdaptiveSparkPlanHelper {}
+      .flatMap(executed)(_.expressions.flatMap(_.collect { case e => e }))
+    val banned = exprs.collect {
+      case e @ (_: StringSplit | _: StringTranslate | _: RegExpReplace | _: RegExpExtract) => e
+    }
+    assert(banned.isEmpty, s"regex/translate on the load path: $banned\n$executed")
+    val kernels = exprs.collect { case e @ (_: WireSplit | _: WireSanitize | _: HiveValue) =>
+      e.getClass.getSimpleName }.toSet
+    assert(kernels == Set("WireSplit", "WireSanitize", "HiveValue"), s"$kernels\n$executed")
+  }
+
   test("q66 decontamination broadcasts the eval side (corpus never shuffles)") {
     val p = plan(graft.queries.Pipeline.queries("q66_decontaminate")(spark, sf))
     assert(p.contains("BroadcastHashJoin"), s"eval side should broadcast:\n$p")
