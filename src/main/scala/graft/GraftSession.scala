@@ -10,6 +10,45 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100).
+    *
+    * graft replays a fixed set of plan shapes — the daily load job,
+    * the relational queries, each stream batch's appliers and probes —
+    * so every repeat should reuse the classes whole-stage codegen
+    * compiled the first time. A 100-entry LRU is smaller than one such
+    * working set, so it thrashed: measured with
+    * `CodegenMetrics.METRIC_COMPILATION_TIME` on one benchmark run
+    * each (4 vCPUs), a 13-query relational mix compiles 208 distinct
+    * classes and recompiled 11.8 of them per query on every pass; a
+    * streaming-index cycle (BM25 + IVF + near-dup apply, one
+    * compaction, one hybrid search) touches 342–366 and recompiled
+    * ~185 per cycle. At 1000 both stay resident and their steady
+    * state compiles nothing.
+    *
+    * Cost per entry: the cache key keeps the full generated source
+    * text (4.4–5.8k chars on average, up to 30k) and the value a loaded
+    * class in its own class loader. Measured on those workloads' caches
+    * (JDK 17, heap and Metaspace freed by emptying the cache and a full
+    * GC): 18–19 KB of heap and 8.5–8.7 KB of Metaspace per entry. A
+    * full cache holds ~19 MB of heap and ~9 MB of Metaspace at that
+    * mix; an entry's cost grows with its source, so a cache of only
+    * the largest classes seen (~6× the mean) would hold several times
+    * that. Not larger: the measured working sets fill a third
+    * of it, and entries stay until evicted, so more entries only hold
+    * classes of plans that do not run again (a JVM serving many
+    * distinct ad-hoc queries should size it to its own repeat set).
+    *
+    * A STATIC conf: Spark reads it once per JVM, when `CodeGenerator`
+    * first initializes. The session must be built before anything
+    * compiles generated code; a JVM that ran codegen first (or built
+    * another session first) keeps that cache size for its lifetime.
+    * Repeated operations must also keep per-call values out of the
+    * generated source ([[graft.functions.CallParam]]), or every call
+    * is a new cache key however large the cache.
+    */
+  val CodegenCacheEntries: Int = 1000
+
   /** Settings rationale:
     * - AQE on: runtime re-planning — coalesces post-shuffle
     *   partitions, converts sort-merge joins to broadcast when the
@@ -52,6 +91,7 @@ object GraftSession {
     SparkSession.builder()
       .master(master)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -661,8 +661,12 @@ object Dedup {
         // delta) skip the band repartition — one sorted task's dynamic
         // partitioning writes the SAME one-file-per-band layout with
         // zero exchanges; anything multi-partition keeps the
-        // repartition so each band still lands as one file
-        (if (br.rdd.getNumPartitions == 1) br else br.repartition($"band"))
+        // repartition so each band still lands as one file. Decided
+        // from the PLANNED partitioning: `br.rdd` would run the
+        // collapse's shuffle stages under AQE, and the write below
+        // would then run them again
+        val single = br.queryExecution.sparkPlan.outputPartitioning.numPartitions == 1
+        (if (single) br else br.repartition($"band"))
           .sortWithinPartitions($"band", $"bucket")
           .write.mode(mode).partitionBy("band").parquet(s"$root/bands")
       },

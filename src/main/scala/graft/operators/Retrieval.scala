@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.CallParam.param
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -268,7 +269,10 @@ object Retrieval {
 
   /** Exact BM25 sum over ALL of a candidate's query terms — the same
     * integer expression [[bm25TopK]] emits, with df joined from the
-    * tiny per-term stats frame.
+    * tiny per-term stats frame. The corpus stats enter as
+    * [[graft.functions.CallParam]]s, not literals: they change with
+    * every append, and as literals they made each probe compile its
+    * scoring stage (two ~700-line classes) anew.
     */
   private def fullScoresWithDf(spark: SparkSession, qpost: DataFrame,
       termStats: DataFrame, qpairsDF: DataFrame, nDocs: Long, avgdl: Long,
@@ -278,9 +282,11 @@ object Retrieval {
       .join(broadcast(qpairsDF), "term")
       .join(broadcast(termStats.select($"term", $"df")), "term")
       .join(cand, Seq("query_id", "doc_id"), "left_semi")
+      .select($"query_id", $"doc_id", $"df", $"tf", $"len",
+        param(nDocs).as("n_docs"), param(avgdl).as("avgdl"))
       .select($"query_id", $"doc_id",
-        expr(s"""((2*${nDocs}L - 2*df + 1) * 22 * tf * ${avgdl}L * ${Scale}L)
-                 div ((2*df + 1) * (10*tf*${avgdl}L + 3*${avgdl}L + 9*len))""")
+        expr(s"""((2*n_docs - 2*df + 1) * 22 * tf * avgdl * ${Scale}L)
+                 div ((2*df + 1) * (10*tf*avgdl + 3*avgdl + 9*len))""")
           .as("term_score"))
       .groupBy($"query_id", $"doc_id")
       .agg(sum($"term_score").as("score_fp"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.CallParam.param
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -62,9 +63,10 @@ private[graft] object BatchLog {
       f.isFile && !n.startsWith(".") && !n.startsWith("_") && !isRowFile(n)
     }
     if (!hasLegacy) return false
+    // the id is a CallParam so the check compiles once, not per batch
     import org.apache.spark.sql.functions.col
     !spark.read.schema("batch_id LONG, applied BOOLEAN")
-      .parquet(logPath).filter(col("batch_id") === batchId).isEmpty
+      .parquet(logPath).filter(col("batch_id") === param(batchId)).isEmpty
   }
 
   /** Atomic driver-side append of one log row (`b<id>.parquet`). A

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.CallParam.param
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -105,8 +106,9 @@ object StreamingIndex {
     val spark = batch.sparkSession
     import spark.implicits._
     val logTable = s"$db.batchlog"
+    // the id is a CallParam so the check compiles once, not per batch
     if (spark.catalog.tableExists(logTable) &&
-        !spark.table(logTable).filter($"batch_id" === batchId).isEmpty) {
+        !spark.table(logTable).filter($"batch_id" === param(batchId)).isEmpty) {
       return false
     }
     // cheap emptiness probe; an empty trigger still logs its id so a

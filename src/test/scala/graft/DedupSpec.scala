@@ -578,4 +578,62 @@ class DedupSpec extends SparkSpec {
       rm(new java.io.File(dir))
     }
   }
+
+  test("near-dup append under AQE: a multi-partition delta runs its lineage once per sub-table") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val rows = docs.select("doc_id", "text").collect().toSeq
+    val src = spark.sparkContext.parallelize(rows, 4)
+    val delta = spark.createDataFrame(src, StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-ndaqe").toString
+    // a stage that runs the delta's lineage has the source RDD among
+    // its narrow ancestors
+    val (group, marker) = (s"ndaqe-${System.nanoTime()}", s"marker-${System.nanoTime()}")
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerJobs, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def inGroup(props: java.util.Properties, g: String) =
+      props != null && props.getProperty("spark.jobGroup.id") == g
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inGroup(e.properties, marker)) markerJobs.add(e.jobId)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (inGroup(e.properties, group) && e.stageInfo.rddInfos.exists(_.id == src.id))
+          runs.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val sc = spark.sparkContext
+    val aqe = spark.conf.getOption("spark.sql.adaptive.enabled")
+    sc.addSparkListener(listener)
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      sc.setJobGroup(group, "near-dup append", interruptOnCancel = false)
+      try Dedup.appendNearDupIndex(spark, delta, "doc_id", "text", dir)
+      finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener barrier", interruptOnCancel = false)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!(markerJobs.asScala.nonEmpty && markerJobs.asScala.forall(ended.contains)) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+    } finally {
+      sc.removeSparkListener(listener)
+      aqe match {
+        case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
+        case None => spark.conf.unset("spark.sql.adaptive.enabled")
+      }
+    }
+    assert(markerJobs.asScala.nonEmpty, "listener never saw the marker job")
+    // bands, sets and docs each read the delta once
+    assert(runs.get == 3, s"the delta's lineage ran ${runs.get} times, want 3")
+    // each band still lands as one file
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bandFiles = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/bands"))
+      .filter(_.isDirectory)
+      .map(d => fs.listStatus(d.getPath).count(_.getPath.getName.endsWith(".parquet")))
+    assert(bandFiles.length == 32 && bandFiles.forall(_ == 1), bandFiles.toSeq)
+  }
 }

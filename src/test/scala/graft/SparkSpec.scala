@@ -10,6 +10,8 @@ object SparkSpec {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      // static: the first session of the test JVM fixes it for all suites
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
