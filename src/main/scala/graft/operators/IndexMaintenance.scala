@@ -49,15 +49,10 @@ private[graft] object IndexMaintenance {
           "swap at a clean crash point")
 
   /** The batch ids with a batchlog row in `dir` (empty when the dir
-    * has no log — a batch-API-only index).
+    * has no log — a batch-API-only index), listed on the driver.
     */
-  def loggedBatchIds(spark: SparkSession, dir: String): Set[Long] = {
-    val p = new Path(s"$dir/batchlog")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else spark.read.parquet(p.toString)
-      .select("batch_id").collect().map(_.getLong(0)).toSet
-  }
+  def loggedBatchIds(spark: SparkSession, dir: String): Set[Long] =
+    graft.streaming.BatchLog.ids(spark, s"$dir/batchlog")
 
   private val BatchFile = "^b(\\d+)_.*".r
 

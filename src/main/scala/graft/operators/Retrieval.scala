@@ -131,10 +131,7 @@ object Retrieval {
       .join(broadcast(qdf), "term")
       .crossJoin(broadcast(stats))
       .filter($"df" * 1000000L <= lit(dfCutoff) * $"n_docs")
-      .select($"query_id", $"doc_id",
-        expr(s"""((2*n_docs - 2*df + 1) * 22 * tf * avgdl * ${Scale}L)
-                 div ((2*df + 1) * (10*tf*avgdl + 3*avgdl + 9*len))""")
-          .as("term_score"))
+      .select($"query_id", $"doc_id", termScore.as("term_score"))
       .groupBy($"query_id", $"doc_id")
       .agg(sum($"term_score").as("score_fp"))
       .transform(topKByScore(k, $"score_fp", $"doc_id", $"query_id"))
@@ -168,10 +165,15 @@ object Retrieval {
     *
     * Scale shape: the corpus is tokenized ONCE (query-term postings
     * are checkpointed and reused by all three rounds); candidate
-    * generation — the shuffle that dominates at 100 TB — skips the
-    * stopword posting lists entirely, which is the point of WAND. The
-    * θ round and the per-term stats are k- and vocabulary-of-the-query
-    * bounded driver probes, amortized over the whole query batch.
+    * generation skips the stopword posting lists entirely. The
+    * scoring semi-join on (query_id, doc_id) still exchanges EVERY
+    * query-term posting, stopwords included, before the candidate
+    * filter applies (it plans as a sort-merge join; AQE turns it into
+    * a broadcast only after both shuffle stages are written), so the
+    * pruning saves only the candidate side, and the θ round pays that
+    * exchange a second time. The θ round and the per-term stats are
+    * k- and vocabulary-of-the-query bounded driver probes, amortized
+    * over the whole query batch.
     *
     * @param onPrune diagnostic callback `(query_id, droppedTerms)`,
     *                invoked per query (empty seq when nothing pruned).
@@ -269,28 +271,40 @@ object Retrieval {
 
   /** Exact BM25 sum over ALL of a candidate's query terms — the same
     * integer expression [[bm25TopK]] emits, with df joined from the
-    * tiny per-term stats frame. The corpus stats enter as
-    * [[graft.functions.CallParam]]s, not literals: they change with
-    * every append, and as literals they made each probe compile its
-    * scoring stage (two ~700-line classes) anew.
+    * tiny per-term stats frame.
     */
   private def fullScoresWithDf(spark: SparkSession, qpost: DataFrame,
       termStats: DataFrame, qpairsDF: DataFrame, nDocs: Long, avgdl: Long,
       cand: DataFrame): DataFrame = {
     import spark.implicits._
-    qpost
+    scoreSums(qpost
       .join(broadcast(qpairsDF), "term")
       .join(broadcast(termStats.select($"term", $"df")), "term")
-      .join(cand, Seq("query_id", "doc_id"), "left_semi")
-      .select($"query_id", $"doc_id", $"df", $"tf", $"len",
-        param(nDocs).as("n_docs"), param(avgdl).as("avgdl"))
-      .select($"query_id", $"doc_id",
-        expr(s"""((2*n_docs - 2*df + 1) * 22 * tf * avgdl * ${Scale}L)
-                 div ((2*df + 1) * (10*tf*avgdl + 3*avgdl + 9*len))""")
-          .as("term_score"))
-      .groupBy($"query_id", $"doc_id")
-      .agg(sum($"term_score").as("score_fp"))
+      .join(cand, Seq("query_id", "doc_id"), "left_semi"), nDocs, avgdl)
   }
+
+  /** The per-term BM25 weight `num·Scale div den` of [[bm25TopK]] over
+    * columns named `n_docs`, `avgdl`, `df`, `tf` and `len`: the one
+    * integer expression every BM25 scorer emits.
+    */
+  private def termScore: Column =
+    expr(s"""((2*n_docs - 2*df + 1) * 22 * tf * avgdl * ${Scale}L)
+             div ((2*df + 1) * (10*tf*avgdl + 3*avgdl + 9*len))""")
+
+  /** Per-(query, doc) BM25 score `score_fp` of scored postings
+    * `(query_id, doc_id, df, tf, len)`. The corpus stats enter as
+    * [[graft.functions.CallParam]]s, not literals: they change with
+    * every append, and as literals they made each probe compile its
+    * scoring stage (two ~700-line classes) anew.
+    */
+  private def scoreSums(scored: DataFrame, nDocs: Long,
+      avgdl: Long): DataFrame =
+    scored
+      .select(col("query_id"), col("doc_id"), col("df"), col("tf"),
+        col("len"), param(nDocs).as("n_docs"), param(avgdl).as("avgdl"))
+      .select(col("query_id"), col("doc_id"), termScore.as("term_score"))
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(sum(col("term_score")).as("score_fp"))
 
   /** Bucket-count policy for [[buildBm25Index]]: one bucket per
     * ~`docsPerBucket` documents, rounded UP to a power of two (bucket
@@ -361,8 +375,9 @@ object Retrieval {
         .bucketBy(nBuckets, "term").sortBy("term")
         .saveAsTable(s"$db.postings"))
     // block-max metadata rides the df table: each term's best-case
-    // posting (max tf, min len) bounds its max achievable score, the
-    // static-WAND pruning input the probe reads for free
+    // posting (max tf, min len) bounds its max achievable score. The
+    // one-pass probe does not read it; it is still written so that
+    // appends to existing indexes keep one dfreq schema
     timedPhase("bm25.build.dfreq")(
       spark.table(s"$db.postings")
         .groupBy($"term").agg(count(lit(1)).as("df"),
@@ -407,8 +422,10 @@ object Retrieval {
       db: String): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // the index owns its bucket layout: read it back, never re-derive
-    val buckets = indexBuckets(spark, db)
+    // one read of the 1-row stats table: the bucket layout (the index
+    // owns it: read it back, never re-derive) and the running totals
+    val Array(old) = spark.table(s"$db.stats").collect()
+    val buckets = old.getAs[Int]("buckets")
     // the delta's (n_docs, Σlen) ride the postings write as an
     // OBSERVED metric on the pre-explode frame — exact integer
     // aggregates collected by the listener for free, no extra job
@@ -440,7 +457,6 @@ object Retrieval {
           .bucketBy(buckets, "term").sortBy("term")
           .saveAsTable(s"$db.dfreq"))
       timedPhase("bm25.append.stats") {
-        val Array(old) = spark.table(s"$db.stats").collect()
         val m = obs.get // fired during the postings write
         val (n, t) = (old.getAs[Long]("n_docs") + m("n").asInstanceOf[Long],
           old.getAs[Long]("tot_len") + m("t").asInstanceOf[Long])
@@ -474,33 +490,50 @@ object Retrieval {
 
   /** BM25 probe over a [[buildBm25Index]] index: identical scoring
     * and output contract to [[bm25TopK]], but the corpus is never
-    * touched — the probe reads the bucketed postings/df tables, and
-    * the persisted block-max metadata drives the static-WAND
-    * candidate pruning of [[bm25TopKWand]] (exact; this is where WAND
-    * belongs in production — the bounds are precomputed at build
-    * time, so pruning costs the probe nothing extra).
+    * touched — the probe reads the bucketed postings/df tables.
+    *
+    * One scoring pass: query-term postings ⋈ broadcast (query, term)
+    * pairs ⋈ broadcast folded df → per-term score → sum per
+    * (query, doc) → [[topKByScore]]. The only exchange before the
+    * ranking carries partial sums, so it moves at most the rows a
+    * candidate semi-join on (query_id, doc_id) would, and it runs
+    * once. The probe does no WAND pruning ([[bm25TopKWand]] does,
+    * corpus-side): pruning narrows only the candidate side, and the
+    * scoring still exchanges every query-term posting, so a θ round
+    * here would run that exchange twice and save nothing. Ties still break
+    * doc_id-ascending, so the output equals [[bm25TopK]]'s. `dfreq`
+    * still carries the block-max columns (`max_tf`, `min_len`),
+    * which the probe does not read, so appends to existing indexes
+    * keep one schema.
+    *
+    * Jobs: the 1-row stats read, the df broadcast, then the scoring
+    * and ranking stages — six in all under AQE (RetrievalSpec counts
+    * them).
     */
   def bm25TopKIndexed(spark: SparkSession, db: String,
       queries: Seq[(Long, String)], k: Int): DataFrame = {
     import spark.implicits._
-    val allTerms = queries.flatMap(_._2.split(" ")).filter(_.nonEmpty).distinct
+    val qpairs = queries.flatMap { case (qid, text) =>
+      text.split(" ").filter(_.nonEmpty).distinct.map(qid -> _)
+    }
     // the query-term restriction is an IN-list FILTER, not a semi-join:
     // the literal list reaches the scan, so Spark prunes whole buckets
     // (SelectedBucketsCount) and pushes the predicate into parquet
-    // row-group skipping on the term-sorted files — the probe's repeated
-    // passes (θ round, final scoring) each touch only query-term
-    // buckets instead of rescanning the corpus-sized table
-    val qfilter = col("term").isin(allTerms: _*)
-    val qpost = spark.table(s"$db.postings").filter(qfilter)
+    // row-group skipping on the term-sorted files
+    val qfilter = col("term").isin(qpairs.map(_._2).distinct: _*)
     // fold append segments per term (semigroup merge; exchange-free —
     // dfreq is bucketed by term). One row per term on a compacted or
     // never-appended index, so the fold is a no-op there.
-    val termStats = spark.table(s"$db.dfreq").filter(qfilter)
-      .groupBy($"term").agg(sum($"df").as("df"),
-        max($"max_tf").as("max_tf"), min($"min_len").as("min_len"))
-      .select($"term", $"df", $"max_tf", $"min_len")
-    wandPlan(spark, qpost, termStats, spark.table(s"$db.stats"),
-      queries, k, (_, _) => ())
+    val termDf = spark.table(s"$db.dfreq").filter(qfilter)
+      .groupBy($"term").agg(sum($"df").as("df"))
+    val Array(st) = spark.table(s"$db.stats").collect()
+    scoreSums(spark.table(s"$db.postings").filter(qfilter)
+        .join(broadcast(qpairs.toDF("query_id", "term")), "term")
+        .join(broadcast(termDf), "term"),
+        st.getAs[Long]("n_docs"), st.getAs[Long]("avgdl"))
+      .transform(topKByScore(k, $"score_fp", $"doc_id", $"query_id"))
+      .select($"query_id", $"rank", $"doc_id",
+        $"score".cast("long").as("score_fp"))
   }
 
   /** Feature-hashing (hashing-trick) vectorizer bucket for a token:

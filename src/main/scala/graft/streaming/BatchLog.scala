@@ -27,12 +27,13 @@ import org.apache.spark.sql.SparkSession
   *    simulate crashes).
   *
   * Readers are unchanged: the row files are ordinary parquet, so
-  * `spark.read.parquet(dir/batchlog)` (loggedBatchIds,
-  * resolveBuiltMarker, the gates' oracle re-derivations, DuckDB)
-  * sees exactly the rows it always saw. Schema matches the writers
-  * it replaced: `batch_id LONG`, plus `applied BOOLEAN` only for the
-  * appliers that record it (absent column reads null — the legacy
-  * distinction resolveBuiltMarker relies on is preserved).
+  * `spark.read.parquet(dir/batchlog)` (resolveBuiltMarker, the gates'
+  * oracle re-derivations, DuckDB) sees exactly the rows it always
+  * saw; [[ids]] lists the ids from the row-file names instead.
+  * Schema matches the writers it replaced: `batch_id LONG`, plus
+  * `applied BOOLEAN` only for the appliers that record it (absent
+  * column reads null — the legacy distinction resolveBuiltMarker
+  * relies on is preserved).
   */
 private[graft] object BatchLog {
   private def rowFile(batchId: Long) = s"b$batchId.parquet"
@@ -50,24 +51,44 @@ private[graft] object BatchLog {
     val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dirP)) return false
     if (fs.exists(new Path(dirP, rowFile(batchId)))) return true
-    // legacy rows: present only in dirs written by the pre-r16
-    // appliers or rewritten whole by a test harness — fall back to a
-    // Spark read whenever ANY data file that is not one of ours
-    // (b<id>.parquet / _SUCCESS-style markers / dotfiles) exists.
-    // Keying on a writer-specific name like part-* would silently
-    // double-apply a batch logged by a harness that coalesces or
-    // renames log files; the fallback direction is the safe one (it
-    // reads row files too, just slower).
-    val hasLegacy = fs.listStatus(dirP).exists { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith(".") && !n.startsWith("_") && !isRowFile(n)
-    }
-    if (!hasLegacy) return false
+    if (!hasLegacy(fs.listStatus(dirP))) return false
     // the id is a CallParam so the check compiles once, not per batch
     import org.apache.spark.sql.functions.col
     !spark.read.schema("batch_id LONG, applied BOOLEAN")
       .parquet(logPath).filter(col("batch_id") === param(batchId)).isEmpty
   }
+
+  /** Every recorded batch id (empty when the dir does not exist): the
+    * row-file names, listed on the driver, with the same legacy
+    * fallback to a Spark read of the whole dir as [[contains]].
+    */
+  def ids(spark: SparkSession, logPath: String): Set[Long] = {
+    val dirP = new Path(logPath)
+    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dirP)) return Set.empty
+    val files = fs.listStatus(dirP)
+    if (hasLegacy(files))
+      spark.read.schema("batch_id LONG").parquet(logPath)
+        .collect().map(_.getLong(0)).toSet
+    else files.iterator.map(_.getPath.getName).filter(isRowFile)
+      .map(_.stripPrefix("b").stripSuffix(".parquet").toLong).toSet
+  }
+
+  /** Legacy rows: present only in dirs written by the pre-r16
+    * appliers (or the BM25 applier's old catalog table) or rewritten
+    * whole by a test harness — the readers fall back to a Spark read
+    * whenever ANY data file that is not one of ours (b<id>.parquet /
+    * _SUCCESS-style markers / dotfiles) exists. Keying on a
+    * writer-specific name like part-* would silently double-apply a
+    * batch logged by a harness that coalesces or renames log files;
+    * the fallback direction is the safe one (it reads row files too,
+    * just slower).
+    */
+  private def hasLegacy(files: Array[org.apache.hadoop.fs.FileStatus]): Boolean =
+    files.exists { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith(".") && !n.startsWith("_") && !isRowFile(n)
+    }
 
   /** Atomic driver-side append of one log row (`b<id>.parquet`). A
     * re-run for an id whose row already exists is a no-op — the row

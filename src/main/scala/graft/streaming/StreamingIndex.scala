@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.functions.CallParam.param
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,8 +16,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * action and the checkpoint commit), so the sink is made IDEMPOTENT
   * by batch id — the standard idempotent-foreachBatch pattern from
   * the Structured Streaming guide. Applied batch ids are recorded in
-  * a `batchlog` table inside the index database; a re-delivered id
-  * is a no-op. The marker is written AFTER the index writes commit.
+  * a driver-side [[BatchLog]] (one parquet row file per id, no Spark
+  * job): `dir/batchlog` for the directory-backed indexes, and
+  * `<database location>/batchlog` for BM25; a re-delivered id is a
+  * no-op. The marker is written AFTER the index writes commit.
   *
   * The partial-commit window (crash between the index append and the
   * marker write → replay re-appends → duplicates) is CLOSED for the
@@ -35,8 +36,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * id matches the marker knows its build already committed and only
   * re-writes the batchlog, while a replay finding NO marker re-runs
   * the all-overwrite build, which converges over any partial output.
-  * For the Hive-table BM25
-  * index the window remains open-but-documented: its three tables
+  * For the BM25 index the window remains OPEN: its batchlog is the
+  * shared driver-side one, but its three catalog tables
   * (bucketed postings/dfreq + read-modify-write stats) have no
   * per-batch file identity to sweep, and closing it means a staged
   * table swap per batch — the vocabulary-sized rewrite
@@ -100,17 +101,21 @@ object StreamingIndex {
     * First-ever batch builds the index; later ones append. Returns
     * true when the batch was applied, false when the id was already
     * in the batchlog (re-delivery) or the batch was empty.
+    *
+    * The batchlog is the appliers' shared driver-side [[BatchLog]] at
+    * `<database location>/batchlog`: the directory the managed
+    * `batchlog` table of earlier versions used, so ids logged as
+    * that table's rows are still found (BatchLog's legacy fallback).
+    * It is no catalog table, and `DROP DATABASE … CASCADE` removes it
+    * with the database's location.
     */
   def applyBm25Batch(batch: DataFrame, idCol: String, textCol: String,
       db: String, batchId: Long, buckets: Int = 0): Boolean = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val logTable = s"$db.batchlog"
-    // the id is a CallParam so the check compiles once, not per batch
-    if (spark.catalog.tableExists(logTable) &&
-        !spark.table(logTable).filter($"batch_id" === param(batchId)).isEmpty) {
-      return false
-    }
+    val logPath = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(spark.catalog.getDatabase(db).locationUri),
+      "batchlog").toString
+    if (BatchLog.contains(spark, logPath, batchId)) return false
     // cheap emptiness probe; an empty trigger still logs its id so a
     // re-delivered empty batch stays a no-op
     val mb = microPlan(batch)
@@ -126,7 +131,7 @@ object StreamingIndex {
             mb, idCol, textCol, db, buckets)
         true
       }
-    Seq(batchId).toDF("batch_id").write.mode("append").saveAsTable(logTable)
+    BatchLog.append(spark, logPath, batchId)
     applied
   }
 

@@ -67,6 +67,21 @@ class BatchLogSpec extends SparkSpec {
     assert(!BatchLog.contains(spark, log, 12L))
   }
 
+  test("ids: listed from row-file names, with the Spark-read fallback on mixed dirs") {
+    import spark.implicits._
+    val log = freshLog()
+    assert(BatchLog.ids(spark, log).isEmpty, "a missing dir has no ids")
+    Seq(0L, 2L, 9L).foreach(BatchLog.append(spark, log, _))
+    BatchLog.append(spark, log, 4L, applied = Some(false))
+    assert(BatchLog.ids(spark, log) == Set(0L, 2L, 4L, 9L))
+    // mixed: legacy part-* rows next to the row files
+    Seq(5L, 6L).toDF("batch_id").write.mode("append").parquet(log)
+    assert(new java.io.File(log).list().exists(_.startsWith("part-")))
+    assert(BatchLog.ids(spark, log) == Set(0L, 2L, 4L, 5L, 6L, 9L))
+    assert(graft.operators.IndexMaintenance.loggedBatchIds(spark,
+      new java.io.File(log).getParent) == Set(0L, 2L, 4L, 5L, 6L, 9L))
+  }
+
   test("publish is atomic: no temp files survive an append") {
     val log = freshLog()
     BatchLog.append(spark, log, 1L)

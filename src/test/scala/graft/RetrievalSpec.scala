@@ -357,6 +357,84 @@ class RetrievalSpec extends SparkSpec {
     }
   }
 
+  test("indexed probe scores in one pass: equals bm25TopK on an appended index with stopword queries, in six jobs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import scala.jdk.CollectionConverters._
+    val docs = Tables(spark, sf).documents
+    // stopword-heavy: "the a of" style terms post in most documents,
+    // mixed with rarer terms and one absent from the corpus
+    val qs = Seq(1L -> "the a of", 2L -> "the spark of window",
+      3L -> "a dup the scan join", 4L -> "zzz_absent_term the", 5L -> "of of a")
+    val db = "bm25idx_onepass"
+    val loc = java.nio.file.Files.createTempDirectory("graft-bm25idx-onepass").toString
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    spark.sql(s"CREATE DATABASE $db LOCATION '$loc'")
+    try {
+      Retrieval.buildBm25Index(docs.filter($"doc_id" % 3 === 0), "doc_id", "text", db)
+      Retrieval.appendToBm25Index(docs.filter($"doc_id" % 3 === 1), "doc_id", "text", db)
+      Retrieval.appendToBm25Index(docs.filter($"doc_id" % 3 === 2), "doc_id", "text", db)
+      val segmented = spark.table(s"$db.dfreq").groupBy("term").count()
+        .filter($"count" >= 3).count()
+      assert(segmented > 0, "dfreq should hold several segments per term")
+      // jobs of the call (its eager stats read) and of the collect;
+      // listener events arrive in order, so once the marker job's end
+      // is seen every event of the probe has been too
+      val (group, marker) = (s"onepass-${System.nanoTime()}", s"marker-${System.nanoTime()}")
+      val jobs, markerJobs, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      def inGroup(props: java.util.Properties, g: String) =
+        props != null && props.getProperty("spark.jobGroup.id") == g
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          if (inGroup(e.properties, group)) jobs.add(e.jobId)
+          if (inGroup(e.properties, marker)) markerJobs.add(e.jobId)
+        }
+        override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      val (probe, got) = try {
+        sc.setJobGroup(group, "bm25 probe", interruptOnCancel = false)
+        val (p, rows) = try {
+          val p = Retrieval.bm25TopKIndexed(spark, db, qs, k = 10)
+          (p, p.collect())
+        } finally sc.clearJobGroup()
+        sc.setJobGroup(marker, "listener barrier", interruptOnCancel = false)
+        try spark.range(1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!(markerJobs.asScala.nonEmpty && markerJobs.asScala.forall(ended.contains)) &&
+            System.nanoTime() < deadline) Thread.sleep(10)
+        (p, rows)
+      } finally sc.removeSparkListener(listener)
+      val want = Retrieval.bm25TopK(docs, "doc_id", "text", qs, k = 10).collect()
+      assert(got.toSet == want.toSet && got.length == want.length,
+        s"probe diverges from bm25TopK: ${got.toSet.diff(want.toSet).take(3)}")
+      assert(got.map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L))
+      // the executed (final adaptive) plan: broadcast joins only, one
+      // shuffle for the (query, doc) sums and one for the ranking
+      object Plan extends AdaptiveSparkPlanHelper
+      val plan = probe.queryExecution.executedPlan
+      val semi = Plan.collect(plan) {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
+      }
+      assert(semi.isEmpty && !plan.toString.contains("LeftSemi"),
+        s"the probe must not semi-join:\n$plan")
+      val shuffles = Plan.collect(plan) { case e: ShuffleExchangeLike => e }
+      val broadcasts = Plan.collect(plan) { case e: BroadcastExchangeLike => e }
+      assert(shuffles.size == 2 && broadcasts.size == 2,
+        s"want two shuffle and two broadcast exchanges, got ${shuffles.size} / ${broadcasts.size}:\n$plan")
+      assert(Plan.collect(plan) { case j: BroadcastHashJoinExec => j }.size == 2, s"$plan")
+      assert(markerJobs.asScala.nonEmpty, "listener never saw the marker job")
+      assert(jobs.size <= 6, s"the probe ran ${jobs.size} jobs, want <= 6")
+    } finally {
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    }
+  }
+
   test("rrf fusion: doc in both lists beats single-list docs; ties break by id") {
     import spark.implicits._
     val a = Seq((1L, 1L, 10L), (1L, 2L, 11L)).toDF("query_id", "rank", "doc_id")

@@ -1523,7 +1523,7 @@ class StreamingSpec extends SparkSpec {
       val q = StreamingIndex.bm25IndexSink(stream, "doc_id", "text",
         "bmstr", ckpt)
       q.processAllAvailable(); q.stop()
-      val applied = spark.table("bmstr.batchlog").count()
+      val applied = spark.read.parquet(s"$whS/batchlog").count()
       assert(applied >= 2, s"want multiple applied batches, got $applied")
       Retrieval.buildBm25Index(docs, "doc_id", "text", "bmref")
       val want = probe("bmref")
@@ -1540,6 +1540,42 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+
+  test("BM25 batchlog: driver-side at the database location, honours the old table form, and starts over after a drop") {
+    import graft.streaming.StreamingIndex
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles, Paths}
+    val docs = Tables(spark, sf).documents.select("doc_id", "text")
+    def applyB(db: String, id: Long) = StreamingIndex.applyBm25Batch(
+      docs.filter($"doc_id" % 2 === id % 2), "doc_id", "text", db, id)
+    val (db, old) = ("bmlog", "bmlog_old")
+    val (loc, oldLoc) = (JFiles.createTempDirectory("graft-bmlog").toString,
+      JFiles.createTempDirectory("graft-bmlog-old").toString)
+    Seq(db, old).foreach(d => spark.sql(s"DROP DATABASE IF EXISTS $d CASCADE"))
+    try {
+      spark.sql(s"CREATE DATABASE $db LOCATION '$loc'")
+      assert(applyB(db, 0))
+      assert(!applyB(db, 0), "a re-delivered id must be a no-op")
+      assert(JFiles.exists(Paths.get(loc, "batchlog", "b0.parquet")))
+      assert(!spark.catalog.tableExists(s"$db.batchlog"), "the batchlog is no catalog table")
+      // a database whose batchlog the old applier wrote as a managed
+      // table (part-* rows in <location>/batchlog)
+      spark.sql(s"CREATE DATABASE $old LOCATION '$oldLoc'")
+      Seq(0L).toDF("batch_id").write.mode("append").saveAsTable(s"$old.batchlog")
+      assert(!applyB(old, 0), "an id logged by the old table form must be a no-op")
+      assert(!spark.catalog.tableExists(s"$old.stats"))
+      assert(applyB(old, 1))
+      assert(graft.streaming.BatchLog.ids(spark, s"$oldLoc/batchlog") == Set(0L, 1L))
+      // the drop takes the whole location, batchlog included, so a
+      // re-created database applies batch 0 again
+      spark.sql(s"DROP DATABASE $db CASCADE")
+      assert(!JFiles.exists(Paths.get(loc, "batchlog")))
+      spark.sql(s"CREATE DATABASE $db LOCATION '$loc'")
+      assert(applyB(db, 0), "batch 0 must apply to a re-created database")
+    } finally {
+      Seq(db, old).foreach(d => spark.sql(s"DROP DATABASE IF EXISTS $d CASCADE"))
+    }
+  }
 
   test("first-batch build replay: crash between build and batchlog marker does not duplicate (SQ8/PQ/IVF)") {
     import graft.operators.{Pq, Similarity}
