@@ -3,10 +3,13 @@ package graft
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
-/** Recommended session construction for the engine, encoding the
-  * settings that matter at 100 TB (and their local[32] stand-ins).
-  * Verify/Bench follow the driver contract's own builders; production
-  * jobs should start here.
+/** The engine's one session definition, encoding the settings that
+  * matter at 100 TB (and their local[32] stand-ins). Every entry point
+  * builds its session with [[local]] and varies only the core count
+  * (the heap is the launching JVM's `-Xmx`): Verify, Bench, the test
+  * suite (`SparkSpec`) and the tool mains, so the verified, tested and
+  * timed plans are one plan. The benchmark harness calls [[builder]]
+  * directly; production jobs should start there too.
   */
 object GraftSession {
 
@@ -48,6 +51,9 @@ object GraftSession {
     * is a new cache key however large the cache.
     */
   val CodegenCacheEntries: Int = 1000
+
+  /** `spark.sql.files.maxPartitionBytes` (rationale at [[builder]]). */
+  val MaxPartitionBytes: Long = 256L * 1024 * 1024
 
   /** Settings rationale:
     * - AQE on: runtime re-planning — coalesces post-shuffle
@@ -96,12 +102,16 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
+      .config("spark.sql.files.maxPartitionBytes", MaxPartitionBytes.toString)
       .config("spark.sql.files.openCostInBytes", (4L * 1024 * 1024).toString)
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .withExtensions(new GraftExtensions)
 
+  /** The session of every entry point: [[builder]] on `local[cores]`
+    * with the UI off and WARN logging. Returns the JVM's existing
+    * session if one is active, as `getOrCreate` does.
+    */
   def local(cores: Int = 32): SparkSession = {
     val s = builder(s"local[$cores]", cores)
       .config("spark.ui.enabled", "false")

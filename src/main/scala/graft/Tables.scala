@@ -111,18 +111,8 @@ object Tables {
   /** Bytes below which a 1-split scan is left alone. A small table
     * serializes at most a few hundred ms of map work, while the added
     * round-robin exchange costs a whole extra job per query.
-    * Env-overridable for A/B runs.
     */
-  private val SpreadMinBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_MIN_BYTES")
-      .flatMap(v => scala.util.Try(v.toLong).toOption.orElse {
-        // a malformed override must not surface as an opaque
-        // ExceptionInInitializerError on first use of object Tables
-        System.err.println(
-          s"[tables] ignoring malformed SPARK_GRAFT_SPREAD_MIN_BYTES='$v'")
-        None
-      })
-      .getOrElse(4194304L)
+  private val SpreadMinBytes: Long = 4L * 1024 * 1024
 
   /** Spread a scan that cannot fill the machine, for callers about to
     * run a HEAVY map-side pass over it. The harness parquet layout is

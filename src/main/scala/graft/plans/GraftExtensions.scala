@@ -1,14 +1,12 @@
 package graft.plans
 
 import graft.functions._
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.graft.Bridge
 
 /** SparkSessionExtensions entry point: exposes the engine's custom
-  * Catalyst expressions to SQL. Install at session build time
-  * (`.withExtensions(new GraftExtensions)`) or on a live session via
-  * [[GraftExtensions.register]].
+  * Catalyst expressions to SQL. Installed at session build time
+  * (`.withExtensions(new GraftExtensions)` in [[graft.GraftSession]]).
   *
   * SQL surface:
   *   graft_shard_code(s)        — murmur3_128(s).asInt & MaxInt (op #12)
@@ -64,8 +62,4 @@ object GraftExtensions {
       BloomMightContain(es.head, es(1), intArg(es(2), "numHashes"))),
     "graft_cms_estimate" -> (es =>
       CountMinEstimate(es.head, es(1), intArg(es(2), "depth"))))
-
-  /** Register on an already-built session (tests, driver sessions). */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) => Bridge.registerFunction(spark, name, b) }
 }

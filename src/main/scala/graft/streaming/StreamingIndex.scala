@@ -56,16 +56,9 @@ object StreamingIndex {
   /** Bytes above which [[microPlan]] leaves a batch alone (the
     * Tables.spread bound, one level up): past this size a single
     * split carries enough rows that parallel aggregation can pay for
-    * its exchanges. Env-overridable for A/B runs.
+    * its exchanges.
     */
-  private val MicroBatchMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_MICROBATCH_MAX_BYTES")
-      .flatMap(v => scala.util.Try(v.toLong).toOption.orElse {
-        System.err.println(
-          s"[streaming] ignoring malformed SPARK_GRAFT_MICROBATCH_MAX_BYTES='$v'")
-        None
-      })
-      .getOrElse(33554432L) // 32 MiB
+  private val MicroBatchMaxBytes: Long = 32L * 1024 * 1024
 
   /** The micro-batch PLAN regime (the job-floor fix the r17 verdict
     * ranked first): a batch that arrives as ONE scan split reports

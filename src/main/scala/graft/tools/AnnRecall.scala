@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Prints the actual ANN recall values behind q36/q42's bound flags at
@@ -11,11 +10,7 @@ import org.apache.spark.sql.functions._
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
     val corpus = Similarity.prepare(Tables(spark, dir).embeddings, "vec_id", "embedding").cache()
     val queries = corpus.filter(col("vid") < 500)
     val truth = Similarity.bruteForceTopK(queries, corpus, 5).cache()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Phase attribution for the composed-dashboard GATES (q215/q222):
   * times each of the gate's four [[graft.streaming.StreamingIndex
@@ -14,19 +14,7 @@ object DashGateProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val passes = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default matches GraftSession; env override exists ONLY for
-      // A/B-measuring the threshold itself (same knob as ProfileQ)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJHASH_FALLBACK", "65536"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     import spark.implicits._
     import graft.streaming.StreamingIndex
     val docs = graft.Tables(spark, sfDir).documents

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale measurements on ORGANIC corpora ([[OrganicGen]]) — the two
@@ -24,16 +24,7 @@ object OrganicBench {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val dir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     import spark.implicits._
 
     def timeS[T](f: => T): (T, Double) = {

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -108,14 +109,7 @@ object OrganicGen {
     val outDir = args(0)
     val nDocs = if (args.length > 1) args(1).toLong else 500000L
     val nVecs = if (args.length > 2) args(2).toLong else 200000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     documents(spark, nDocs).repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     vectors(spark, nVecs).repartition(32)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Times the PROFILE OPERATORS themselves (not the q201/q205 gates,
   * which both include the exact audit pass): `numericProfile` (exact
@@ -14,15 +14,7 @@ object ProfileOpBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val passes = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     def li = graft.Tables(spark, sfDir).lineitem
     def time(what: String)(f: => Unit): Unit = {

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry, Tables}
 
 /** Time individual SparkEntry queries (bench methodology: noop write,
   * warmup pass, min of two runs). Usage:
@@ -12,17 +11,7 @@ object ProfileQ {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[32]")
-      // default matches GraftSession; env override exists ONLY for
-      // A/B-measuring the threshold itself (e.g. the r16 64k revert)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJHASH_FALLBACK", "65536"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     Tables.warmupAll(spark, dir, "profileq")
     def once(n: String): Double = {
       spark.catalog.clearCache()

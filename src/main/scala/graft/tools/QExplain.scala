@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Print a gate's formatted plan at a given SF dir without running it.
   * Usage: tools/jrun.sh graft.tools.QExplain <sfDir> <queryName>
@@ -10,16 +9,7 @@ object QExplain {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     println(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))
     spark.stop()

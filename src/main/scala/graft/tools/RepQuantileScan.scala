@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.IngestDashboard
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Prints the EXACT q50/q95 of each repetition signal (percentile over
@@ -19,13 +18,7 @@ object RepQuantileScan {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     import spark.implicits._
     val alpha = IngestDashboard.Alpha
     dirs.foreach { dir =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger bench scale point by replicating an existing
@@ -36,12 +36,7 @@ object ScaleUp {
       case Array(s, o, c) => (s, o, c.toInt, K)
       case Array(s, o, c, k) => (s, o, c.toInt, k.toLong)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     // events.parquet stores TIMESTAMP(NANOS): read the raw INT64 nanos
     // (the rewritten copy is then plain INT64, which Tables.events
     // converts identically)

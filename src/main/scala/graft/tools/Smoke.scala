@@ -1,18 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Drives SparkEntry.entry the way the driver's smoke check does
   * (rows > 0 on sf0.001) and prints the result.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
     val df = graft.SparkEntry.entry(spark)
     val rows = df.collect()
     rows.foreach(r => println(s"[smoke] $r"))

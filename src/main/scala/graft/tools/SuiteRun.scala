@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 import org.apache.spark.sql.SparkSession
 
 /** Long-scale suite runner: Bench semantics (noop write, warmup,
@@ -33,20 +33,9 @@ object SuiteRun {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/suiterun"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val qTimeoutS = sys.env.get("SPARK_GRAFT_Q_TIMEOUT").map(_.toInt).getOrElse(1800)
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def newSession(): SparkSession =
+      GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     var spark = newSession()
 
     // resume: a prior run's successful {"sec": …} lines AND structured

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry, Tables}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 
 /** Attribute `WindowExec: No Partition Defined` warnings to their
@@ -18,14 +17,7 @@ object WindowScan {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
     Tables.warmupAll(spark, dir, "winscan")
     def emptyPartitionWindows(p: LogicalPlan): Seq[Window] =
       p.collect { case w: Window if w.partitionSpec.isEmpty => w } ++

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Scale-shape measurement for the q110 weighted-median rewrite: a
@@ -13,12 +13,7 @@ import org.apache.spark.sql.functions._
 object WmBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(20000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     // ~n/3 DISTINCT values per key so the cumulative frame is n rows

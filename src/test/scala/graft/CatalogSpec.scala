@@ -1,8 +1,10 @@
 package graft
 
 import graft.catalog.{DailyTables, TargetSchema}
-import graft.plans.GraftExtensions
+import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+
+import scala.jdk.CollectionConverters._
 
 class CatalogSpec extends SparkSpec {
 
@@ -70,7 +72,6 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("SQL function registration exposes the custom expressions") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT graft_shard_code('20170107') AS sc,
         |       graft_hash64('abc') AS h,
@@ -114,8 +115,31 @@ class CatalogSpec extends SparkSpec {
     assert(probe.getLong(1) >= 1L)
   }
 
+  test("one session definition: only GraftSession builds a session, and the suite runs its settings") {
+    // spelled with \s* so that this line is no match itself
+    val builderCall = """SparkSession\s*\.\s*builder""".r
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      assert(Files.isDirectory(Paths.get(root)), s"run from the project root: $root")
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(sources.exists(_.endsWith("GraftSession.scala")))
+    val builders = sources.filterNot(_.endsWith("GraftSession.scala"))
+      .filter(p => builderCall.findFirstIn(Files.readString(p)).isDefined)
+    assert(builders.isEmpty,
+      s"sessions must come from GraftSession.local, built in: ${builders.mkString(", ")}")
+    // the SparkContext conf holds the builder's settings as built;
+    // the runtime conf may have been changed since (Readers.readText
+    // sets the split size from its LoaderConfig)
+    val built = spark.sparkContext.getConf
+    assert(built.get("spark.sql.files.maxPartitionBytes") ==
+      GraftSession.MaxPartitionBytes.toString)
+    assert(built.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+  }
+
   test("graft_zorder rejects non-int children at analysis, not runtime") {
-    GraftExtensions.register(spark)
     // int children work
     val z = spark.sql("SELECT graft_zorder(3, 5) AS z").collect()(0).getLong(0)
     assert(z == graft.functions.ZOrderOps.interleave(3, 5))
