@@ -105,22 +105,24 @@ object LoaderJob {
     * contract, `ClickhouseHdfsLoader.java:203-207`).
     */
   def runDirect(spark: SparkSession, cfg: LoaderConfig, target: TargetSchema,
-      shards: ShardSpec, executor: BatchExecutor): LoadReport = {
-    val metrics = LoadMetrics(spark)
-    val report = new DirectSink(executor, cfg, metrics)
-      .write(mapSide(spark, cfg, target, shards), cfg.table)
-    report.failIfAnyFailed()
-    report
-  }
+      shards: ShardSpec, executor: BatchExecutor): LoadReport =
+    Readers.withSplitCap(spark, cfg) {
+      val metrics = LoadMetrics(spark)
+      val report = new DirectSink(executor, cfg, metrics)
+        .write(mapSide(spark, cfg, target, shards), cfg.table)
+      report.failIfAnyFailed()
+      report
+    }
 
   /** Two-phase load (§3.2, `--direct false`) into a catalog table:
     * stage, then one atomic `INSERT INTO target SELECT * FROM temp`.
     */
   def runStaged(spark: SparkSession, cfg: LoaderConfig, target: TargetSchema,
-      shards: ShardSpec, jobId: String): Unit = {
-    val staged = plan(spark, cfg, target, shards).drop("wire_row", "shard")
-    new StagedSink(spark).write(staged, cfg.table, jobId)
-  }
+      shards: ShardSpec, jobId: String): Unit =
+    Readers.withSplitCap(spark, cfg) {
+      val staged = plan(spark, cfg, target, shards).drop("wire_row", "shard")
+      new StagedSink(spark).write(staged, cfg.table, jobId)
+    }
 
   /** Daily-table load (`--daily true`, §3.3 — the reference's
     * deprecated path, `ClickhouseHdfsLoader.java:125-140`): redirect
@@ -158,14 +160,15 @@ object LoaderJob {
     */
   def runStagedV2(spark: SparkSession, cfg: LoaderConfig, target: TargetSchema,
       shards: ShardSpec, backend: String,
-      extraOptions: Map[String, String] = Map.empty): Unit = {
-    val wire = plan(spark, cfg, target, shards).select("wire_row")
-    wire.write.format("graft-staged")
-      .option("target", cfg.table)
-      .option("backend", backend)
-      .option("batchsize", cfg.batchSize.toString)
-      .options(extraOptions)
-      .mode("append")
-      .save()
-  }
+      extraOptions: Map[String, String] = Map.empty): Unit =
+    Readers.withSplitCap(spark, cfg) {
+      plan(spark, cfg, target, shards).select("wire_row")
+        .write.format("graft-staged")
+        .option("target", cfg.table)
+        .option("backend", backend)
+        .option("batchsize", cfg.batchSize.toString)
+        .options(extraOptions)
+        .mode("append")
+        .save()
+    }
 }

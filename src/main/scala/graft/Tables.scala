@@ -136,13 +136,13 @@ object Tables {
     * [[graft.queries.Pipeline.spreadIds]]. Repartition is round-robin
     * over the row multiset — semantically invisible (every aggregate
     * in the suite is partitioning-independent by the parity rules,
-    * and every gate orders its output).
+    * and every gate orders its output). A split count the plan does
+    * not give ([[graft.plans.partitions]]) counts as too few.
     */
   def spread(spark: SparkSession, df: DataFrame): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    val scanParts = df.rdd.getNumPartitions // planning only, no job
     val bytes = df.queryExecution.analyzed.stats.sizeInBytes
-    if (scanParts >= target || bytes < SpreadMinBytes) df
+    if (bytes < SpreadMinBytes || graft.plans.partitions(df).exists(_ >= target)) df
     else df.repartition(target)
   }
 

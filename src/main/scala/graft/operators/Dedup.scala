@@ -665,8 +665,7 @@ object Dedup {
         // from the PLANNED partitioning: `br.rdd` would run the
         // collapse's shuffle stages under AQE, and the write below
         // would then run them again
-        val single = br.queryExecution.sparkPlan.outputPartitioning.numPartitions == 1
-        (if (single) br else br.repartition($"band"))
+        (if (graft.plans.partitions(br).contains(1)) br else br.repartition($"band"))
           .sortWithinPartitions($"band", $"bucket")
           .write.mode(mode).partitionBy("band").parquet(s"$root/bands")
       },
@@ -749,7 +748,7 @@ object Dedup {
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
       .select(col("x.doc").as("a"), col("y.kh").as("b"))
       .distinct()
-    val cSets = SegRead(spark, s"$dir/sets", "nd/sets")
+    val cSets = TinyParquet.read(spark, s"$dir/sets")
       .groupBy($"kh").agg(first($"hs").as("hs"))
       .select($"kh".as("doc"), $"hs")
     val uniqPairs = verifyJaccardTwoSided(cands,
@@ -778,7 +777,7 @@ object Dedup {
       idCol, textCol, threshold, pointLookup = pointLookup)
     uniqPairs
       .join(pDocs, "pkh")
-      .join(SegRead(spark, s"$dir/docs", "nd/docs")
+      .join(TinyParquet.read(spark, s"$dir/docs")
         .select($"kh".as("ckh"), $"doc".as("b")), "ckh")
       .select($"a", $"b", $"jaccard")
   }
@@ -805,7 +804,7 @@ object Dedup {
       idCol, textCol, threshold, bandsProbed, pointLookup)
     uniqPairs
       .join(pDocs, "pkh")
-      .join(SegRead(spark, s"$dir/docs", "nd/docs")
+      .join(TinyParquet.read(spark, s"$dir/docs")
         .select($"kh".as("ckh"), $"doc".as("b")), "ckh")
       .select($"a", $"b", $"jaccard")
   }
@@ -826,7 +825,7 @@ object Dedup {
       idCol, textCol, threshold, pointLookup = pointLookup)
     // per indexed CONTENT: copy count + smallest doc id (bounded,
     // content-keyed aggregates — never pair-expanded)
-    val cStats = SegRead(spark, s"$dir/docs", "nd/docs")
+    val cStats = TinyParquet.read(spark, s"$dir/docs")
       .groupBy($"kh").agg(count(lit(1)).as("copies"), min($"doc").as("min_doc"))
       .select($"kh".as("ckh"), $"copies", $"min_doc")
     val perProbeContent = uniqPairs.join(cStats, "ckh")

@@ -98,7 +98,7 @@ object IngestDashboard {
   def repQuantilesIndexed(spark: org.apache.spark.sql.SparkSession,
       dir: String, qs: Seq[Double], alpha: Double = Alpha): DataFrame = {
     val dd = graft.functions.DdSketch
-    val merged = SegRead(spark, s"$dir/rep", "dash/rep")
+    val merged = TinyParquet.read(spark, s"$dir/rep")
       .groupBy($"signal")
       .agg(sum($"n").as("n"), dd.dd_merge_agg($"st", alpha).as("st"))
     merged.select($"signal" +: $"n" +: qs.map(q =>

@@ -377,13 +377,13 @@ object LangModel {
   /** The merged (c12, c1, cw) of a persisted model directory. */
   private def lmCounts(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    // SegRead: fixed layouts, schema inferred once per JVM (the
-    // per-score/probe inference was a measured slice of the gate wall)
-    (SegRead(spark, s"$dir/c12", "lm/c12")
+    // footer schemas (TinyParquet.read): the per-score/probe inference
+    // job was a measured slice of the gate wall
+    (TinyParquet.read(spark, s"$dir/c12")
        .groupBy($"w1", $"w2").agg(sum($"c12").as("c12")),
-     SegRead(spark, s"$dir/c1", "lm/c1")
+     TinyParquet.read(spark, s"$dir/c1")
        .groupBy($"w1").agg(sum($"c1").as("c1")),
-     SegRead(spark, s"$dir/cw", "lm/cw")
+     TinyParquet.read(spark, s"$dir/cw")
        .groupBy($"w2").agg(sum($"cw").as("cw")))
   }
 
@@ -677,9 +677,9 @@ object LangModel {
   /** The merged (c123, cw) of a persisted KN-3 model directory. */
   private def lm3Counts(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    (SegRead(spark, s"$dir/c123", "lm/c123")
+    (TinyParquet.read(spark, s"$dir/c123")
        .groupBy($"w1", $"w2", $"w3").agg(sum($"c123").as("c123")),
-     SegRead(spark, s"$dir/cw", "lm/cw")
+     TinyParquet.read(spark, s"$dir/cw")
        .groupBy($"w2").agg(sum($"cw").as("cw")))
 
   /** KN-3 scoring from the persisted tables alone — every statistic

@@ -226,7 +226,7 @@ object Pq {
     // the index owns its quantization layout: read it back, never
     // trust a caller to re-pass it
     val (m, _, dim) = indexMeta(spark, dir)
-    val cb = SegRead(spark, s"$dir/codebooks", "pq/codebooks")
+    val cb = TinyParquet.read(spark, s"$dir/codebooks")
     val (root, mode) =
       (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
     // disjoint sub-tables → concurrent jobs (the appendLmCounts
@@ -241,9 +241,9 @@ object Pq {
       queries: DataFrame, topK: Int,
       shortlistFactor: Int = 8): DataFrame = {
     val (m, k, dim) = indexMeta(spark, dir)
-    val cb = SegRead(spark, s"$dir/codebooks", "pq/codebooks")
-    val enc = SegRead(spark, s"$dir/codes", "pq/codes")
-    val vectors = SegRead(spark, s"$dir/vectors", "vec/vectors")
+    val cb = TinyParquet.read(spark, s"$dir/codebooks")
+    val enc = TinyParquet.read(spark, s"$dir/codes")
+    val vectors = TinyParquet.read(spark, s"$dir/vectors")
     val qt = queryTables(queries, cb, m, k, dim)
       .select($"vid".as("q_vid"), $"qtab", $"nrm".as("q_nrm"))
     val denom = $"q_nrm" * $"nrm"

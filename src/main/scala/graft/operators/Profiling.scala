@@ -130,7 +130,7 @@ object Profiling {
     */
   def profileIndexed(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    SegRead(spark, s"$dir/state", "profile/state")
+    TinyParquet.read(spark, s"$dir/state")
       .groupBy($"col_name")
       .agg(sum($"n_rows").as("n_rows"), sum($"n_nulls").as("n_nulls"),
         graft.functions.Hll.hll_merge_agg($"hll").as("hll"),

@@ -288,8 +288,8 @@ object Similarity {
   def sq8ProbeIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, topK: Int, shortlistFactor: Int = 4): DataFrame = {
     val (mn, dl) = sq8IndexStats(spark, dir)
-    val enc = SegRead(spark, s"$dir/codes", "sq8/codes")
-    val vectors = SegRead(spark, s"$dir/vectors", "vec/vectors")
+    val enc = TinyParquet.read(spark, s"$dir/codes")
+    val vectors = TinyParquet.read(spark, s"$dir/vectors")
     Pq.rerankExact(
       rankTopK(sq8Scan(enc, queries, mn, dl), topK * shortlistFactor),
       queries, vectors, topK)
@@ -1048,14 +1048,14 @@ object Similarity {
     val p = new org.apache.hadoop.fs.Path(s"$dir/centroids_l1")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
-      val l1 = broadcast(SegRead(spark, s"$dir/centroids_l1", "ivf/centroids_l1"))
-      val l2 = broadcast(SegRead(spark, s"$dir/centroids_l2", "ivf/centroids_l2"))
+      val l1 = broadcast(TinyParquet.read(spark, s"$dir/centroids_l1"))
+      val l2 = broadcast(TinyParquet.read(spark, s"$dir/centroids_l2"))
       IvfLayout(
         Quantizer(df => assignHier(df, l1, l2),
           (df, np) => probeHier(df, l1, l2, nL1 = 2, nProbe = np)),
         Some(l2.select($"scid".as("cid"), $"l1")))
     } else {
-      val cents = broadcast(SegRead(spark, s"$dir/centroids", "ivf/centroids"))
+      val cents = broadcast(TinyParquet.read(spark, s"$dir/centroids"))
       IvfLayout(
         Quantizer(df => cellsFor(df, cents, 1, ""),
           (df, np) => cellsFor(df, cents, np, "")),

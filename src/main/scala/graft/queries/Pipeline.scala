@@ -49,41 +49,17 @@ object Pipeline {
     * parallelism instead of a constant, so local[N] and a cluster both
     * spread correctly. Row-independent maps + the gates' final
     * orderBy make the re-partitioning output-invisible.
+    *
+    * No-op guard (the [[Tables.spread]] rule): a scan that already has
+    * >= parallelism splits (any real multi-file or multi-row-group
+    * table at production scale) fills the machine by itself, so a range
+    * exchange would only cost; id order within parquet splits is
+    * ascending, so the group memos keep their contiguity without it.
+    * A split count the plan does not give counts as too few.
     */
-  /** Decision memo for [[spreadIds]]'s no-op guard, keyed on the id
-    * scan's leaf file-relation paths + the session parallelism: the
-    * `ids.rdd.getNumPartitions` probe costs ~40 ms of plan-to-RDD
-    * conversion per call (tools/FloorProbe), and 35+ decode gates call
-    * spreadIds over the same table scan whose split count is constant
-    * for a JVM's lifetime (the Tables schema-cache immutability
-    * argument). Metadata only — the memo stores a boolean decision.
-    */
-  private val spreadMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   private[queries] def spreadIds(ids: Dataset[Long]): Dataset[Long] = {
     val target = ids.sparkSession.sparkContext.defaultParallelism
-    // no-op guard (the Tables.spread rule, r17 verdict item): a scan
-    // that already has >= parallelism splits — any real multi-file /
-    // multi-row-group table at production scale — fills the machine by
-    // itself, so adding a range exchange would only cost; id order
-    // within parquet splits is ascending, so the group memos keep
-    // their contiguity without the re-partition
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    def probe(): Boolean = ids.rdd.getNumPartitions >= target
-    val key = ids.queryExecution.analyzed.collectLeaves().collectFirst {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation]
-          .location.rootPaths.mkString(",") + "#" + target
-    }
-    val skip = key match {
-      case Some(k) =>
-        val cached = spreadMemo.get(k)
-        if (cached != null) cached.booleanValue()
-        else { val s = probe(); spreadMemo.put(k, s); s }
-      case None => probe()
-    }
-    if (skip) ids
+    if (graft.plans.partitions(ids).exists(_ >= target)) ids
     else ids.repartitionByRange(target, col(ids.columns.head))
   }
 

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Small-file combining: the reference packs text files into ≤256 MiB
   * splits (`CombineTextInputFormat`, ClickhouseHdfsLoader.java:161);
   * Spark's equivalent knobs are `spark.sql.files.maxPartitionBytes` +
-  * `spark.sql.files.openCostInBytes`, set per-read below — built-in
-  * packing, no custom InputFormat needed.
+  * `spark.sql.files.openCostInBytes` — built-in packing, no custom
+  * InputFormat needed; a load caps splits through [[withSplitCap]].
   */
 object Readers {
 
@@ -28,7 +28,6 @@ object Readers {
     */
   def readText(spark: SparkSession, cfg: LoaderConfig,
       numFields: Option[Int] = None): DataFrame = {
-    applySplitConf(spark, cfg)
     val lines = spark.read.text(cfg.exportDir)
     val fields = TransformStage.tokenize(col("value"), cfg.fieldsTerminatedBy)
     // column count: explicit (from the catalog — TargetSchema — in a
@@ -98,10 +97,15 @@ object Readers {
     case InputFormat.Parquet => readParquet(spark, cfg.exportDir)
   }
 
-  private def applySplitConf(spark: SparkSession, cfg: LoaderConfig): Unit = {
-    spark.conf.set("spark.sql.files.maxPartitionBytes", cfg.inputSplitMaxBytes.toString)
-    // open cost makes many small files pack into one task, the
-    // CombineTextInputFormat behavior
-    spark.conf.set("spark.sql.files.openCostInBytes", (4 * 1024 * 1024).toString)
+  /** Runs `body` under the load's split cap, then restores the
+    * session's (the reference sets it in the job's own configuration,
+    * `ClickhouseHdfsLoader.java:161,164-176`). Scans read the cap when
+    * they execute, so `body` must run the load, not only build it.
+    */
+  def withSplitCap[T](spark: SparkSession, cfg: LoaderConfig)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val session = spark.conf.get(key)
+    spark.conf.set(key, cfg.inputSplitMaxBytes.toString)
+    try body finally spark.conf.set(key, session)
   }
 }

@@ -82,12 +82,13 @@ object StreamingIndex {
     * Real foreachBatch frames are LogicalRDD-backed and carry their
     * source plan's stats, so the size gate sees a real estimate;
     * StreamingSpec pins that, since without those stats the regime
-    * would never engage.
+    * would never engage. A split count the plan does not give
+    * ([[graft.plans.partitions]]) keeps the parallel plan.
     */
   private[graft] def microPlan(batch: DataFrame): DataFrame = {
     val small = batch.queryExecution.analyzed.stats.sizeInBytes <
       MicroBatchMaxBytes
-    if (small && batch.rdd.getNumPartitions == 1) batch.coalesce(1) else batch
+    if (small && graft.plans.partitions(batch).contains(1)) batch.coalesce(1) else batch
   }
 
   /** Apply one micro-batch to the index, idempotently by `batchId`.
@@ -579,7 +580,7 @@ object StreamingIndex {
           if (bootstrapped)
             graft.operators.Curation.incrementalSplitAssign(spark, dir,
               mb,
-              graft.operators.SegRead(spark, s"$dir/sides", "split/sides")
+              graft.operators.TinyParquet.read(spark, s"$dir/sides")
                 .select($"doc_id", $"side"),
               idCol, textCol, threshold, trainPct)
           else // first batch: no index yet — all fresh content

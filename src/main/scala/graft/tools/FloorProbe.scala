@@ -53,12 +53,15 @@ object FloorProbe {
       graft.Tables(spark, sfDir).documents.groupBy("source").count()
         .write.mode("overwrite").format("noop").save()
     }}%.4f s (median)")
-    // the spreadIds guard's plan-to-RDD partition probe, in isolation
-    println(f"[floor] ids .rdd numPartitions: ${med(reps) {
-      graft.Tables(spark, sfDir).documents
+    // the spreadIds guard's partition count from the plan, in isolation
+    println(f"[floor] ids planned partitions: ${med(reps) {
+      graft.plans.partitions(graft.Tables(spark, sfDir).documents
         .select(org.apache.spark.sql.functions.col("doc_id").cast("long"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-        .rdd.getNumPartitions; ()
+        .as[Long](org.apache.spark.sql.Encoders.scalaLong)); ()
+    }}%.4f s (median)")
+    // an index sub-table read: schema from the directory's own footer
+    println(f"[floor] footer-schema read:    ${med(reps) {
+      graft.operators.TinyParquet.read(spark, s"$sfDir/documents.parquet"); ()
     }}%.4f s (median)")
     // AQE off, probe only: how much of the groupBy floor is AQE stage
     // scheduling vs the shuffle itself

@@ -130,8 +130,7 @@ class CatalogSpec extends SparkSpec {
     assert(builders.isEmpty,
       s"sessions must come from GraftSession.local, built in: ${builders.mkString(", ")}")
     // the SparkContext conf holds the builder's settings as built;
-    // the runtime conf may have been changed since (Readers.readText
-    // sets the split size from its LoaderConfig)
+    // the runtime conf may have been changed since by another suite
     val built = spark.sparkContext.getConf
     assert(built.get("spark.sql.files.maxPartitionBytes") ==
       GraftSession.MaxPartitionBytes.toString)

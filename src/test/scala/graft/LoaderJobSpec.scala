@@ -144,6 +144,20 @@ class LoaderJobSpec extends SparkSpec {
     CollectingExecutor.batches.forEach { case (_, sz) => assert(sz <= 30) }
   }
 
+  test("a load leaves the session's split size as it found it") {
+    val dir = Files.createTempDirectory("graft-splitconf")
+    Files.writeString(dir.resolve("data.txt"), "1|a\n2|b\n")
+    val cfg = Args.parse(Seq("--export-dir", dir.toString, "--table", "t",
+      "--input-split-max-bytes", "12345678"))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.get(key)
+    CollectingExecutor.clear()
+    val report = LoaderJob.runDirect(spark, cfg, TargetSchema.fromDDL("c0 STRING, c1 STRING"),
+      ShardSpec(Seq(1)), CollectingExecutor)
+    assert(report.success == 2)
+    assert(before != "12345678" && spark.conf.get(key) == before)
+  }
+
   /** A text export of `files` files × `rows` lines: a row number, then
     * one of 97 keys.
     */

@@ -13,6 +13,58 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  test("plans.partitions reads the planned partition count without running a job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    val li = Tables(spark, sf).lineitem
+    val multi = java.nio.file.Files.createTempDirectory("graft-parts").toString
+    spark.range(0, 3000, 1, 3).write.mode("overwrite").parquet(multi)
+    val files = spark.read.parquet(multi)
+    val shapes = Seq(
+      "scan" -> li,
+      "filtered scan" -> li.filter(col("l_quantity") > 10),
+      "multi-file scan" -> files,
+      "coalesce(1) + agg" -> li.coalesce(1).groupBy("l_returnflag").count(),
+      "aggregate" -> li.groupBy("l_returnflag").count(),
+      "repartition(7)" -> li.repartition(7),
+      "union" -> li.union(li))
+    val (group, marker) = (s"parts-${System.nanoTime()}", s"marker-${System.nanoTime()}")
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val got = try {
+      sc.setJobGroup(group, "planned partitions", interruptOnCancel = false)
+      val got = try shapes.map { case (n, df) => n -> plans.partitions(df) }.toMap
+        finally sc.clearJobGroup()
+      // jobs reach the listener in order: once the marker's start is
+      // seen, any job of the group would have been seen too
+      sc.setJobGroup(marker, "listener barrier", interruptOnCancel = false)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      got
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.contains(marker), "listener never saw the marker job")
+    assert(!jobs.asScala.contains(group), "reading the partition count must run no job")
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(got == Map(
+      "scan" -> Some(1), "filtered scan" -> Some(1), "multi-file scan" -> Some(3),
+      "coalesce(1) + agg" -> Some(1),
+      // the planned exchange, not what AQE coalesces it to at run time
+      "aggregate" -> Some(shufflePartitions),
+      "repartition(7)" -> Some(7), "union" -> None))
+    // a scan's count is the RDD's split count
+    Seq("scan", "filtered scan", "multi-file scan").foreach { n =>
+      assert(got(n).contains(shapes.toMap.apply(n).rdd.getNumPartitions), n)
+    }
+  }
+
   test("shard assignment is map-side only (no shuffle)") {
     val p = plan(Sharding.assign(Tables(spark, sf).customer, "c_name", ShardSpec(Seq(1, 2, 1))))
     assert(!p.contains("Exchange"), s"unexpected shuffle:\n$p")

@@ -120,6 +120,32 @@ class SimilaritySpec extends SparkSpec {
     assert(probeSet(dirA, queries).nonEmpty)
   }
 
+  test("persisted SQ8 indexes over long and string ids probe in either order in one JVM") {
+    import spark.implicits._
+    import graft.operators.TinyParquet
+    // `codes` and `vectors` carry the caller's id type, so two indexes
+    // of one layout can hold different schemas; each read must take
+    // its schema from its own directory
+    val longs = corpus.filter($"vid" < 200)
+    val strings = longs.withColumn("vid", $"vid".cast("string"))
+    def build(df: org.apache.spark.sql.DataFrame): String = {
+      val d = java.nio.file.Files.createTempDirectory("graft-sq8-ids").toString
+      Similarity.buildSq8Index(df, d); d
+    }
+    def probe(d: String, q: org.apache.spark.sql.DataFrame): Set[(String, Long, String)] =
+      Similarity.sq8ProbeIndexed(spark, d, q, topK = 5).collect()
+        .map(r => (r.get(0).toString, r.getLong(1), r.get(2).toString)).toSet
+    val (l1, s1, l2, s2) = (build(longs), build(strings), build(longs), build(strings))
+    val longFirst = Seq(probe(l1, longs), probe(s1, strings))
+    val stringFirst = Seq(probe(s2, strings), probe(l2, longs)).reverse
+    assert(longFirst.head.nonEmpty)
+    assert(longFirst.forall(_ == longFirst.head) && stringFirst.forall(_ == longFirst.head),
+      "both id types must answer alike, whichever index is probed first")
+    for (d <- Seq(l1, s1); t <- Seq("codes", "vectors"))
+      assert(TinyParquet.read(spark, s"$d/$t").schema == spark.read.parquet(s"$d/$t").schema,
+        s"$d/$t")
+  }
+
   test("SQ8 frozen-stats append saturates out-of-range values instead of overflowing") {
     import spark.implicits._
     val train = Similarity.prepare(

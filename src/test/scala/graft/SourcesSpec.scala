@@ -56,10 +56,20 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("small-file packing conf is applied from LoaderConfig") {
+    // the load's split cap applies inside the load, and only there
     val dir = Files.createTempDirectory("graft-split")
-    Files.writeString(Paths.get(dir.toString, "f.txt"), "a|b\n")
-    Readers.readText(spark,
-      LoaderConfig(exportDir = dir.toString, inputSplitMaxBytes = 12345678L))
-    assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == "12345678")
+    // 3 MiB: one split under the session's packing (its 4 MiB open
+    // cost is the smallest split), three under a 1 MiB cap
+    val line = "0123456789abcdef|0123456789abcdef|0123456789abcdefghijklmnopqrstuvwxyz\n"
+    Files.writeString(Paths.get(dir.toString, "f.txt"), line * (3 * 1024 * 1024 / line.length))
+    val cfg = LoaderConfig(exportDir = dir.toString, inputSplitMaxBytes = 1024L * 1024)
+    def splits() = graft.plans.partitions(Readers.readText(spark, cfg, Some(3)))
+    assert(Readers.withSplitCap(spark, cfg)(splits()) == Some(3))
+    assert(splits() == Some(1), "outside the load the session's split size applies")
+    // a direct load of one shard flushes one batch per scan task
+    val report = LoaderJob.runDirect(spark, cfg.copy(table = "t"),
+      graft.catalog.TargetSchema.fromDDL("c0 STRING, c1 STRING, c2 STRING"),
+      graft.operators.ShardSpec(Seq(1)), graft.sinks.CollectingExecutor)
+    assert(report.batches == 3, s"${report.batches} load tasks, want one per 1 MiB split")
   }
 }

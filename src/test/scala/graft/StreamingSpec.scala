@@ -342,12 +342,13 @@ class StreamingSpec extends SparkSpec {
     val ckpt = JFiles.createTempDirectory("graft-microck").toString
     val docs = Tables(spark, sf).documents.select("doc_id", "text").limit(200)
     docs.coalesce(1).write.mode("overwrite").parquet(dir)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, BigInt, Int, Boolean)]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (Boolean, BigInt, Int, Option[Int], Boolean)]()
     val q = spark.readStream.schema(docs.schema).parquet(dir).writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
         val analyzed = b.queryExecution.analyzed
         seen.add((analyzed.collectFirst { case r: LogicalRDD => r }.isDefined,
-          analyzed.stats.sizeInBytes, b.rdd.getNumPartitions,
+          analyzed.stats.sizeInBytes, b.rdd.getNumPartitions, graft.plans.partitions(b),
           StreamingIndex.microPlan(b).queryExecution.executedPlan.outputPartitioning ==
             SinglePartition))
         ()
@@ -357,12 +358,14 @@ class StreamingSpec extends SparkSpec {
       .start()
     q.awaitTermination(120000)
     q.stop()
-    val batches = seen.toArray(Array.empty[(Boolean, BigInt, Int, Boolean)]).toSeq
+    val batches = seen.toArray(Array.empty[(Boolean, BigInt, Int, Option[Int], Boolean)]).toSeq
     assert(batches.size == 1, s"expected one batch, saw $batches")
-    val (logicalRdd, size, parts, micro) = batches.head
+    val (logicalRdd, size, parts, planned, micro) = batches.head
     assert(logicalRdd, "foreachBatch frames are LogicalRDD-backed")
     assert(parts == 1 && size < BigInt(Long.MaxValue),
       s"a one-file batch must be one split with real stats: $parts partitions, $size bytes")
+    assert(planned.contains(parts),
+      s"the planned count must be the batch RDD's: $planned vs $parts")
     assert(micro, "microPlan must take the micro regime on a small one-split batch")
   }
 
