@@ -30,6 +30,9 @@ package graft
   * - Full-name 3-decimal timings for EVERY query land in
   *   `docs/bench_detail.json` (committed per run by the builder), the
   *   input of `tools/compare_bench.py`.
+  * - The reference records its scale point (`"sf"`, e.g. `sf0.1`); a
+  *   run on another scale point (`SPARK_GRAFT_SF_DIR`'s last name)
+  *   uses no reference: `canary_drift` -1, no canaries, no re-runs.
   * - End-of-suite re-run guard: any query whose median exceeds 3× its
   *   committed reference (and 1 s absolute) is re-timed ONCE after
   *   the suite; the min of (median, re-run) is recorded and the query
@@ -99,8 +102,11 @@ object Bench {
     }
 
     // committed per-query reference (docs/bench_ref.json): canary
-    // names + a full reference map from a builder-committed run
+    // names + a full reference map from a builder-committed run, used
+    // only when its scale point ("sf", the data directory's name) is
+    // this run's: timings at another scale point say nothing of the box
     val (canaryNames, refMap) = {
+      val none = (Seq.empty[String], Map.empty[String, Double])
       try {
         val txt = java.nio.file.Files.readString(
           java.nio.file.Paths.get("docs/bench_ref.json"))
@@ -116,8 +122,14 @@ object Bench {
         val qsec =
           "\"(q[0-9][^\"]*)\"\\s*:\\s*(?:\\{[^{}]*?\"value\"\\s*:\\s*)?([0-9.]+)".r
             .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        (can, qsec)
-      } catch { case _: Throwable => (Seq.empty[String], Map.empty[String, Double]) }
+        val refSf = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map(_.group(1))
+        if (refSf.contains(java.nio.file.Paths.get(sfDir).getFileName.toString)) (can, qsec)
+        else {
+          System.err.println(s"[bench] docs/bench_ref.json holds ${refSf.getOrElse("no")} " +
+            s"timings, not $sfDir: no canaries, no re-runs")
+          none
+        }
+      } catch { case _: Throwable => none }
     }
 
     // end-of-suite re-run guard: a median 3x over its committed

@@ -325,12 +325,15 @@ object Retrieval {
     math.min(4096L, pow).toInt
   }
 
-  /** Read the bucket count an index was built with (recorded in
-    * `stats` by [[buildBm25Index]]).
+  /** The index's 1-row `stats` table (`n_docs`, `avgdl`, `tot_len`,
+    * `buckets`), read on the driver at its catalog location: no Spark
+    * job, and the file listing is fresh on every call.
     */
-  private def indexBuckets(spark: SparkSession, db: String): Int = {
-    val Array(row) = spark.table(s"$db.stats").collect()
-    row.getAs[Int]("buckets")
+  private def indexStats(spark: SparkSession, db: String): org.apache.parquet.example.data.Group = {
+    val table = spark.sessionState.sqlParser.parseTableIdentifier(s"$db.stats")
+    val loc = spark.sessionState.catalog.getTableMetadata(table).location
+    val Seq(row) = TinyParquet.rows(spark.sparkContext.hadoopConfiguration, loc.toString)
+    row
   }
 
   /** Build the BM25 index ONCE as persisted tables — the
@@ -422,10 +425,11 @@ object Retrieval {
       db: String): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // one read of the 1-row stats table: the bucket layout (the index
-    // owns it: read it back, never re-derive) and the running totals
-    val Array(old) = spark.table(s"$db.stats").collect()
-    val buckets = old.getAs[Int]("buckets")
+    // one driver-side read of the 1-row stats table: the bucket layout
+    // (the index owns it: read it back, never re-derive) and the
+    // running totals
+    val old = indexStats(spark, db)
+    val buckets = old.getInteger("buckets", 0)
     // the delta's (n_docs, Σlen) ride the postings write as an
     // OBSERVED metric on the pre-explode frame — exact integer
     // aggregates collected by the listener for free, no extra job
@@ -458,8 +462,8 @@ object Retrieval {
           .saveAsTable(s"$db.dfreq"))
       timedPhase("bm25.append.stats") {
         val m = obs.get // fired during the postings write
-        val (n, t) = (old.getAs[Long]("n_docs") + m("n").asInstanceOf[Long],
-          old.getAs[Long]("tot_len") + m("t").asInstanceOf[Long])
+        val (n, t) = (old.getLong("n_docs", 0) + m("n").asInstanceOf[Long],
+          old.getLong("tot_len", 0) + m("t").asInstanceOf[Long])
         Seq((n, Math.floorDiv(2 * t + n, 2 * n), t, buckets))
           .toDF("n_docs", "avgdl", "tot_len", "buckets")
           .write.mode("overwrite").saveAsTable(s"$db.stats")
@@ -476,7 +480,7 @@ object Retrieval {
     */
   def compactBm25Index(spark: SparkSession, db: String): Unit = {
     import spark.implicits._
-    val buckets = indexBuckets(spark, db)
+    val buckets = indexStats(spark, db).getInteger("buckets", 0)
     spark.table(s"$db.dfreq")
       .groupBy($"term").agg(sum($"df").as("df"),
         max($"max_tf").as("max_tf"), min($"min_len").as("min_len"))
@@ -506,9 +510,9 @@ object Retrieval {
     * which the probe does not read, so appends to existing indexes
     * keep one schema.
     *
-    * Jobs: the 1-row stats read, the df broadcast, then the scoring
-    * and ranking stages — six in all under AQE (RetrievalSpec counts
-    * them).
+    * Jobs: the df broadcast, then the scoring and ranking stages —
+    * five in all under AQE (RetrievalSpec counts them); the 1-row
+    * stats table is read on the driver.
     */
   def bm25TopKIndexed(spark: SparkSession, db: String,
       queries: Seq[(Long, String)], k: Int): DataFrame = {
@@ -526,11 +530,11 @@ object Retrieval {
     // never-appended index, so the fold is a no-op there.
     val termDf = spark.table(s"$db.dfreq").filter(qfilter)
       .groupBy($"term").agg(sum($"df").as("df"))
-    val Array(st) = spark.table(s"$db.stats").collect()
+    val st = indexStats(spark, db)
     scoreSums(spark.table(s"$db.postings").filter(qfilter)
         .join(broadcast(qpairs.toDF("query_id", "term")), "term")
         .join(broadcast(termDf), "term"),
-        st.getAs[Long]("n_docs"), st.getAs[Long]("avgdl"))
+        st.getLong("n_docs", 0), st.getLong("avgdl", 0))
       .transform(topKByScore(k, $"score_fp", $"doc_id", $"query_id"))
       .select($"query_id", $"rank", $"doc_id",
         $"score".cast("long").as("score_fp"))

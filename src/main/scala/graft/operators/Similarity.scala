@@ -1047,15 +1047,17 @@ object Similarity {
       dir: String): IvfLayout = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/centroids_l1")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the centroid tables are a few KB: read on the driver into local
+    // frames, so the broadcasts scan no file
     if (fs.exists(p)) {
-      val l1 = broadcast(TinyParquet.read(spark, s"$dir/centroids_l1"))
-      val l2 = broadcast(TinyParquet.read(spark, s"$dir/centroids_l2"))
+      val l1 = broadcast(TinyParquet.local(spark, s"$dir/centroids_l1"))
+      val l2 = broadcast(TinyParquet.local(spark, s"$dir/centroids_l2"))
       IvfLayout(
         Quantizer(df => assignHier(df, l1, l2),
           (df, np) => probeHier(df, l1, l2, nL1 = 2, nProbe = np)),
         Some(l2.select($"scid".as("cid"), $"l1")))
     } else {
-      val cents = broadcast(TinyParquet.read(spark, s"$dir/centroids"))
+      val cents = broadcast(TinyParquet.local(spark, s"$dir/centroids"))
       IvfLayout(
         Quantizer(df => cellsFor(df, cents, 1, ""),
           (df, np) => cellsFor(df, cents, np, "")),

@@ -6,13 +6,18 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Driver-side parquet reads with no Spark job; writers are unchanged,
   * so Spark and DuckDB readers still see ordinary parquet.
   * - [[rows]]: every row of a TINY index META table (never data):
   *   `spark.read.parquet(meta).head` costs two jobs per append/probe.
+  * - [[local]]: a TINY index table (IVF centroids) as a local frame:
+  *   its rows are read here, so a broadcast of it scans no file.
   * - [[read]]: an index sub-table, its schema from one footer in its
   *   own directory (Spark's schema inference runs a job per read).
   *   Never from another directory of the same layout: SQ8/PQ `vectors`
@@ -38,24 +43,66 @@ private[graft] object TinyParquet {
   }
 
   /** Every row of `dir` as example Groups, in file-name-then-row order. */
-  def rows(conf: Configuration, dir: String): Seq[Group] =
-    files(conf, dir).flatMap { p =>
+  def rows(conf: Configuration, dir: String): Seq[Group] = groups(conf, files(conf, dir))
+
+  private def groups(conf: Configuration, files: Seq[Path]): Seq[Group] =
+    files.flatMap { p =>
       val reader = ParquetReader.builder(new GroupReadSupport(), p)
         .withConf(conf).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).toList
       finally reader.close()
     }
 
-  /** `dir` with the schema of its first data file's footer given, as
-    * `spark.read.parquet` infers it without schema merging.
+  /** The data files of `dir` and the Spark schema of the first one's
+    * footer, as `spark.read.parquet` infers it without schema merging.
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
+  private def filesAndSchema(spark: SparkSession, dir: String): (Seq[Path], StructType) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val file = files(conf, dir).headOption.getOrElse(
+    val fs = files(conf, dir)
+    val first = fs.headOption.getOrElse(
       throw new IllegalStateException(s"$dir holds no parquet data file"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val footer = try new Footer(file, reader.getFooter) finally reader.close()
-    spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer,
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(dir)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
+    val footer = try new Footer(first, reader.getFooter) finally reader.close()
+    (fs, ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
+
+  /** `dir` with the schema of its first data file's footer given. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(filesAndSchema(spark, dir)._2).parquet(dir)
+
+  /** Every row of `dir` in a local frame (a `LocalRelation`) with the
+    * footer's schema. Columns of atomic types and arrays of them.
+    */
+  def local(spark: SparkSession, dir: String): DataFrame = {
+    val (fs, schema) = filesAndSchema(spark, dir)
+    val data = groups(spark.sparkContext.hadoopConfiguration, fs).map(g =>
+      Row.fromSeq(schema.fields.toSeq.map(f => value(g, f.name, f.dataType))))
+    spark.createDataFrame(data.asJava, schema)
+  }
+
+  /** Field `name` of `g` as Spark's `Row` holds a value of type `t`.
+    * An array is the standard three-level parquet LIST
+    * (`repeated group list { element }`), as Spark writes it.
+    */
+  private def value(g: Group, name: String, t: DataType): Any =
+    if (g.getFieldRepetitionCount(name) == 0) null
+    else t match {
+      case ArrayType(et, _) =>
+        val list = g.getGroup(name, 0)
+        val rep = list.getType.getFieldName(0)
+        (0 until list.getFieldRepetitionCount(rep)).map { i =>
+          val e = list.getGroup(rep, i)
+          value(e, e.getType.getFieldName(0), et)
+        }
+      case LongType => g.getLong(name, 0)
+      case IntegerType => g.getInteger(name, 0)
+      case ShortType => g.getInteger(name, 0).toShort
+      case ByteType => g.getInteger(name, 0).toByte
+      case DoubleType => g.getDouble(name, 0)
+      case FloatType => g.getFloat(name, 0)
+      case BooleanType => g.getBoolean(name, 0)
+      case StringType => g.getString(name, 0)
+      case other => throw new UnsupportedOperationException(s"TinyParquet.local: $name is $other")
+    }
 }

@@ -136,6 +136,10 @@ class CatalogSpec extends SparkSpec {
       GraftSession.MaxPartitionBytes.toString)
     assert(built.get("spark.sql.codegen.cache.maxEntries") ==
       GraftSession.CodegenCacheEntries.toString)
+    assert(built.get("spark.hadoop.fs.file.impl") ==
+      classOf[graft.io.NioLocalFileSystem].getName)
+    assert(built.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[graft.io.NioLocalFs].getName)
   }
 
   test("graft_zorder rejects non-int children at analysis, not runtime") {

@@ -357,7 +357,7 @@ class RetrievalSpec extends SparkSpec {
     }
   }
 
-  test("indexed probe scores in one pass: equals bm25TopK on an appended index with stopword queries, in six jobs") {
+  test("indexed probe scores in one pass: equals bm25TopK on an appended index with stopword queries, in five jobs") {
     import spark.implicits._
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -380,9 +380,9 @@ class RetrievalSpec extends SparkSpec {
       val segmented = spark.table(s"$db.dfreq").groupBy("term").count()
         .filter($"count" >= 3).count()
       assert(segmented > 0, "dfreq should hold several segments per term")
-      // jobs of the call (its eager stats read) and of the collect;
-      // listener events arrive in order, so once the marker job's end
-      // is seen every event of the probe has been too
+      // jobs of the call and of the collect; listener events arrive
+      // in order, so once the marker job's end is seen every event of
+      // the probe has been too
       val (group, marker) = (s"onepass-${System.nanoTime()}", s"marker-${System.nanoTime()}")
       val jobs, markerJobs, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
       def inGroup(props: java.util.Properties, g: String) =
@@ -429,7 +429,7 @@ class RetrievalSpec extends SparkSpec {
         s"want two shuffle and two broadcast exchanges, got ${shuffles.size} / ${broadcasts.size}:\n$plan")
       assert(Plan.collect(plan) { case j: BroadcastHashJoinExec => j }.size == 2, s"$plan")
       assert(markerJobs.asScala.nonEmpty, "listener never saw the marker job")
-      assert(jobs.size <= 6, s"the probe ran ${jobs.size} jobs, want <= 6")
+      assert(jobs.size <= 5, s"the probe ran ${jobs.size} jobs, want <= 5")
     } finally {
       spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
     }

@@ -14,6 +14,7 @@ Usage:
 """
 import argparse
 import json
+import os
 
 REF = "docs/bench_ref.json"
 DETAIL = "docs/bench_detail.json"
@@ -34,6 +35,12 @@ def main():
     ref = json.load(open(REF))
     det = json.load(open(DETAIL))
     meas = det["queries"]
+    # a reference holds one scale point's timings (Bench uses it only
+    # for runs on that scale point)
+    run_sf = os.path.basename(os.path.normpath(det.get("sf", "")))
+    if run_sf != ref.get("sf"):
+        print(f"detail is a {run_sf or '?'} run, the reference holds {ref.get('sf')}; aborting")
+        return 1
     drift = det.get("canary_drift", -1.0)
     if drift <= 0:
         print("no canary drift in detail; aborting")
