@@ -148,9 +148,8 @@ object Curation {
         .otherwise(lit("valid")).as("side"))
 
   /** Compact a standing split directory's per-batch `sides` segments
-    * to one row per document — the [[LangModel.compactLmCounts]]
-    * treatment (staged swap, checked renames, unlogged-delta sweep)
-    * for the assignment table
+    * to one row per document — the [[IndexMaintenance.compactTables]]
+    * swap for the assignment table
     * ([[graft.streaming.StreamingIndex.applySplitBatch]] appends one
     * segment per batch). Each doc is assigned in exactly ONE batch, so
     * the fold is a pass-through grouped by doc (min(struct) makes it
@@ -166,7 +165,7 @@ object Curation {
       .groupBy($"doc_id")
       .agg(min(struct($"side", $"best_b")).as("m"))
       .select($"doc_id", $"m.best_b", $"m.side")
-    LangModel.compactTables(spark, dir, Seq("sides" -> (() => merged())))
+    IndexMaintenance.compactTables(spark, dir, Seq("sides" -> (() => merged())))
   }
 
   /** Stage-by-stage audit counts: (stage, stage_name, n), computed in

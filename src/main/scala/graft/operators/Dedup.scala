@@ -615,8 +615,8 @@ object Dedup {
         .write.mode("overwrite").parquet(metaP.toString)
     else {
       // driver-side meta read (TinyParquet): the per-append Spark read
-      // of this 1-row table cost 2 scheduled jobs (measured,
-      // tools/ApplyProfile: ~0.13 s per apply)
+      // of this 1-row table cost 2 scheduled jobs (measured per phase
+      // in r18: ~0.13 s per apply)
       val m = TinyParquet.rows(
         spark.sparkContext.hadoopConfiguration, metaP.toString).head
       val (mn, mk, mb) =
@@ -625,8 +625,7 @@ object Dedup {
         s"near-dup index $dir has layout (n=$mn, k=$mk, " +
           s"bands=$mb); refusing an append with (n=$n, k=$k, bands=$bands)")
     }
-    val (root, mode) =
-      (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     val uniq = delta
       .groupBy(xxhash64(col(textCol)).as("kh"))
       .agg(first(col(textCol)).as("txt"))
@@ -841,13 +840,12 @@ object Dedup {
   /** Compact a persisted near-dup index's append segments: bands/sets
     * fold to ONE row per unique content (probe-identical — probes
     * already de-duplicate by kh on read), docs rewrite as-is; the
-    * [[LangModel.compactLmCounts]] staged swap + unlogged-delta sweep
-    * bound the file count.
+    * [[IndexMaintenance.compactTables]] swap bounds the file count.
     */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     val par = math.max(1, spark.sparkContext.defaultParallelism / 4)
-    LangModel.compactTables(spark, dir, Seq(
+    IndexMaintenance.compactTables(spark, dir, Seq(
       // bands keep the band-partitioned, bucket-sorted layout the
       // screen probe prunes on (one file per band after the shuffle)
       "bands" -> (() => spark.read.parquet(s"$dir/bands")

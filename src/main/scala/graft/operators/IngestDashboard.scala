@@ -85,8 +85,7 @@ object IngestDashboard {
   def appendRepState(spark: org.apache.spark.sql.SparkSession,
       delta: DataFrame, textCol: String, dir: String,
       alpha: Double = Alpha, stagingPath: Option[String] = None): Unit = {
-    val (root, mode) =
-      (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     repStateOf(delta, textCol, alpha).write.mode(mode).parquet(s"$root/rep")
   }
 
@@ -107,9 +106,10 @@ object IngestDashboard {
 
   /** Compact `dir/rep` segments to one merged row per signal — the
     * [[LangModel.compactLmCounts]] contract (probe-identical: DDSketch
-    * merges are integer bucket adds; staged swap, unlogged-delta
-    * sweep). Together with compactLmCounts and compactProfileState it
-    * bounds a composed dashboard directory's file count.
+    * merges are integer bucket adds; the
+    * [[IndexMaintenance.compactTables]] swap). Together with
+    * compactLmCounts and compactProfileState it bounds a composed
+    * dashboard directory's file count.
     */
   def compactRepState(spark: org.apache.spark.sql.SparkSession,
       dir: String, alpha: Double = Alpha): Unit = {
@@ -117,6 +117,6 @@ object IngestDashboard {
     def merged() = spark.read.parquet(s"$dir/rep")
       .groupBy($"signal")
       .agg(sum($"n").as("n"), dd.dd_merge_agg($"st", alpha).as("st"))
-    LangModel.compactTables(spark, dir, Seq("rep" -> (() => merged())))
+    IndexMaintenance.compactTables(spark, dir, Seq("rep" -> (() => merged())))
   }
 }

@@ -363,8 +363,7 @@ object LangModel {
       delta: DataFrame, textCol: String, dir: String,
       stagingPath: Option[String] = None): Unit = {
     val (c12, c1, cw) = countsOf(delta, textCol)
-    val (root, mode) =
-      (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     // three disjoint sub-tables → three CONCURRENT jobs (ParJobs):
     // at micro-batch scale the three job-launch/commit floors were
     // the appender's wall time
@@ -414,76 +413,15 @@ object LangModel {
     * contract for the additive-counts index: counts are by-key sums,
     * so replacing N segment files with their merged sum is
     * PROBE-IDENTICAL (bit-exact, [[lmCounts]] merges either way) while
-    * probe cost and file count stop growing with batch count. Write
-    * goes through a staging dir + rename swap so a crash mid-compact
-    * leaves either the old segments or the new merged one, never a
-    * mix; the batchlog is untouched (compaction changes layout, not
-    * model content). Replay idempotence needs one more step: orphaned
-    * `b<id>_*` deltas of a batch that crashed before its batchlog row
-    * must be SWEPT, not folded into the merge — folding erases the
-    * `b<id>` name, so the batch's replay would find nothing to sweep
-    * and re-append, double-counting
-    * ([[IndexMaintenance.sweepUnloggedBatchFiles]]).
+    * probe cost and file count stop growing with batch count. The
+    * swap is [[IndexMaintenance.compactTables]]'s.
     */
   def compactLmCounts(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
-    compactTables(spark, dir, Seq(
+    IndexMaintenance.compactTables(spark, dir, Seq(
       "c12" -> (() => lmCounts(spark, dir)._1),
       "c1" -> (() => lmCounts(spark, dir)._2),
       "cw" -> (() => lmCounts(spark, dir)._3)))
-
-  /** Shared compact engine (see [[compactLmCounts]]): recovery
-    * preamble over every table, unlogged-delta sweep, then the
-    * per-table staged swap with CHECKED renames. `tables` maps each
-    * live sub-directory to a THUNK of its merged replacement frame:
-    * `spark.read.parquet` lists files eagerly, so the reader must be
-    * constructed only after the preamble has restored `live` and the
-    * sweep has deleted any orphaned deltas — a frame built earlier
-    * would carry a stale listing of swept files.
-    */
-  private[operators] def compactTables(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tables: Seq[(String, () => DataFrame)],
-      partitionCols: Map[String, Seq[String]] = Map.empty): Unit = {
-    import IndexMaintenance.{renameOrThrow, deleteOrThrow}
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recovery preamble: a prior compact can only crash with `live`
-    // absent between its two renames — whichever of staged/old holds
-    // the data (staged = the new merged segment, old = the pre-compact
-    // segments; both are probe-identical) is promoted back to live
-    // BEFORE any read against the directory runs
-    tables.foreach { case (sub, _) =>
-      val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      val staged = new org.apache.hadoop.fs.Path(s"$dir/${sub}_compact")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/${sub}_old")
-      if (!fs.exists(live)) {
-        if (fs.exists(staged)) renameOrThrow(fs, staged, live)
-        else if (fs.exists(old)) renameOrThrow(fs, old, live)
-      }
-      ()
-    }
-    IndexMaintenance.sweepUnloggedBatchFiles(spark, dir, tables.map(_._1))
-    tables.foreach { case (sub, mkDf) =>
-      val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      val staged = new org.apache.hadoop.fs.Path(s"$dir/${sub}_compact")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/${sub}_old")
-      deleteOrThrow(fs, staged)
-      // a table with a disk-partitioned layout (near-dup bands) keeps
-      // it through compaction — partition pruning must survive
-      val w = mkDf().write.mode("overwrite")
-      (partitionCols.getOrElse(sub, Nil) match {
-        case Nil => w
-        case cols => w.partitionBy(cols: _*)
-      }).parquet(staged.toString)
-      // swap: live -> old, staged -> live, drop old; any crash point
-      // is recovered by the preamble on the next run, and a FAILED
-      // step throws rather than proceeding into a half-swapped layout
-      deleteOrThrow(fs, old)
-      renameOrThrow(fs, live, old)
-      renameOrThrow(fs, staged, live)
-      deleteOrThrow(fs, old)
-    }
-  }
 
   // ------------------------------------------------------------------
   // Order-3: interpolated Kneser–Ney over trigrams — the form
@@ -646,8 +584,7 @@ object LangModel {
       delta: DataFrame, textCol: String, dir: String,
       stagingPath: Option[String] = None): Unit = {
     val (c123, cw) = counts3Of(delta, textCol)
-    val (root, mode) =
-      (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     // two disjoint sub-tables → two CONCURRENT jobs (the appendLmCounts
     // ParJobs rationale: at micro-batch scale the serial job-launch +
     // parquet-commit floors were the appender's wall time)
@@ -669,8 +606,7 @@ object LangModel {
       delta: DataFrame, textCol: String, dir: String,
       stagingPath: Option[String] = None): Unit = {
     val (c123, _) = counts3Of(delta, textCol)
-    val (root, mode) =
-      (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     c123.write.mode(mode).parquet(s"$root/c123")
   }
 
@@ -700,7 +636,7 @@ object LangModel {
     */
   def compactLm3Counts(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
-    compactTables(spark, dir, Seq(
+    IndexMaintenance.compactTables(spark, dir, Seq(
       "c123" -> (() => lm3Counts(spark, dir)._1),
       "cw" -> (() => lm3Counts(spark, dir)._2)))
 }

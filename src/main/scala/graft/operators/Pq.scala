@@ -213,12 +213,8 @@ object Pq {
     (row.getInteger("m", 0), row.getInteger("k", 0), row.getInteger("dim", 0))
   }
 
-  /** Frozen-codebook delta append. With `stagingPath` unset the delta
-    * appends directly into `codes`/`vectors` (the batch path, caller
-    * owns exactly-once); with it set, the delta is written THERE
-    * (mode overwrite — replay-safe) under the same `codes`/`vectors`
-    * subdirs, for the deterministic-rename commit of
-    * [[graft.streaming.StreamingIndex.applyPqBatch]].
+  /** Frozen-codebook delta append into `codes`/`vectors` under `dir`
+    * or `stagingPath` ([[IndexMaintenance.writeTarget]]).
     */
   def appendPqIndex(spark: org.apache.spark.sql.SparkSession,
       delta: DataFrame, dir: String,
@@ -227,8 +223,7 @@ object Pq {
     // trust a caller to re-pass it
     val (m, _, dim) = indexMeta(spark, dir)
     val cb = TinyParquet.read(spark, s"$dir/codebooks")
-    val (root, mode) =
-      (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     // disjoint sub-tables → concurrent jobs (the appendLmCounts
     // ParJobs rationale: overlap the per-write job floors)
     ParJobs.run(

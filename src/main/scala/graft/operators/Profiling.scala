@@ -108,17 +108,14 @@ object Profiling {
     one.select(explode(array(rows: _*)).as("p")).select($"p.*")
   }
 
-  /** Append one delta's per-column state rows to a persisted profile
-    * directory — additive, no build phase (the appendLmCounts
-    * contract): with `stagingPath` set the rows go THERE in overwrite
-    * mode for a staged deterministic-rename commit
-    * ([[graft.streaming.StreamingIndex.applyProfileBatch]]).
+  /** Append one delta's per-column state rows to `state` under `dir`
+    * or `stagingPath` ([[IndexMaintenance.writeTarget]]) — additive,
+    * no build phase (the appendLmCounts contract).
     */
   def appendProfileState(spark: org.apache.spark.sql.SparkSession,
       delta: DataFrame, cols: Seq[String], dir: String, p: Int = 12,
       stagingPath: Option[String] = None): Unit = {
-    val (root, mode) =
-      (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     profileState(delta, cols, p).write.mode(mode).parquet(s"$root/state")
   }
 
@@ -146,41 +143,21 @@ object Profiling {
   /** Compact a persisted profile's state segments down to one merged
     * row per column — probe-identical (the merge is associative:
     * sums of sums, min of mins, max-merged registers), the
-    * [[LangModel.compactLmCounts]] staged-swap with the same
-    * crash-recovery preamble. File count stops growing with batch
-    * count.
+    * [[IndexMaintenance.compactTables]] swap. File count stops
+    * growing with batch count.
     */
   def compactProfileState(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    import IndexMaintenance.{renameOrThrow, deleteOrThrow}
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$dir/state")
-    val staged = new org.apache.hadoop.fs.Path(s"$dir/state_compact")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/state_old")
-    if (!fs.exists(live)) {
-      if (fs.exists(staged)) renameOrThrow(fs, staged, live)
-      else if (fs.exists(old)) renameOrThrow(fs, old, live)
-    }
-    // orphaned b<id>_* deltas of a crashed-before-batchlog batch must
-    // be swept BEFORE merging, or that batch's replay double-appends
-    // (IndexMaintenance.sweepUnloggedBatchFiles scaladoc)
-    IndexMaintenance.sweepUnloggedBatchFiles(spark, dir, Seq("state"))
-    val merged = spark.read.parquet(live.toString)
-      .groupBy($"col_name")
-      .agg(sum($"n_rows").as("n_rows"), sum($"n_nulls").as("n_nulls"),
-        min($"min_d").as("min_d"), max($"max_d").as("max_d"),
-        sum($"sum_dec").cast("decimal(38,2)").as("sum_dec"),
-        graft.functions.Hll.hll_merge_agg($"hll").as("hll"))
-      .select($"col_name", $"n_rows", $"n_nulls", $"min_d", $"max_d",
-        $"sum_dec", $"hll")
-    deleteOrThrow(fs, staged)
-    merged.coalesce(1).write.mode("overwrite").parquet(staged.toString)
-    deleteOrThrow(fs, old)
-    renameOrThrow(fs, live, old)
-    renameOrThrow(fs, staged, live)
-    deleteOrThrow(fs, old)
-  }
+      dir: String): Unit =
+    IndexMaintenance.compactTables(spark, dir, Seq("state" -> (() =>
+      spark.read.parquet(s"$dir/state")
+        .groupBy($"col_name")
+        .agg(sum($"n_rows").as("n_rows"), sum($"n_nulls").as("n_nulls"),
+          min($"min_d").as("min_d"), max($"max_d").as("max_d"),
+          sum($"sum_dec").cast("decimal(38,2)").as("sum_dec"),
+          graft.functions.Hll.hll_merge_agg($"hll").as("hll"))
+        .select($"col_name", $"n_rows", $"n_nulls", $"min_d", $"max_d",
+          $"sum_dec", $"hll")
+        .coalesce(1))))
 
   /** Shared one-pass skeleton: the exact statistics every profile
     * carries, plus the per-column cardinality aggregate the variant

@@ -481,6 +481,8 @@ object Retrieval {
   def compactBm25Index(spark: SparkSession, db: String): Unit = {
     import spark.implicits._
     val buckets = indexStats(spark, db).getInteger("buckets", 0)
+    // fold every segment, including those appended from another session
+    spark.catalog.refreshTable(s"$db.dfreq")
     spark.table(s"$db.dfreq")
       .groupBy($"term").agg(sum($"df").as("df"),
         max($"max_tf").as("max_tf"), min($"min_len").as("min_len"))
@@ -512,7 +514,9 @@ object Retrieval {
     *
     * Jobs: the df broadcast, then the scoring and ranking stages —
     * five in all under AQE (RetrievalSpec counts them); the 1-row
-    * stats table is read on the driver.
+    * stats table is read on the driver. The call refreshes `postings`
+    * and `dfreq` first, so a probe sees appends and compactions made
+    * from other sessions (a streaming `foreachBatch` runs in one).
     */
   def bm25TopKIndexed(spark: SparkSession, db: String,
       queries: Seq[(Long, String)], k: Int): DataFrame = {
@@ -525,6 +529,10 @@ object Retrieval {
     // (SelectedBucketsCount) and pushes the predicate into parquet
     // row-group skipping on the term-sorted files
     val qfilter = col("term").isin(qpairs.map(_._2).distinct: _*)
+    // one current view of the index: `stats` is read fresh below, and
+    // this session's cached listings of the other two may predate an
+    // append or a compaction made from another session
+    Seq("postings", "dfreq").foreach(t => spark.catalog.refreshTable(s"$db.$t"))
     // fold append segments per term (semigroup merge; exchange-free —
     // dfreq is bucketed by term). One row per term on a compacted or
     // never-appended index, so the fold is a no-op there.

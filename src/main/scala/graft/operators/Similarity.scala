@@ -264,19 +264,14 @@ object Similarity {
     (rows.map(_.getDouble("mn", 0)), rows.map(_.getDouble("dl", 0)))
   }
 
-  /** Frozen-stats delta append — same staging contract as
-    * [[Pq.appendPqIndex]]: with `stagingPath` unset the delta appends
-    * in place (batch path, caller owns exactly-once); with it set the
-    * delta is written THERE (mode overwrite — replay-safe) under the
-    * same `codes`/`vectors` subdirs, for the deterministic-rename
-    * commit of [[graft.streaming.StreamingIndex.applySq8Batch]].
+  /** Frozen-stats delta append into `codes`/`vectors` under `dir` or
+    * `stagingPath` ([[IndexMaintenance.writeTarget]]).
     */
   def appendSq8Index(spark: org.apache.spark.sql.SparkSession,
       delta: DataFrame, dir: String,
       stagingPath: Option[String] = None): Unit = {
     val (mn, dl) = sq8IndexStats(spark, dir)
-    val (root, mode) =
-      (stagingPath.getOrElse(dir), if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     // disjoint sub-tables → concurrent jobs (the appendLmCounts
     // ParJobs rationale: overlap the per-write job floors)
     ParJobs.run(
@@ -303,46 +298,14 @@ object Similarity {
     * into batch-count-many files; the rewrite is one pass per table,
     * PROBE-IDENTICAL before/after (the probe reads the directories
     * wholesale and the rank aggregate is order-free), and the file
-    * count stops growing with batch count. Swap is staged + renamed
-    * with a recovery preamble, so a crash at any point leaves a
-    * readable directory and a re-run converges. Stats and the
-    * batchlog are untouched (compaction changes layout, not content).
+    * count stops growing with batch count. The swap is
+    * [[IndexMaintenance.compactTables]]'s.
     */
   def compactSq8Index(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    import IndexMaintenance.{renameOrThrow, deleteOrThrow}
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recovery preamble first (see LangModel.compactLmCounts): a prior
-    // crash can only leave `live` missing between the two renames
-    Seq("codes", "vectors").foreach { sub =>
-      val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      val staged = new org.apache.hadoop.fs.Path(s"$dir/${sub}_compact")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/${sub}_old")
-      if (!fs.exists(live)) {
-        if (fs.exists(staged)) renameOrThrow(fs, staged, live)
-        else if (fs.exists(old)) renameOrThrow(fs, old, live)
-      }
-      ()
-    }
-    // orphaned b<id>_* deltas of a crashed-before-batchlog batch must
-    // be swept BEFORE merging, or that batch's replay double-appends
-    // (IndexMaintenance.sweepUnloggedBatchFiles scaladoc)
-    IndexMaintenance.sweepUnloggedBatchFiles(spark, dir,
-      Seq("codes", "vectors"))
-    Seq("codes", "vectors").foreach { sub =>
-      val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      val staged = new org.apache.hadoop.fs.Path(s"$dir/${sub}_compact")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/${sub}_old")
-      deleteOrThrow(fs, staged)
-      spark.read.parquet(live.toString)
-        .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-        .write.mode("overwrite").parquet(staged.toString)
-      deleteOrThrow(fs, old)
-      renameOrThrow(fs, live, old)
-      renameOrThrow(fs, staged, live)
-      deleteOrThrow(fs, old)
-    }
+    val par = math.max(1, spark.sparkContext.defaultParallelism / 4)
+    IndexMaintenance.compactTables(spark, dir, Seq("codes", "vectors").map(sub =>
+      sub -> (() => spark.read.parquet(s"$dir/$sub").coalesce(par))))
   }
 
   /** IVF-SQ8 — the composition the [[sq8TopK]] scaladoc promises
@@ -1065,12 +1028,9 @@ object Similarity {
     }
   }
 
-  /** Frozen-quantizer delta append. With `stagingPath` unset the delta
-    * files land directly in `members` (mode append — the batch path,
-    * where the caller owns exactly-once). With `stagingPath` set the
-    * delta is written THERE with mode overwrite (replay-safe) and the
-    * same partition layout as `members`, for a caller that commits via
-    * deterministic rename ([[graft.streaming.StreamingIndex]]).
+  /** Frozen-quantizer delta append into `members`, or into
+    * `stagingPath/members` with the same partition layout
+    * ([[IndexMaintenance.writeTarget]]).
     */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
       delta: DataFrame, dir: String,
@@ -1078,15 +1038,13 @@ object Similarity {
     val lay = readLayout(spark, dir)
     val asg = lay.quant.assign(delta)
       .select($"vid".as("m_vid"), $"qv".as("m_qv"), $"nrm".as("m_nrm"), $"cid")
-    val (target, mode) =
-      (stagingPath.getOrElse(s"$dir/members"),
-        if (stagingPath.isDefined) "overwrite" else "append")
+    val (root, mode) = IndexMaintenance.writeTarget(dir, stagingPath)
     lay.cidToL1 match {
       case Some(map) =>
         asg.join(broadcast(map), "cid")
-          .write.mode(mode).partitionBy("l1").parquet(target)
+          .write.mode(mode).partitionBy("l1").parquet(s"$root/members")
       case None =>
-        asg.write.mode(mode).partitionBy("cid").parquet(target)
+        asg.write.mode(mode).partitionBy("cid").parquet(s"$root/members")
     }
   }
 
@@ -1128,38 +1086,23 @@ object Similarity {
     * compactBm25Index symmetry): each append adds one file per
     * touched cell, so a long append history fragments the member
     * directories. Rewrite = one shuffle by cell (one file per cell
-    * after), swapped in via the storage-agnostic Hadoop FS rename.
-    * Probe results are bit-identical before/after (the probe never
-    * depends on file layout — SimilaritySpec pins it).
+    * after), partitioned as the build wrote it and swapped in by
+    * [[IndexMaintenance.compactTables]]. Probe results are
+    * bit-identical before/after (the probe never depends on file
+    * layout — SimilaritySpec pins it).
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import IndexMaintenance.{renameOrThrow, deleteOrThrow}
-    val tmp = s"$dir/members_compacting"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$dir/members")
-    // recovery preamble: a prior compact can only crash with `live`
-    // absent between its delete and rename — promote the finished
-    // rewrite back (it holds the full member set)
-    if (!fs.exists(live) && fs.exists(new org.apache.hadoop.fs.Path(tmp)))
-      renameOrThrow(fs, new org.apache.hadoop.fs.Path(tmp), live)
-    // orphaned b<id>_* deltas of a crashed-before-batchlog batch must
-    // be swept BEFORE the rewrite, or that batch's replay
-    // double-appends (IndexMaintenance.sweepUnloggedBatchFiles)
-    IndexMaintenance.sweepUnloggedBatchFiles(spark, dir, Seq("members"))
     // partition column follows the layout: l1 for two-level, cid flat
     val hier = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/centroids_l1")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
     val pcol = if (hier) "l1" else "cid"
-    spark.read.parquet(s"$dir/members")
-      .withColumn(pcol, col(pcol).cast("long"))
-      .repartition(col(pcol))
-      .write.mode("overwrite").partitionBy(pcol).parquet(tmp)
-    deleteOrThrow(fs, live)
-    renameOrThrow(fs, new org.apache.hadoop.fs.Path(tmp), live)
-    ()
+    IndexMaintenance.compactTables(spark, dir, Seq("members" -> (() =>
+      spark.read.parquet(s"$dir/members")
+        .withColumn(pcol, col(pcol).cast("long"))
+        .repartition(col(pcol)))),
+      partitionCols = Map("members" -> Seq(pcol)))
   }
 
   /** Semantic deduplication (SemDeDup-shaped): cluster the corpus with

@@ -1213,7 +1213,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = JFiles.createTempDirectory("graft-ivfck").toString
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = StreamingIndex.ivfIndexSink(stream, 64, streamed, ckpt)
+    val q = StreamingIndex.sink(stream, ckpt)(StreamingIndex.applyIvfBatch(_, 64, streamed, _))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(s"$streamed/batchlog").count() >= 2)
     // file-source batches arrive in listing order: batch 0 = files(0)
@@ -1255,7 +1255,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = JFiles.createTempDirectory("graft-pqck").toString
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = StreamingIndex.pqIndexSink(stream, streamed, ckpt)
+    val q = StreamingIndex.sink(stream, ckpt)(StreamingIndex.applyPqBatch(_, streamed, _))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(s"$streamed/batchlog").count() >= 2)
     val b0 = spark.read.parquet(files.head)
@@ -1296,7 +1296,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = JFiles.createTempDirectory("graft-sq8ck").toString
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = StreamingIndex.sq8IndexSink(stream, streamed, ckpt)
+    val q = StreamingIndex.sink(stream, ckpt)(StreamingIndex.applySq8Batch(_, streamed, _))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(s"$streamed/batchlog").count() >= 2)
     val b0 = spark.read.parquet(files.head)
@@ -1337,7 +1337,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = JFiles.createTempDirectory("graft-lmck").toString
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = StreamingIndex.lmCountsSink(stream, "text", streamed, ckpt)
+    val q = StreamingIndex.sink(stream, ckpt)(StreamingIndex.applyLmBatch(_, "text", streamed, _))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(s"$streamed/batchlog").count() >= 2)
     val scoreSet = docs.limit(40).cache()
@@ -1468,7 +1468,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = JFiles.createTempDirectory("graft-clipck").toString
     val stream = spark.readStream.schema(clips.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = StreamingIndex.clipIndexSink(stream, streamed, ckpt)
+    val q = StreamingIndex.sink(stream, ckpt)(StreamingIndex.applyClipBatch(_, streamed, _))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(s"$streamed/batchlog").count() >= 2)
     def pairs(d: String) = StreamingIndex.probeClipPairs(spark, d)
@@ -1523,8 +1523,8 @@ class StreamingSpec extends SparkSpec {
     try {
       val stream = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
-      val q = StreamingIndex.bm25IndexSink(stream, "doc_id", "text",
-        "bmstr", ckpt)
+      val q = StreamingIndex.sink(stream, ckpt)(
+        StreamingIndex.applyBm25Batch(_, "doc_id", "text", "bmstr", _))
       q.processAllAvailable(); q.stop()
       val applied = spark.read.parquet(s"$whS/batchlog").count()
       assert(applied >= 2, s"want multiple applied batches, got $applied")
@@ -1743,10 +1743,10 @@ class StreamingSpec extends SparkSpec {
     }
     val dir = JFiles.createTempDirectory("graft-ndidx").toString
     val ckpt = JFiles.createTempDirectory("graft-ndck").toString
-    val q = StreamingIndex.nearDupSink(
+    val q = StreamingIndex.sink(
       spark.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", "1").parquet(src),
-      "doc_id", "text", dir, ckpt)
+      ckpt)(StreamingIndex.applyNearDupBatch(_, "doc_id", "text", dir, _))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(s"$dir/batchlog").count() >= 2)
     def probed() = rows(Dedup.nearDupProbeIndexed(
@@ -1812,7 +1812,8 @@ class StreamingSpec extends SparkSpec {
     val ckpt = JFiles.createTempDirectory("graft-dashck").toString
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = StreamingIndex.dashboardSink(stream, "text", cols, dir, ckpt)
+    val q = StreamingIndex.sink(stream, ckpt)(
+      StreamingIndex.applyDashboardBatch(_, "text", cols, dir, _))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(s"$dir/batchlog").count() >= 2)
     // family 1: LM — composed segments score like the one-shot train
@@ -2085,7 +2086,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = JFiles.createTempDirectory("graft-profck").toString
     val stream = spark.readStream.schema(li.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = StreamingIndex.profileSink(stream, cols, streamed, ckpt)
+    val q = StreamingIndex.sink(stream, ckpt)(StreamingIndex.applyProfileBatch(_, cols, streamed, _))
     q.processAllAvailable(); q.stop()
     assert(spark.read.parquet(s"$streamed/batchlog").count() >= 2)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
