@@ -655,15 +655,15 @@ object Dedup {
       () => {
         val br = bandRows(minhashSignatures(uniq, "kh", "txt", n, k), bands, k / bands)
           .select($"doc".as("kh"), $"band", $"bucket")
-        // micro-batch regime (the StreamingIndex.microPlan rule): band
-        // rows already on ONE partition (a coalesce(1)'d micro-batch
-        // delta) skip the band repartition — one sorted task's dynamic
-        // partitioning writes the SAME one-file-per-band layout with
-        // zero exchanges; anything multi-partition keeps the
-        // repartition so each band still lands as one file. Decided
-        // from the PLANNED partitioning: `br.rdd` would run the
-        // collapse's shuffle stages under AQE, and the write below
-        // would then run them again
+        // micro-input regime (graft.plans.DropMicroShuffles): band
+        // rows already on ONE partition (a micro-batch delta, whose
+        // exchanges the rule drops) skip the band repartition — one
+        // sorted task's dynamic partitioning writes the SAME
+        // one-file-per-band layout with zero exchanges; anything
+        // multi-partition keeps the repartition so each band still
+        // lands as one file. Decided from the PLANNED partitioning:
+        // `br.rdd` would run the collapse's shuffle stages under AQE,
+        // and the write below would then run them again
         (if (graft.plans.partitions(br).contains(1)) br else br.repartition($"band"))
           .sortWithinPartitions($"band", $"bucket")
           .write.mode(mode).partitionBy("band").parquet(s"$root/bands")

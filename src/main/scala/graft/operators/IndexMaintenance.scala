@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.streaming.{BatchLog, StreamingIndex}
+import graft.streaming.BatchLog
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -16,8 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * order:
   *  1. the batchlog (`dir/batchlog`, a driver-side [[BatchLog]]):
   *     a logged id is a no-op (`false`);
-  *  2. [[StreamingIndex.microPlan]], then the emptiness probe (an
-  *     empty batch writes nothing but still logs its id);
+  *  2. the emptiness probe (an empty batch writes nothing but still
+  *     logs its id). A batch of one small split plans with no shuffle
+  *     ([[graft.plans.DropMicroShuffles]]), so each sub-table's
+  *     derivation runs as one job;
   *  3. the sweep: delete every `b<id>_*` file of THIS id that a
   *     crashed attempt already moved into a live sub-table;
   *  4. the stage: the family writes its delta to
@@ -110,10 +112,9 @@ private[graft] object IndexMaintenance {
     if (BatchLog.contains(spark, logPath, batchId)) return false
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mb = StreamingIndex.microPlan(batch)
     val shared =
-      if (shareScan) mb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else mb
+      if (shareScan) batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else batch
     val applied = try {
       val nonEmpty = if (shareScan) shared.count() > 0L else !shared.isEmpty
       nonEmpty && {

@@ -336,6 +336,16 @@ object Retrieval {
     row
   }
 
+  /** Drop this session's cached relation of `db.table`, so the next
+    * `spark.table` lists its files afresh and sees appends and
+    * compactions made from other sessions. Only the cache entry goes:
+    * `spark.catalog.refreshTable` would first re-list the stale
+    * relation, a listing the next read then repeats.
+    */
+  private def forgetListing(spark: SparkSession, db: String, table: String): Unit =
+    spark.sessionState.catalog.invalidateCachedTable(
+      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
+
   /** Build the BM25 index ONCE as persisted tables — the
     * build-vs-probe separation that lets repeated query batches skip
     * the corpus tokenize pass entirely. Postings and document
@@ -482,7 +492,7 @@ object Retrieval {
     import spark.implicits._
     val buckets = indexStats(spark, db).getInteger("buckets", 0)
     // fold every segment, including those appended from another session
-    spark.catalog.refreshTable(s"$db.dfreq")
+    forgetListing(spark, db, "dfreq")
     spark.table(s"$db.dfreq")
       .groupBy($"term").agg(sum($"df").as("df"),
         max($"max_tf").as("max_tf"), min($"min_len").as("min_len"))
@@ -514,9 +524,10 @@ object Retrieval {
     *
     * Jobs: the df broadcast, then the scoring and ranking stages —
     * five in all under AQE (RetrievalSpec counts them); the 1-row
-    * stats table is read on the driver. The call refreshes `postings`
-    * and `dfreq` first, so a probe sees appends and compactions made
-    * from other sessions (a streaming `foreachBatch` runs in one).
+    * stats table is read on the driver. The call drops this session's
+    * cached listings of `postings` and `dfreq` first, so a probe sees
+    * appends and compactions made from other sessions (a streaming
+    * `foreachBatch` runs in one).
     */
   def bm25TopKIndexed(spark: SparkSession, db: String,
       queries: Seq[(Long, String)], k: Int): DataFrame = {
@@ -532,7 +543,7 @@ object Retrieval {
     // one current view of the index: `stats` is read fresh below, and
     // this session's cached listings of the other two may predate an
     // append or a compaction made from another session
-    Seq("postings", "dfreq").foreach(t => spark.catalog.refreshTable(s"$db.$t"))
+    Seq("postings", "dfreq").foreach(forgetListing(spark, db, _))
     // fold append segments per term (semigroup merge; exchange-free —
     // dfreq is bucketed by term). One row per term on a compacted or
     // never-appended index, so the fold is a no-op there.

@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
 /** SparkSessionExtensions entry point: exposes the engine's custom
-  * Catalyst expressions to SQL. Installed at session build time
-  * (`.withExtensions(new GraftExtensions)` in [[graft.GraftSession]]).
+  * Catalyst expressions to SQL and adds one physical rule,
+  * [[DropMicroShuffles]], to AQE's query-stage preparation. Installed
+  * at session build time (`.withExtensions(new GraftExtensions)` in
+  * [[graft.GraftSession]]).
   *
   * SQL surface:
   *   graft_shard_code(s)        — murmur3_128(s).asInt & MaxInt (op #12)
@@ -23,7 +25,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
   *   graft_cms_estimate(h, sk, d)   — count-min frequency estimate
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.builders.foreach { case (name, builder) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
@@ -31,6 +33,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "graft", name),
         (exprs: Seq[Expression]) => builder(exprs)))
     }
+    e.injectQueryStagePrepRule(_ => DropMicroShuffles)
+  }
 }
 
 object GraftExtensions {

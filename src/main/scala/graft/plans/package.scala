@@ -1,30 +1,38 @@
 package graft
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 package object plans {
 
   /** The number of partitions `ds` will run as, from its physical plan
     * and with no job (`ds.rdd` runs the shuffle stages under AQE). An
     * exchange reports its PLANNED count, not what AQE coalesces it to.
-    * Down from the root through unary nodes, the first known
-    * partitioning answers; at a file scan or `LogicalRDD` leaf
-    * (`UnknownPartitioning(0)`) the splits are counted. Any other shape
-    * is `None`, and the caller takes its conservative branch.
     */
-  def partitions(ds: Dataset[_]): Option[Int] = {
-    def walk(p: SparkPlan): Option[Int] = p match {
-      case _ if p.outputPartitioning.numPartitions > 0 => Some(p.outputPartitioning.numPartitions)
-      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
-      case s: RDDScanExec => Some(s.rdd.getNumPartitions)
-      case u: UnaryExecNode => walk(u.child)
-      case _ => None
-    }
-    walk(ds.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    })
+  def partitions(ds: Dataset[_]): Option[Int] = partitions(ds.queryExecution.executedPlan)
+
+  /** The planned partition count of `p`: down from `p` through unary
+    * nodes, the first known partitioning answers; at a file scan,
+    * `LogicalRDD` or local-rows leaf (`UnknownPartitioning(0)`) the
+    * splits are counted, and a cached frame answers with its cached
+    * plan. Any other shape is `None`, and the caller takes its
+    * conservative branch, as it does for a scan whose partitions a
+    * dynamic-pruning subquery has yet to select. [[DropMicroShuffles]]
+    * decides on this count.
+    */
+  private[graft] def partitions(p: SparkPlan): Option[Int] = p match {
+    case a: AdaptiveSparkPlanExec => partitions(a.executedPlan)
+    case _ if p.outputPartitioning.numPartitions > 0 => Some(p.outputPartitioning.numPartitions)
+    case s: FileSourceScanExec if s.partitionFilters.exists(
+        _.exists(_.isInstanceOf[DynamicPruningExpression])) => None
+    case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+    case s: RDDScanExec => Some(s.rdd.getNumPartitions)
+    case s: LocalTableScanExec => Some(s.inputRDD.getNumPartitions)
+    case m: InMemoryTableScanExec => partitions(m.relation.cachedPlan)
+    case u: UnaryExecNode => partitions(u.child)
+    case _ => None
   }
 }

@@ -22,11 +22,20 @@ final class PartitionedSink(spark: SparkSession) {
 
   /** Idempotent per-partition load: dynamic overwrite replaces only
     * the partitions present in `df` (a re-run of one day's load can't
-    * duplicate or clobber other days).
+    * duplicate or clobber other days). The dynamic mode lasts for this
+    * one write: every other overwrite in the session keeps the
+    * session's mode (static by default, which replaces the whole table
+    * or directory). `insertInto` ignores a per-write
+    * `partitionOverwriteMode` option (Spark 4.1), so the session
+    * setting is set for the call and restored after it; concurrent
+    * writes on the same session would see it.
     */
   def overwritePartitions(df: DataFrame, table: String): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").insertInto(table)
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "dynamic")
+    try df.write.mode("overwrite").insertInto(table)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Append (at-least-once; pair with staged commit for exactly-once). */

@@ -138,8 +138,7 @@ private[graft] object BatchLog {
         java.nio.file.StandardOpenOption.READ)
       try ch.force(true) finally ch.close()
     }
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(tmp, conf))
+    val fr = graft.operators.TinyParquet.open(conf, tmp)
     try require(fr.getRecordCount == 1L, s"torn batchlog row at $tmp")
     finally fr.close()
     if (!fs.rename(tmp, dest)) {

@@ -34,44 +34,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingIndex {
 
-  /** Bytes above which [[microPlan]] leaves a batch alone (the
-    * Tables.spread bound, one level up): past this size a single
-    * split carries enough rows that parallel aggregation can pay for
-    * its exchanges.
-    */
-  private val MicroBatchMaxBytes: Long = 32L * 1024 * 1024
-
-  /** The micro-batch PLAN regime (the job-floor fix the r17 verdict
-    * ranked first): a batch that arrives as ONE scan split reports
-    * `UnknownPartitioning(1)`, so every per-family `groupBy` below it
-    * still plans an Exchange — and with AQE each exchange runs as its
-    * own stage JOB, which at micro-batch scale is the appliers' whole
-    * wall time (measured per phase in r18: an LM apply was 10 jobs /
-    * ~0.5 s, a dashboard apply 26 jobs / ~1.4 s, nearly all job-launch
-    * floor). `coalesce(1)` on an already-1-partition plan moves no
-    * data but reports `SinglePartition`, which satisfies every
-    * aggregation's required distribution — each sub-table derivation
-    * collapses to ONE single-stage job with zero exchanges.
-    *
-    * Scale-adaptive by the spread rule's inverse: applied ONLY when
-    * the batch is already a single split AND small (stats-estimated
-    * under [[MicroBatchMaxBytes]]) — a production multi-split batch,
-    * or a spread compute output (e.g. the clip gates' decode stage,
-    * 32 partitions), passes through untouched and keeps the fully
-    * parallel plan. Row-multiset-invisible: same rows, same
-    * aggregation results, only the exchange placement changes.
-    * Real foreachBatch frames are LogicalRDD-backed and carry their
-    * source plan's stats, so the size gate sees a real estimate;
-    * StreamingSpec pins that, since without those stats the regime
-    * would never engage. A split count the plan does not give
-    * ([[graft.plans.partitions]]) keeps the parallel plan.
-    */
-  private[graft] def microPlan(batch: DataFrame): DataFrame = {
-    val small = batch.queryExecution.analyzed.stats.sizeInBytes <
-      MicroBatchMaxBytes
-    if (small && graft.plans.partitions(batch).contains(1)) batch.coalesce(1) else batch
-  }
-
   /** foreachBatch sink: keep an index current from a stream by calling
     * `apply(batch, batchId)` (one of the `apply*Batch` below) on every
     * micro-batch. The caller owns the checkpoint; a restart from it
@@ -108,17 +70,16 @@ object StreamingIndex {
     if (BatchLog.contains(spark, logPath, batchId)) return false
     // cheap emptiness probe; an empty trigger still logs its id so a
     // re-delivered empty batch stays a no-op
-    val mb = microPlan(batch)
     val applied =
-      if (mb.isEmpty) false
+      if (batch.isEmpty) false
       else {
         if (spark.catalog.tableExists(s"$db.stats"))
           // append reads the recorded bucket layout from the index
           graft.operators.Retrieval.appendToBm25Index(
-            mb, idCol, textCol, db)
+            batch, idCol, textCol, db)
         else
           graft.operators.Retrieval.buildBm25Index(
-            mb, idCol, textCol, db, buckets)
+            batch, idCol, textCol, db, buckets)
         true
       }
     BatchLog.append(spark, logPath, batchId)

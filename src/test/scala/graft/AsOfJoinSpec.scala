@@ -21,12 +21,19 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("as-of join plans one exchange (union + single window sort)") {
-    import spark.implicits._
-    val left = Seq((1L, 10L)).toDF("k", "tms")
-    val right = Seq((1L, 8L, 1.0)).toDF("k", "tms", "v")
-    val p = AsOfJoin.asOfInner(left, right, "k", "tms", Seq("v"))
-      .queryExecution.executedPlan.toString
+    def asOf(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      val left = Seq((1L, 10L)).toDF("k", "tms")
+      val right = Seq((1L, 8L, 1.0)).toDF("k", "tms", "v")
+      AsOfJoin.asOfInner(left, right, "k", "tms", Seq("v"))
+    }
+    // planned without DropMicroShuffles (Jobs.ruleFree), as above inputs
+    // of more than one split
+    val p = Jobs.ruleFree(spark)(s => asOf(s).queryExecution.executedPlan.toString)
     assert("Exchange".r.findAllIn(p).size == 1, s"expected exactly 1 exchange:\n$p")
     assert(!p.contains("Join"), s"no join node expected (window-composed):\n$p")
+    // two one-row inputs, one split each: the rule drops that exchange
+    val micro = asOf(spark).queryExecution.executedPlan
+    assert(Jobs.shuffles(micro).isEmpty, s"unexpected shuffle:\n$micro")
   }
 }

@@ -341,11 +341,19 @@ class LoaderJobSpec extends SparkSpec {
     val day1 = Seq((1, "a", "2017-01-01"), (2, "b", "2017-01-01")).toDF("k", "v", "dt")
     val day2 = Seq((3, "c", "2017-01-02")).toDF("k", "v", "dt")
     sink.ensureTarget("psdb.pt", day1, "dt")
-    sink.overwritePartitions(day1, "psdb.pt")
-    sink.overwritePartitions(day2, "psdb.pt")
-    // re-load day1 with corrected data: replaces ONLY day1
-    val day1Fixed = Seq((9, "z", "2017-01-01")).toDF("k", "v", "dt")
-    sink.overwritePartitions(day1Fixed, "psdb.pt")
+    // the session stays in static mode: the sink's dynamic mode must be
+    // its own write's, and must not leak into the session
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(modeKey)
+    spark.conf.set(modeKey, "static")
+    try {
+      sink.overwritePartitions(day1, "psdb.pt")
+      sink.overwritePartitions(day2, "psdb.pt")
+      // re-load day1 with corrected data: replaces ONLY day1
+      val day1Fixed = Seq((9, "z", "2017-01-01")).toDF("k", "v", "dt")
+      sink.overwritePartitions(day1Fixed, "psdb.pt")
+      assert(spark.conf.get(modeKey) == "static", "the sink changed the session's overwrite mode")
+    } finally prior.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
     val rows = spark.table("psdb.pt").orderBy("k").collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(3, 9))
     // expiry drops old partitions

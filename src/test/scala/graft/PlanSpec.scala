@@ -13,10 +13,15 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The plan `q` gets without [[graft.plans.DropMicroShuffles]] (see
+    * [[Jobs.ruleFree]]): the exchanges it keeps above inputs of more
+    * than one split, where the test tables' single split plans none.
+    */
+  private def ruleFreePlan(q: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame): String =
+    Jobs.ruleFree(spark)(s => plan(q(s)))
+
   test("plans.partitions reads the planned partition count without running a job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.col
-    import scala.jdk.CollectionConverters._
     val li = Tables(spark, sf).lineitem
     val multi = java.nio.file.Files.createTempDirectory("graft-parts").toString
     spark.range(0, 3000, 1, 3).write.mode("overwrite").parquet(multi)
@@ -26,38 +31,19 @@ class PlanSpec extends SparkSpec {
       "filtered scan" -> li.filter(col("l_quantity") > 10),
       "multi-file scan" -> files,
       "coalesce(1) + agg" -> li.coalesce(1).groupBy("l_returnflag").count(),
+      // one small split: DropMicroShuffles plans the aggregate in the scan's partition
       "aggregate" -> li.groupBy("l_returnflag").count(),
+      "multi-file aggregate" -> files.groupBy((col("id") % 3).as("m")).count(),
       "repartition(7)" -> li.repartition(7),
       "union" -> li.union(li))
-    val (group, marker) = (s"parts-${System.nanoTime()}", s"marker-${System.nanoTime()}")
-    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(jobs.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val got = try {
-      sc.setJobGroup(group, "planned partitions", interruptOnCancel = false)
-      val got = try shapes.map { case (n, df) => n -> plans.partitions(df) }.toMap
-        finally sc.clearJobGroup()
-      // jobs reach the listener in order: once the marker's start is
-      // seen, any job of the group would have been seen too
-      sc.setJobGroup(marker, "listener barrier", interruptOnCancel = false)
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      got
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.contains(marker), "listener never saw the marker job")
-    assert(!jobs.asScala.contains(group), "reading the partition count must run no job")
+    val (got, jobs) = Jobs.counted(spark)(shapes.map { case (n, df) => n -> plans.partitions(df) }.toMap)
+    assert(jobs == 0, "reading the partition count must run no job")
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(got == Map(
       "scan" -> Some(1), "filtered scan" -> Some(1), "multi-file scan" -> Some(3),
-      "coalesce(1) + agg" -> Some(1),
+      "coalesce(1) + agg" -> Some(1), "aggregate" -> Some(1),
       // the planned exchange, not what AQE coalesces it to at run time
-      "aggregate" -> Some(shufflePartitions),
+      "multi-file aggregate" -> Some(shufflePartitions),
       "repartition(7)" -> Some(7), "union" -> None))
     // a scan's count is the RDD's split count
     Seq("scan", "filtered scan", "multi-file scan").foreach { n =>
@@ -271,16 +257,19 @@ class PlanSpec extends SparkSpec {
   test("q78/q79 group ops are a single hash exchange on the group key") {
     import graft.operators.Sampling
     import org.apache.spark.sql.functions._
-    val docs = Tables(spark, sf).documents.select(col("source"), col("doc_id"), col("text"))
-    for ((name, df) <- Seq(
-        "capPerGroup" -> Sampling.capPerGroup(docs, "source", "doc_id", 10),
-        "packByTokenBudget" -> Sampling.packByTokenBudget(docs, "source",
-          "doc_id", size(split(col("text"), " ")), 2000L))) {
-      val p = plan(df)
+    def docs(s: org.apache.spark.sql.SparkSession) =
+      Tables(s, sf).documents.select(col("source"), col("doc_id"), col("text"))
+    for ((name, q) <- Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
+        "capPerGroup" -> (s => Sampling.capPerGroup(docs(s), "source", "doc_id", 10)),
+        "packByTokenBudget" -> (s => Sampling.packByTokenBudget(docs(s), "source",
+          "doc_id", size(split(col("text"), " ")), 2000L)))) {
+      val p = ruleFreePlan(q)
       assert("Exchange".r.findAllIn(p).size == 1,
         s"$name should shuffle exactly once, on the group key:\n$p")
       assert(p.contains("hashpartitioning(source"),
         s"$name should partition by the group column:\n$p")
+      val micro = plan(q(spark))
+      assert(!micro.contains("Exchange"), s"$name over one small split should not shuffle:\n$micro")
     }
   }
 
@@ -376,42 +365,55 @@ class PlanSpec extends SparkSpec {
   test("interval sweep is one data exchange; sumMap is one exchange of states") {
     import graft.operators.Intervals
     import org.apache.spark.sql.functions._
-    val ev = Tables(spark, sf).events
-      .withColumn("sms", unix_millis(col("ts")))
-      .withColumn("ems", col("sms") + round(col("value") * 1000).cast("long"))
-    val pSweep = plan(Intervals.maxIntersections(ev, col("event_type"), col("sms"), col("ems")))
+    val sweep = (s: org.apache.spark.sql.SparkSession) => {
+      val ev = Tables(s, sf).events
+        .withColumn("sms", unix_millis(col("ts")))
+        .withColumn("ems", col("sms") + round(col("value") * 1000).cast("long"))
+      Intervals.maxIntersections(ev, col("event_type"), col("sms"), col("ems"))
+    }
+    val pSweep = ruleFreePlan(sweep)
     // union → one hash exchange for the window sort → partial+final agg
     assert("Exchange hashpartitioning".r.findAllIn(pSweep).size == 1,
       s"sweep must shuffle once:\n$pSweep")
-    val li = Tables(spark, sf).lineitem
-    val pMap = plan(li
+    val sumMap = (s: org.apache.spark.sql.SparkSession) => Tables(s, sf).lineitem
       .select(col("l_returnflag"),
         array(col("l_linenumber").cast("long")).as("ks"),
         array(col("l_quantity").cast("long")).as("vs"))
       .groupBy(col("l_returnflag"))
-      .agg(graft.functions.SumMap.sum_map_agg(col("ks"), col("vs")).as("m")))
+      .agg(graft.functions.SumMap.sum_map_agg(col("ks"), col("vs")).as("m"))
+    val pMap = ruleFreePlan(sumMap)
     // the aggregate must be two-phase: partial map states before the
     // exchange, one exchange total (vs explode+groupBy's entry shuffle)
     assert("Exchange hashpartitioning".r.findAllIn(pMap).size == 1,
       s"sumMap must exchange once:\n$pMap")
     assert(pMap.contains("ObjectHashAggregate"),
       s"sumMap must run as a typed (partial-merge) aggregate:\n$pMap")
+    // over one small split (the sweep: a union of two) neither plan
+    // shuffles at all
+    Seq(sweep, sumMap).map(q => plan(q(spark))).foreach { p =>
+      assert(!p.contains("Exchange"), s"unexpected shuffle:\n$p")
+    }
   }
 
   test("scaled interval sweeps parallelize by (key, range), carry on tiny frames") {
     import graft.operators.Intervals
     import org.apache.spark.sql.functions._
-    val ev = Tables(spark, sf).events
-      .withColumn("sms", unix_millis(col("ts")))
-      .withColumn("ems", col("sms") + round(col("value") * 1000).cast("long"))
-    val p = plan(Intervals.maxIntersectionsScaled(
-      ev, col("user_id"), col("sms"), col("ems"), nRanges = 16))
+    val sweep = (s: org.apache.spark.sql.SparkSession) => {
+      val ev = Tables(s, sf).events
+        .withColumn("sms", unix_millis(col("ts")))
+        .withColumn("ems", col("sms") + round(col("value") * 1000).cast("long"))
+      Intervals.maxIntersectionsScaled(ev, col("user_id"), col("sms"), col("ems"), nRanges = 16)
+    }
+    val p = ruleFreePlan(sweep)
     // the heavy window must sort by (k, rid) — range is in the key
     assert(p.contains("hashpartitioning(k") && p.contains("rid"),
       s"sweep window must partition by (k, rid):\n$p")
     // span seed is a broadcast 1-row aggregate, not a shuffle join
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"span must broadcast:\n$p")
+    // over the test table's one small split the sweep plans no shuffle
+    val micro = sweep(spark).queryExecution.executedPlan
+    assert(Jobs.shuffles(micro).isEmpty, s"unexpected shuffle:\n$micro")
   }
 
   test("skew interval sweeps collapse duplicates in a partial hash aggregate") {
@@ -465,5 +467,111 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), s"map-side signals must not join:\n$p")
     assert("Scan parquet".r.findAllIn(p).size == 1, s"expected one scan:\n$p")
     assert(!p.contains("Generate"), s"no explode in the map-side form:\n$p")
+  }
+
+  // DropMicroShuffles: the shuffle above a single small split goes;
+  // everything else plans as without the rule (Jobs.ruleFree plans
+  // without AQE, so without its query-stage preparation rules)
+
+  private def sorted(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
+    rows.map(_.toString).toSeq.sorted
+
+  /** Shapes over single-split parquet under 32 MiB (sf0.001 tables). */
+  private val microShapes: Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)] = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    Seq(
+      "aggregate" -> (s => Tables(s, sf).lineitem.groupBy("l_returnflag", "l_linestatus")
+        .agg(sum("l_quantity").as("q"), count(lit(1)).as("n"))),
+      "window" -> (s => Tables(s, sf).orders.select(col("o_custkey"), col("o_orderkey"),
+        row_number().over(Window.partitionBy("o_custkey").orderBy("o_orderkey")).as("rn"))),
+      "global sort" -> (s => Tables(s, sf).orders.select("o_orderkey", "o_totalprice")
+        .orderBy(col("o_totalprice").desc, col("o_orderkey"))),
+      "sort-merge join" -> (s => Tables(s, sf).orders
+        .join(Tables(s, sf).customer.hint("merge"), col("o_custkey") === col("c_custkey"))
+        .select("o_orderkey", "c_name")),
+      "rollup" -> (s => Tables(s, sf).lineitem.rollup("l_returnflag", "l_linestatus")
+        .agg(sum("l_quantity").as("q"))),
+      "union aggregate" -> (s => Tables(s, sf).orders.filter(col("o_orderkey") % 2 === 0)
+        .union(Tables(s, sf).orders.filter(col("o_orderkey") % 3 === 0))
+        .groupBy("o_orderpriority").count()))
+  }
+
+  test("DropMicroShuffles: aggregate, window, global sort, sort-merge join, rollup and union over single-split inputs plan no shuffle and run one job") {
+    microShapes.foreach { case (name, q) =>
+      val df = q(spark)
+      assert(Jobs.shuffles(df).isEmpty, s"$name plans a shuffle:\n${df.queryExecution.executedPlan}")
+      val (rows, jobs) = Jobs.counted(spark)(df.collect())
+      assert(jobs == 1, s"$name ran $jobs jobs")
+      val (want, ruleFreeShuffles) = Jobs.ruleFree(spark) { s =>
+        val d = q(s)
+        (d.collect(), Jobs.shuffles(d).size)
+      }
+      assert(ruleFreeShuffles > 0, s"$name has no shuffle to drop even without the rule")
+      if (name == "global sort") assert(rows.toSeq == want.toSeq, name)
+      else assert(sorted(rows) == sorted(want), name)
+    }
+  }
+
+  test("DropMicroShuffles: a multi-split input, or one with no size estimate under 32 MiB, plans the exchanges it plans without the rule") {
+    import org.apache.spark.sql.functions._
+    val multi = java.nio.file.Files.createTempDirectory("graft-micro-multi").toString
+    spark.range(0, 3000, 1, 3).write.mode("overwrite").parquet(multi)
+    // an RDD-backed frame carries no origin stats: its estimate is
+    // spark.sql.defaultSizeInBytes, so one split is not enough
+    val rddFrame = (s: org.apache.spark.sql.SparkSession) => s.createDataFrame(
+      s.sparkContext.parallelize((0 until 100).map(i => org.apache.spark.sql.Row(i.toLong)), 1),
+      new org.apache.spark.sql.types.StructType().add("id", "long"))
+    val shapes: Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)] = Seq(
+      "multi-split aggregate" -> (s => s.read.parquet(multi).groupBy((col("id") % 7).as("m")).count()),
+      "multi-split sort" -> (s => s.read.parquet(multi).orderBy(col("id").desc)),
+      "unestimated one-split aggregate" -> (s => rddFrame(s).groupBy((col("id") % 7).as("m")).count()))
+    shapes.foreach { case (name, q) =>
+      val df = q(spark)
+      val got = Jobs.shuffles(df).size
+      val (want, wantRows) = Jobs.ruleFree(spark) { s =>
+        val d = q(s)
+        (Jobs.shuffles(d).size, d.collect())
+      }
+      assert(got > 0 && got == want, s"$name: $got shuffles with the rule, $want without")
+      assert(sorted(df.collect()) == sorted(wantRows), name)
+    }
+  }
+
+  test("DropMicroShuffles: repartition, Tables.spread and bucketed-write exchanges survive") {
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, REPARTITION_BY_NUM}
+    import org.apache.spark.sql.functions._
+    val li = Tables(spark, sf).lineitem
+    def origins(df: org.apache.spark.sql.DataFrame) = Jobs.shuffles(df).map(_.shuffleOrigin)
+    assert(origins(li.repartition(3).groupBy("l_returnflag").count()).contains(REPARTITION_BY_NUM))
+    assert(origins(li.repartition(col("l_returnflag"))).contains(REPARTITION_BY_COL))
+    // Tables.spread fans out a single-digit-split input of >= 4 MiB
+    val big = java.nio.file.Files.createTempDirectory("graft-micro-spread").toString
+    spark.range(0, 700000, 1, 1).select((rand(7) * 1e15).cast("long").as("v"))
+      .write.mode("overwrite").parquet(big)
+    val spread = Tables.spread(spark, spark.read.parquet(big))
+    assert(origins(spread.groupBy((col("v") % 5).as("m")).count()).contains(REPARTITION_BY_NUM),
+      s"the spread exchange must survive:\n${spread.queryExecution.executedPlan}")
+    // a bucketed write's repartition survives: its shuffle is a job of its own
+    val table = s"micro_bucketed_${System.nanoTime()}"
+    val loc = java.nio.file.Files.createTempDirectory("graft-micro-bucketed").toString
+    val (_, jobs) = Jobs.counted(spark)(li.repartition(4, col("l_orderkey"))
+      .write.option("path", loc).mode("overwrite").bucketBy(4, "l_orderkey").saveAsTable(table))
+    try assert(jobs >= 2, s"the bucketed write ran $jobs jobs: its repartition was dropped")
+    finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("DropMicroShuffles: a join of a single-split side and a multi-split side keeps both exchanges") {
+    import org.apache.spark.sql.functions._
+    val multi = java.nio.file.Files.createTempDirectory("graft-micro-join").toString
+    spark.range(0, 3000, 1, 3).write.mode("overwrite").parquet(multi)
+    val q = (s: org.apache.spark.sql.SparkSession) => Tables(s, sf).orders
+      .join(s.read.parquet(multi).hint("merge"), col("o_orderkey") === col("id"))
+      .select("o_orderkey", "o_custkey")
+    val df = q(spark)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(Jobs.shuffles(df).size == 2, s"both sides must keep their exchange:\n${df.queryExecution.executedPlan}")
+    assert(plans.partitions(df).contains(shufflePartitions))
+    assert(sorted(df.collect()) == sorted(Jobs.ruleFree(spark)(s => q(s).collect())))
   }
 }

@@ -359,11 +359,9 @@ class RetrievalSpec extends SparkSpec {
 
   test("indexed probe scores in one pass: equals bm25TopK on an appended index with stopword queries, in five jobs") {
     import spark.implicits._
-    import org.apache.spark.scheduler._
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import scala.jdk.CollectionConverters._
     val docs = Tables(spark, sf).documents
     // stopword-heavy: "the a of" style terms post in most documents,
     // mixed with rarer terms and one absent from the corpus
@@ -380,35 +378,11 @@ class RetrievalSpec extends SparkSpec {
       val segmented = spark.table(s"$db.dfreq").groupBy("term").count()
         .filter($"count" >= 3).count()
       assert(segmented > 0, "dfreq should hold several segments per term")
-      // jobs of the call and of the collect; listener events arrive
-      // in order, so once the marker job's end is seen every event of
-      // the probe has been too
-      val (group, marker) = (s"onepass-${System.nanoTime()}", s"marker-${System.nanoTime()}")
-      val jobs, markerJobs, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      def inGroup(props: java.util.Properties, g: String) =
-        props != null && props.getProperty("spark.jobGroup.id") == g
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          if (inGroup(e.properties, group)) jobs.add(e.jobId)
-          if (inGroup(e.properties, marker)) markerJobs.add(e.jobId)
-        }
-        override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+      // jobs of the call and of the collect
+      val ((probe, got), jobs) = Jobs.counted(spark) {
+        val p = Retrieval.bm25TopKIndexed(spark, db, qs, k = 10)
+        (p, p.collect())
       }
-      val sc = spark.sparkContext
-      sc.addSparkListener(listener)
-      val (probe, got) = try {
-        sc.setJobGroup(group, "bm25 probe", interruptOnCancel = false)
-        val (p, rows) = try {
-          val p = Retrieval.bm25TopKIndexed(spark, db, qs, k = 10)
-          (p, p.collect())
-        } finally sc.clearJobGroup()
-        sc.setJobGroup(marker, "listener barrier", interruptOnCancel = false)
-        try spark.range(1).count() finally sc.clearJobGroup()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!(markerJobs.asScala.nonEmpty && markerJobs.asScala.forall(ended.contains)) &&
-            System.nanoTime() < deadline) Thread.sleep(10)
-        (p, rows)
-      } finally sc.removeSparkListener(listener)
       val want = Retrieval.bm25TopK(docs, "doc_id", "text", qs, k = 10).collect()
       assert(got.toSet == want.toSet && got.length == want.length,
         s"probe diverges from bm25TopK: ${got.toSet.diff(want.toSet).take(3)}")
@@ -423,13 +397,12 @@ class RetrievalSpec extends SparkSpec {
       }
       assert(semi.isEmpty && !plan.toString.contains("LeftSemi"),
         s"the probe must not semi-join:\n$plan")
-      val shuffles = Plan.collect(plan) { case e: ShuffleExchangeLike => e }
+      val shuffles = Jobs.shuffles(plan)
       val broadcasts = Plan.collect(plan) { case e: BroadcastExchangeLike => e }
       assert(shuffles.size == 2 && broadcasts.size == 2,
         s"want two shuffle and two broadcast exchanges, got ${shuffles.size} / ${broadcasts.size}:\n$plan")
       assert(Plan.collect(plan) { case j: BroadcastHashJoinExec => j }.size == 2, s"$plan")
-      assert(markerJobs.asScala.nonEmpty, "listener never saw the marker job")
-      assert(jobs.size <= 5, s"the probe ran ${jobs.size} jobs, want <= 5")
+      assert(jobs <= 5, s"the probe ran $jobs jobs, want <= 5")
     } finally {
       spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
     }

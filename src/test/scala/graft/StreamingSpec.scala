@@ -319,38 +319,42 @@ class StreamingSpec extends SparkSpec {
     val batch0 = spark.table("streamdb.loaded")
       .filter(col("_batch_id") === 0L).drop("_batch_id").cache()
     batch0.count()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    batch0.withColumn("_batch_id", org.apache.spark.sql.functions.lit(0L))
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(modeKey)
+    spark.conf.set(modeKey, "dynamic")
+    try batch0.withColumn("_batch_id", org.apache.spark.sql.functions.lit(0L))
       .select(spark.table("streamdb.loaded").columns.map(col).toIndexedSeq: _*)
       .write.mode("overwrite").insertInto("streamdb.loaded")
+    finally prior.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
     assert(spark.table("streamdb.loaded").count() == n)
     assert(spark.table("streamdb.loaded")
       .select("_batch_id").distinct().count() == batches)
   }
 
-  test("microPlan engages on real foreachBatch frames (LogicalRDD with origin stats)") {
-    import graft.streaming.StreamingIndex
+  test("DropMicroShuffles engages on foreachBatch frames (LogicalRDD with origin stats)") {
     import java.nio.file.{Files => JFiles}
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.LogicalRDD
-    // the micro regime gates on the batch's size estimate; a foreachBatch
-    // frame is a LogicalRDD, whose stats are only useful while Spark
-    // carries the source plan's stats over (else Long.MaxValue, and the
-    // regime would silently never engage outside file-backed frames)
+    // the rule gates on the input's size estimate; a foreachBatch frame
+    // is a LogicalRDD, whose stats are only useful while Spark carries
+    // the source plan's stats over (else Long.MaxValue, and the rule
+    // would silently never engage outside file-backed frames)
     val dir = JFiles.createTempDirectory("graft-micro").toString
     val ckpt = JFiles.createTempDirectory("graft-microck").toString
     val docs = Tables(spark, sf).documents.select("doc_id", "text").limit(200)
     docs.coalesce(1).write.mode("overwrite").parquet(dir)
+    def agg(b: DataFrame): DataFrame = b.groupBy((length(col("text")) % 7).as("m"))
+      .agg(count(lit(1)).as("n"), sum("doc_id").as("s"))
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Boolean, BigInt, Int, Option[Int], Boolean)]()
+      (Boolean, BigInt, Option[Int], Int, Int, Set[org.apache.spark.sql.Row])]()
     val q = spark.readStream.schema(docs.schema).parquet(dir).writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
         val analyzed = b.queryExecution.analyzed
+        val a = agg(b)
+        val shuffles = Jobs.shuffles(a).size
+        val (rows, jobs) = Jobs.counted(b.sparkSession)(a.collect())
         seen.add((analyzed.collectFirst { case r: LogicalRDD => r }.isDefined,
-          analyzed.stats.sizeInBytes, b.rdd.getNumPartitions, graft.plans.partitions(b),
-          StreamingIndex.microPlan(b).queryExecution.executedPlan.outputPartitioning ==
-            SinglePartition))
+          analyzed.stats.sizeInBytes, graft.plans.partitions(b), shuffles, jobs, rows.toSet))
         ()
       }
       .option("checkpointLocation", ckpt)
@@ -358,15 +362,17 @@ class StreamingSpec extends SparkSpec {
       .start()
     q.awaitTermination(120000)
     q.stop()
-    val batches = seen.toArray(Array.empty[(Boolean, BigInt, Int, Option[Int], Boolean)]).toSeq
+    val batches = seen.toArray(Array.empty[(Boolean, BigInt, Option[Int], Int, Int,
+      Set[org.apache.spark.sql.Row])]).toSeq
     assert(batches.size == 1, s"expected one batch, saw $batches")
-    val (logicalRdd, size, parts, planned, micro) = batches.head
+    val (logicalRdd, size, planned, shuffles, jobs, rows) = batches.head
     assert(logicalRdd, "foreachBatch frames are LogicalRDD-backed")
-    assert(parts == 1 && size < BigInt(Long.MaxValue),
-      s"a one-file batch must be one split with real stats: $parts partitions, $size bytes")
-    assert(planned.contains(parts),
-      s"the planned count must be the batch RDD's: $planned vs $parts")
-    assert(micro, "microPlan must take the micro regime on a small one-split batch")
+    assert(planned.contains(1) && size < BigInt(Long.MaxValue),
+      s"a one-file batch must be one split with real stats: $planned partitions, $size bytes")
+    assert(shuffles == 0 && jobs == 1,
+      s"the aggregate over a small one-split batch must plan no shuffle and run one job: " +
+        s"$shuffles shuffles, $jobs jobs")
+    assert(rows == Jobs.ruleFree(spark)(s => agg(s.read.parquet(dir)).collect().toSet))
   }
 
   test("event-time timeout evicts idle users' session state (stream == batch)") {
