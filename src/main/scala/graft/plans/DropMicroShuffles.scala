@@ -2,8 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.InnerLike
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 
@@ -19,27 +21,35 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
   * to a file, `LogicalRDD`, local-rows or cached scan planned as one
   * partition ([[graft.plans.partitions]]); a union of such inputs
   * counts too. The scans' estimated size must be under
-  * [[MicroMaxBytes]] in all. The coalesce moves no data: it runs the
-  * one partition (or the union's few, one after the other) in one
-  * task and reports
-  * `SinglePartition`, which meets every distribution an aggregate,
-  * window, global sort or join asks for, so the operator runs in its
-  * input's stage instead of one AQE stage job later. Under
-  * a node with several children (a sort-merge join, a co-grouped
-  * operator) the children must keep one partition count, so the rule
-  * keeps its rewrite there only when every child ends up as one
-  * partition; otherwise each child whose count the rewrite would
-  * change plans as it did without the rule. One qualifying side next
-  * to a multi-split side thus keeps both exchanges.
+  * [[MicroMaxBytes]] in all, and is checked before any split is
+  * counted. Through a nested-loop join the streamed side's estimate
+  * is multiplied by the build side's estimated rows: a one-row build
+  * side (a global aggregate) or a few centroids keep a small input
+  * micro, while an all-pairs join against hundreds of query rows is
+  * left to its exchanges, whose stages run next to their sibling
+  * stages (q227's LSH recall check over brute-force top-k ran 1.16×
+  * slower with both sides merged into one task). The coalesce moves
+  * no data: it runs the one partition (or the union's few, one after
+  * the other) in one task and reports `SinglePartition`, which meets
+  * every distribution an aggregate, window, global sort or join asks
+  * for, so the operator runs in its input's stage instead of one AQE
+  * stage job later. Under a node with several children (a sort-merge
+  * join, a co-grouped operator) the children must keep one partition
+  * count, so the rule keeps its rewrite there only when every child
+  * ends up as one partition; otherwise each child whose count the
+  * rewrite would change plans as it did without the rule. One
+  * qualifying side next to a multi-split side thus keeps both
+  * exchanges.
   *
   * '''Never touched.''' User exchanges (`repartition`,
   * [[graft.Tables.spread]], BM25's `repartition(buckets)`, near-dup's
   * `repartition($"band")`), broadcast exchanges, and any shuffle whose
   * input is several splits, is larger than the bound, or has a
-  * partition count the plan does not give: those plan exactly as
-  * without the rule. It runs as a query-stage preparation rule, after
-  * `EnsureRequirements` on every AQE (re-)plan, so it only sees
-  * adaptive plans. A stage AQE already ran reports its planned
+  * partition count the plan does not give, such as a scan filtered by
+  * a subquery whose result is not known at planning: those plan
+  * exactly as without the rule. It runs as a query-stage preparation
+  * rule, after `EnsureRequirements` on every AQE (re-)plan, so it only
+  * sees adaptive plans. A stage AQE already ran reports its planned
   * partition count and never qualifies. Structured Streaming turns
   * AQE off for stateful queries, so their state-store exchanges are
   * never rewritten; a `foreachBatch` frame is planned adaptively and
@@ -70,32 +80,50 @@ object DropMicroShuffles extends Rule[SparkPlan] {
     case _ => false
   }
 
-  /** The estimated bytes `p` reads, when it reads them as one
-    * partition per input branch: down through unary nodes, the
-    * streamed side of a broadcast join and every child of any other
-    * node (a union, a join whose exchanges this rule dropped), to
-    * leaves planned as one partition ([[graft.plans.partitions]]: a
-    * file, `LogicalRDD`, local-rows or cached scan), each sized by the
-    * optimizer's estimate of what it reads. An exchange stops the walk
-    * (`None`), and so does any leaf of more partitions.
+  /** The leaves `p` reads without an exchange, and the bytes the
+    * optimizer estimates they bring to `p`: down through unary nodes,
+    * the streamed side of a broadcast join and every child of any
+    * other node (a union, a join whose exchanges this rule dropped),
+    * each leaf sized by its estimate. A nested-loop join multiplies
+    * the streamed bytes by the build side's estimated rows. An
+    * exchange, or a leaf without an estimate, stops the walk (`None`).
     */
-  private def oneSplitBytes(p: SparkPlan): Option[BigInt] = p match {
+  private def input(p: SparkPlan): Option[(BigInt, Seq[SparkPlan])] = p match {
     case j: BroadcastHashJoinExec =>
-      oneSplitBytes(if (j.buildSide == BuildRight) j.left else j.right)
+      input(if (j.buildSide == BuildRight) j.left else j.right)
     case j: BroadcastNestedLoopJoinExec if j.joinType.isInstanceOf[InnerLike] =>
-      oneSplitBytes(if (j.buildSide == BuildRight) j.left else j.right)
+      val (streamed, build) = if (j.buildSide == BuildRight) (j.left, j.right) else (j.right, j.left)
+      for ((bytes, ls) <- input(streamed); n <- rows(build)) yield (bytes * n, ls)
     case _: Exchange => None
-    case u: UnaryExecNode => oneSplitBytes(u.child)
+    case u: UnaryExecNode => input(u.child)
     case _ if p.children.nonEmpty =>
-      // a union, or a join whose sides this rule made one partition each
-      p.children.map(oneSplitBytes).foldLeft(Option(BigInt(0))) { (sum, b) =>
-        for (x <- sum; y <- b) yield x + y
+      p.children.foldLeft(Option((BigInt(0), Seq.empty[SparkPlan]))) { (acc, c) =>
+        for ((b0, l0) <- acc; (b1, l1) <- input(c)) yield (b0 + b1, l0 ++ l1)
       }
-    case _ if partitions(p).contains(1) => p.logicalLink.map(_.stats.sizeInBytes)
-    case _ => None
+    case _ => p.logicalLink.map(l => (l.stats.sizeInBytes, Seq(p)))
   }
 
-  private def micro(input: SparkPlan): Boolean = oneSplitBytes(input).exists(_ < MicroMaxBytes)
+  /** The rows the optimizer estimates for `p`, below its broadcast
+    * exchange: its row count where known (one for a global
+    * aggregate), else its size over its row width.
+    */
+  private def rows(p: SparkPlan): Option[BigInt] = p match {
+    case e: Exchange => rows(e.child)
+    case q: QueryStageExec => rows(q.plan)
+    case _ => p.logicalLink.map(l => l.stats.rowCount.getOrElse(
+      (l.stats.sizeInBytes / EstimationUtils.getSizePerRow(l.output)).max(1)))
+  }
+
+  /** `in` brings under [[MicroMaxBytes]] from leaves each planned as
+    * one partition ([[graft.plans.partitions]]: a file, `LogicalRDD`,
+    * local-rows or cached scan). The cheap size estimate is checked
+    * first: counting a file scan's splits builds its RDD (file listing
+    * and split computation), so a larger input never pays for that at
+    * planning.
+    */
+  private def micro(in: SparkPlan): Boolean = input(in).exists { case (bytes, ls) =>
+    bytes < MicroMaxBytes && ls.forall(partitions(_).contains(1))
+  }
 
   override def apply(plan: SparkPlan): SparkPlan = plan match {
     case s: ShuffleExchangeExec if ensured(s) =>

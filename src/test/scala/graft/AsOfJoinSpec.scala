@@ -21,19 +21,17 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("as-of join plans one exchange (union + single window sort)") {
-    def asOf(s: org.apache.spark.sql.SparkSession) = {
-      import s.implicits._
-      val left = Seq((1L, 10L)).toDF("k", "tms")
-      val right = Seq((1L, 8L, 1.0)).toDF("k", "tms", "v")
-      AsOfJoin.asOfInner(left, right, "k", "tms", Seq("v"))
-    }
-    // planned without DropMicroShuffles (Jobs.ruleFree), as above inputs
-    // of more than one split
-    val p = Jobs.ruleFree(spark)(s => asOf(s).queryExecution.executedPlan.toString)
+    import spark.implicits._
+    val left = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "tms")
+    val right = Seq((1L, 8L, 1.0), (2L, 18L, 2.0), (3L, 28L, 3.0)).toDF("k", "tms", "v")
+    // inputs of three splits each: the exchange stays
+    val p = AsOfJoin.asOfInner(Jobs.splitCopy(left), Jobs.splitCopy(right), "k", "tms", Seq("v"))
+      .queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(p).size == 1, s"expected exactly 1 exchange:\n$p")
     assert(!p.contains("Join"), s"no join node expected (window-composed):\n$p")
-    // two one-row inputs, one split each: the rule drops that exchange
-    val micro = asOf(spark).queryExecution.executedPlan
+    // two one-row inputs, one split each: DropMicroShuffles drops that exchange
+    val micro = AsOfJoin.asOfInner(Seq((1L, 10L)).toDF("k", "tms"),
+      Seq((1L, 8L, 1.0)).toDF("k", "tms", "v"), "k", "tms", Seq("v")).queryExecution.executedPlan
     assert(Jobs.shuffles(micro).isEmpty, s"unexpected shuffle:\n$micro")
   }
 }

@@ -120,17 +120,15 @@ class BpeSpec extends SparkSpec {
   }
 
   test("pair explode plan keeps a partial aggregate; wordFrequencies is one shuffle") {
-    // planned without DropMicroShuffles (Jobs.ruleFree), as above
-    // inputs of more than one split; over the test table's one small
-    // split the collapse plans no shuffle at all
-    def words(s: org.apache.spark.sql.SparkSession) =
-      Bpe.wordFrequencies(Tables(s, sf).documents, "text")
-    val p = Jobs.ruleFree(spark)(s => words(s).queryExecution.executedPlan.toString)
+    val docs = Tables(spark, sf).documents
+    // over three splits the collapse keeps its one shuffle
+    val p = Bpe.wordFrequencies(Jobs.splitCopy(docs), "text").queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
       s"word-frequency collapse must be one shuffle:\n$p")
     assert(p.contains("partial_count") || p.contains("HashAggregate"),
       s"must partial-aggregate map-side:\n$p")
-    assert(Jobs.shuffles(words(spark)).isEmpty)
+    // over the test table's one small split it plans none
+    assert(Jobs.shuffles(Bpe.wordFrequencies(docs, "text")).isEmpty)
   }
 
   test("chars kernel handles surrogate pairs as single symbols") {

@@ -51,6 +51,21 @@ object Jobs extends AdaptiveSparkPlanHelper {
   /** The shuffle exchanges `df` plans (before it runs). */
   def shuffles(df: DataFrame): Seq[ShuffleExchangeLike] = shuffles(df.queryExecution.executedPlan)
 
+  /** `df`'s rows written as `n` parquet files and read back: an input
+    * of `n` splits, so [[graft.plans.DropMicroShuffles]] leaves the
+    * exchanges above it as they plan without the rule.
+    */
+  def splitCopy(df: DataFrame, n: Int = 3): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-split-copy").toString
+    // row i goes to split i % n, so every split is non-empty once df has n rows
+    val rows = df.rdd.zipWithIndex().map { case (r, i) => ((i % n).toInt, r) }
+      .partitionBy(new org.apache.spark.HashPartitioner(n)).values
+    df.sparkSession.createDataFrame(rows, df.schema).write.mode("overwrite").parquet(dir)
+    val copy = df.sparkSession.read.parquet(dir)
+    assert(graft.plans.partitions(copy).contains(n), s"the copy reads ${graft.plans.partitions(copy)} splits")
+    copy
+  }
+
   /** `f` planned and run without AQE, so without its query-stage
     * preparation rules and so without [[graft.plans.DropMicroShuffles]]:
     * a clone of `spark` with adaptive execution off. `f` must build its

@@ -13,13 +13,6 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  /** The plan `q` gets without [[graft.plans.DropMicroShuffles]] (see
-    * [[Jobs.ruleFree]]): the exchanges it keeps above inputs of more
-    * than one split, where the test tables' single split plans none.
-    */
-  private def ruleFreePlan(q: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame): String =
-    Jobs.ruleFree(spark)(s => plan(q(s)))
-
   test("plans.partitions reads the planned partition count without running a job") {
     import org.apache.spark.sql.functions.col
     val li = Tables(spark, sf).lineitem
@@ -257,18 +250,19 @@ class PlanSpec extends SparkSpec {
   test("q78/q79 group ops are a single hash exchange on the group key") {
     import graft.operators.Sampling
     import org.apache.spark.sql.functions._
-    def docs(s: org.apache.spark.sql.SparkSession) =
-      Tables(s, sf).documents.select(col("source"), col("doc_id"), col("text"))
-    for ((name, q) <- Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
-        "capPerGroup" -> (s => Sampling.capPerGroup(docs(s), "source", "doc_id", 10)),
-        "packByTokenBudget" -> (s => Sampling.packByTokenBudget(docs(s), "source",
+    val docs = Tables(spark, sf).documents.select(col("source"), col("doc_id"), col("text"))
+    val docs3 = Jobs.splitCopy(docs)
+    for ((name, q) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "capPerGroup" -> (d => Sampling.capPerGroup(d, "source", "doc_id", 10)),
+        "packByTokenBudget" -> (d => Sampling.packByTokenBudget(d, "source",
           "doc_id", size(split(col("text"), " ")), 2000L)))) {
-      val p = ruleFreePlan(q)
+      // over three splits: the one exchange on the group key
+      val p = plan(q(docs3))
       assert("Exchange".r.findAllIn(p).size == 1,
         s"$name should shuffle exactly once, on the group key:\n$p")
       assert(p.contains("hashpartitioning(source"),
         s"$name should partition by the group column:\n$p")
-      val micro = plan(q(spark))
+      val micro = plan(q(docs))
       assert(!micro.contains("Exchange"), s"$name over one small split should not shuffle:\n$micro")
     }
   }
@@ -365,23 +359,24 @@ class PlanSpec extends SparkSpec {
   test("interval sweep is one data exchange; sumMap is one exchange of states") {
     import graft.operators.Intervals
     import org.apache.spark.sql.functions._
-    val sweep = (s: org.apache.spark.sql.SparkSession) => {
-      val ev = Tables(s, sf).events
-        .withColumn("sms", unix_millis(col("ts")))
-        .withColumn("ems", col("sms") + round(col("value") * 1000).cast("long"))
-      Intervals.maxIntersections(ev, col("event_type"), col("sms"), col("ems"))
-    }
-    val pSweep = ruleFreePlan(sweep)
+    val ev = Tables(spark, sf).events
+      .withColumn("sms", unix_millis(col("ts")))
+      .withColumn("ems", col("sms") + round(col("value") * 1000).cast("long"))
+    val sweep = (e: org.apache.spark.sql.DataFrame) =>
+      Intervals.maxIntersections(e, col("event_type"), col("sms"), col("ems"))
+    // over inputs of three splits
+    val pSweep = plan(sweep(Jobs.splitCopy(ev)))
     // union → one hash exchange for the window sort → partial+final agg
     assert("Exchange hashpartitioning".r.findAllIn(pSweep).size == 1,
       s"sweep must shuffle once:\n$pSweep")
-    val sumMap = (s: org.apache.spark.sql.SparkSession) => Tables(s, sf).lineitem
+    val li = Tables(spark, sf).lineitem
+    val sumMap = (l: org.apache.spark.sql.DataFrame) => l
       .select(col("l_returnflag"),
         array(col("l_linenumber").cast("long")).as("ks"),
         array(col("l_quantity").cast("long")).as("vs"))
       .groupBy(col("l_returnflag"))
       .agg(graft.functions.SumMap.sum_map_agg(col("ks"), col("vs")).as("m"))
-    val pMap = ruleFreePlan(sumMap)
+    val pMap = plan(sumMap(Jobs.splitCopy(li)))
     // the aggregate must be two-phase: partial map states before the
     // exchange, one exchange total (vs explode+groupBy's entry shuffle)
     assert("Exchange hashpartitioning".r.findAllIn(pMap).size == 1,
@@ -390,7 +385,7 @@ class PlanSpec extends SparkSpec {
       s"sumMap must run as a typed (partial-merge) aggregate:\n$pMap")
     // over one small split (the sweep: a union of two) neither plan
     // shuffles at all
-    Seq(sweep, sumMap).map(q => plan(q(spark))).foreach { p =>
+    Seq(plan(sweep(ev)), plan(sumMap(li))).foreach { p =>
       assert(!p.contains("Exchange"), s"unexpected shuffle:\n$p")
     }
   }
@@ -398,13 +393,13 @@ class PlanSpec extends SparkSpec {
   test("scaled interval sweeps parallelize by (key, range), carry on tiny frames") {
     import graft.operators.Intervals
     import org.apache.spark.sql.functions._
-    val sweep = (s: org.apache.spark.sql.SparkSession) => {
-      val ev = Tables(s, sf).events
-        .withColumn("sms", unix_millis(col("ts")))
-        .withColumn("ems", col("sms") + round(col("value") * 1000).cast("long"))
-      Intervals.maxIntersectionsScaled(ev, col("user_id"), col("sms"), col("ems"), nRanges = 16)
-    }
-    val p = ruleFreePlan(sweep)
+    val ev = Tables(spark, sf).events
+      .withColumn("sms", unix_millis(col("ts")))
+      .withColumn("ems", col("sms") + round(col("value") * 1000).cast("long"))
+    val sweep = (e: org.apache.spark.sql.DataFrame) =>
+      Intervals.maxIntersectionsScaled(e, col("user_id"), col("sms"), col("ems"), nRanges = 16)
+    // over an input of three splits
+    val p = plan(sweep(Jobs.splitCopy(ev)))
     // the heavy window must sort by (k, rid) — range is in the key
     assert(p.contains("hashpartitioning(k") && p.contains("rid"),
       s"sweep window must partition by (k, rid):\n$p")
@@ -412,7 +407,7 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"span must broadcast:\n$p")
     // over the test table's one small split the sweep plans no shuffle
-    val micro = sweep(spark).queryExecution.executedPlan
+    val micro = sweep(ev).queryExecution.executedPlan
     assert(Jobs.shuffles(micro).isEmpty, s"unexpected shuffle:\n$micro")
   }
 
@@ -513,7 +508,7 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("DropMicroShuffles: a multi-split input, or one with no size estimate under 32 MiB, plans the exchanges it plans without the rule") {
+  test("DropMicroShuffles: a multi-split input, one with no size estimate under 32 MiB, or a row-multiplying nested-loop join plans the exchanges it plans without the rule") {
     import org.apache.spark.sql.functions._
     val multi = java.nio.file.Files.createTempDirectory("graft-micro-multi").toString
     spark.range(0, 3000, 1, 3).write.mode("overwrite").parquet(multi)
@@ -525,7 +520,14 @@ class PlanSpec extends SparkSpec {
     val shapes: Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)] = Seq(
       "multi-split aggregate" -> (s => s.read.parquet(multi).groupBy((col("id") % 7).as("m")).count()),
       "multi-split sort" -> (s => s.read.parquet(multi).orderBy(col("id").desc)),
-      "unestimated one-split aggregate" -> (s => rddFrame(s).groupBy((col("id") % 7).as("m")).count()))
+      "unestimated one-split aggregate" -> (s => rddFrame(s).groupBy((col("id") % 7).as("m")).count()),
+      // single-split inputs, but the nested-loop join multiplies the
+      // streamed estimate by the build side's rows (the filter leaves
+      // five vectors; the estimate keeps all of them)
+      "aggregate over a nested-loop join" -> (s => Tables(s, sf).embeddings
+        .join(broadcast(Tables(s, sf).embeddings.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("q"), col("embedding").as("e"))), col("vec_id") =!= col("q"))
+        .groupBy("q").count()))
     shapes.foreach { case (name, q) =>
       val df = q(spark)
       val got = Jobs.shuffles(df).size
@@ -573,5 +575,30 @@ class PlanSpec extends SparkSpec {
     assert(Jobs.shuffles(df).size == 2, s"both sides must keep their exchange:\n${df.queryExecution.executedPlan}")
     assert(plans.partitions(df).contains(shufflePartitions))
     assert(sorted(df.collect()) == sorted(Jobs.ruleFree(spark)(s => q(s).collect())))
+  }
+
+  test("DropMicroShuffles: a scan filtered by a scalar subquery plans, explains and returns the rule-free rows") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-micro-subquery").toString
+    spark.range(0, 300, 1, 1).select((col("id") % 3).as("dt"), (col("id") % 7).as("k"), col("id").as("x"))
+      .write.mode("overwrite").partitionBy("dt").parquet(dir)
+    val view = s"micro_subquery_${System.nanoTime()}"
+    // a scalar subquery on the partition column, and one on a data column:
+    // neither may be evaluated while the rule counts the scan's splits
+    val queries = Seq(
+      s"SELECT k, count(*) AS n FROM $view WHERE dt = (SELECT max(dt) FROM $view) GROUP BY k",
+      s"SELECT k, sum(x) AS s FROM $view WHERE x > (SELECT avg(x) FROM $view) GROUP BY k")
+    def rows(s: org.apache.spark.sql.SparkSession, q: String) = {
+      s.read.parquet(dir).createOrReplaceTempView(view)
+      try {
+        val df = s.sql(q)
+        assert(df.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode).nonEmpty)
+        sorted(df.collect())
+      } finally s.catalog.dropTempView(view)
+    }
+    queries.foreach { q =>
+      val got = rows(spark, q)
+      assert(got.nonEmpty && got == Jobs.ruleFree(spark)(rows(_, q)), q)
+    }
   }
 }
