@@ -723,7 +723,7 @@ object Dedup {
     // collect, ~0.5 s of fixed job latency) that a BULK probe should
     // never pay — the caller knows its probe's shape, so the default
     // path runs zero extra jobs and an online point-lookup caller
-    // opts in. Honest cost accounting (NdScreenBench): even when it
+    // opts in. Honest cost accounting (SCALE.md): even when it
     // engages, at the SYNTHETIC gate indexes — whose postings follow
     // unique content and stay ~2 MB however far ScaleUp replicates —
     // the prepay exceeds the scan it saves (1.25 vs 0.73 s at sf10).

@@ -14,8 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * '''Per-batch apply.''' Structured Streaming's `foreachBatch` is
   * at-least-once, so an applier must be idempotent by batch id. In
   * order:
-  *  1. the batchlog (`dir/batchlog`, a driver-side [[BatchLog]]):
-  *     a logged id is a no-op (`false`);
+  *  1. the batchlog check ([[BatchLog.contains]], a driver-side
+  *     listing of `dir/batchlog`): a logged id is a no-op (`false`),
+  *     and a log holding a file that is no row file throws before
+  *     anything is written;
   *  2. the emptiness probe (an empty batch writes nothing but still
   *     logs its id). A batch of one small split plans with no shuffle
   *     ([[graft.plans.DropMicroShuffles]]), so each sub-table's
@@ -33,11 +35,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A crash before 6 leaves at most staging files and `b<id>_*` files
   * with no log row; the checkpoint re-delivers the id and steps 3–5
   * converge to exactly one copy. The families that train on their
-  * first batch (IVF, PQ, SQ8) pass a [[Build]]: the first batch runs
-  * the all-overwrite build, which writes `dir/_built = <id>` last
-  * ([[Similarity.writeBuiltMarker]]), and a replay whose id matches
-  * the marker only writes the log row. Their log rows record
-  * `applied`, which [[resolveBuiltMarker]] reads.
+  * first batch (IVF, PQ, SQ8) pass their `build`: the first batch
+  * runs that all-overwrite build, which publishes `dir/_built = <id>`
+  * last ([[BatchLog.writeBuiltMarker]]). A replay whose id matches the
+  * marker only writes the log row; a marker of another id (−1: the
+  * batch API) sends the batch down the append path; with no marker
+  * the build re-runs and converges over any partial output. Steps 1
+  * and 6 and the marker are [[BatchLog]]'s, which owns both commit
+  * artifacts.
   *
   * '''Compaction.''' [[compactTables]] replaces each live sub-table by
   * its merged form: a recovery preamble, the unlogged-delta sweep,
@@ -84,32 +89,21 @@ private[graft] object IndexMaintenance {
   def writeTarget(dir: String, stagingPath: Option[String]): (String, String) =
     stagingPath.fold((dir, "append"))((_, "overwrite"))
 
-  /** The batch ids with a batchlog row in `dir` (empty when the dir
-    * has no log — a batch-API-only index), listed on the driver.
-    */
-  def loggedBatchIds(spark: SparkSession, dir: String): Set[Long] =
-    BatchLog.ids(spark, s"$dir/batchlog")
-
-  /** A family that trains on its first batch: `run` is its
-    * all-overwrite build, and `finalPiece` the sub-table whose
-    * `_SUCCESS` proves a legacy build committed.
-    */
-  final case class Build(finalPiece: String, run: DataFrame => Unit)
-
   /** Apply one batch to the index in `dir`, idempotently by `batchId`
     * (the protocol in the object scaladoc). `stage(batch, staging)`
     * writes the delta of every sub-table in `subs` to
-    * `staging/<sub>`. `shareScan` persists the batch for the stage's
-    * several consumers; its `count()` is then the emptiness probe.
+    * `staging/<sub>`. `build` is the all-overwrite build of a family
+    * that trains on its first batch. `shareScan` persists the batch
+    * for the stage's several consumers; its `count()` is then the
+    * emptiness probe.
     * Returns true when the batch was applied, false for a logged id
     * or an empty batch.
     */
   def applyBatch(batch: DataFrame, dir: String, batchId: Long, subs: Seq[String],
-      build: Option[Build] = None, shareScan: Boolean = false)(
+      build: Option[DataFrame => Unit] = None, shareScan: Boolean = false)(
       stage: (DataFrame, String) => Unit): Boolean = {
     val spark = batch.sparkSession
-    val logPath = s"$dir/batchlog"
-    if (BatchLog.contains(spark, logPath, batchId)) return false
+    if (BatchLog.contains(spark, dir, batchId)) return false
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val shared =
@@ -118,9 +112,9 @@ private[graft] object IndexMaintenance {
     val applied = try {
       val nonEmpty = if (shareScan) shared.count() > 0L else !shared.isEmpty
       nonEmpty && {
-        build.map(b => b -> resolveBuiltMarker(spark, dir, fs, b.finalPiece)) match {
+        build.map(b => b -> resolveBuiltMarker(spark, dir)) match {
           case Some((_, Some(id))) if id == batchId => () // only the log row is missing
-          case Some((b, None)) => b.run(shared)
+          case Some((b, None)) => b(shared)
           case _ =>
             val prefix = s"b${batchId}_"
             sweep(fs, root, subs)(_.startsWith(prefix))
@@ -132,7 +126,7 @@ private[graft] object IndexMaintenance {
         true
       }
     } finally if (shareScan) shared.unpersist()
-    BatchLog.append(spark, logPath, batchId, build.map(_ => applied))
+    BatchLog.append(spark, dir, batchId, applied)
     applied
   }
 
@@ -169,51 +163,26 @@ private[graft] object IndexMaintenance {
 
   private val BatchFile = "^b(\\d+)_.*".r
 
-  /** Resolve an index dir's build-commit marker, RECOVERING the
-    * lost-marker / legacy state: with `_built` absent, the next batch
-    * would otherwise take the all-overwrite build path even over a
-    * directory full of committed appends (an index built by
-    * pre-marker code, or the marker file lost), wiping every appended
-    * batch.
-    *
-    * Batchlog rows are written strictly AFTER their batch's data
-    * commit, so they carry proof the marker can stand in for:
-    *  - a logged row with `applied = true` → some batch committed
-    *    data, and the FIRST data-carrying batch is always the build →
-    *    a build committed. Stamp `_built = -1` (the batch-API owner
-    *    id) and take the append path.
-    *  - a legacy row predating the `applied` column (reads as null)
-    *    counts as the same proof IF the build's final piece has a
-    *    committed `_SUCCESS` — legacy code had no marker step between
-    *    data commit and batchlog write to crash in.
-    *  - no such evidence → the dir holds at worst a crashed partial
-    *    build; `None` keeps the converging all-overwrite build.
-    *
-    * Residual window (legacy dirs only): a legacy dir whose only
-    * logged rows are EMPTY batches and whose build crashed exactly
-    * between its final piece write and its batchlog append reads as
-    * committed and would double-apply that one batch on replay.
-    * Post-`applied` dirs close it: a crashed build logs nothing, and
-    * empty batches log `applied = false`.
+  /** Resolve an index dir's build-commit marker, RECOVERING a lost
+    * one: with `_built` absent, the next batch would otherwise take the
+    * all-overwrite build path even over a directory full of committed
+    * appends, wiping every appended batch. Log rows are written
+    * strictly AFTER their batch's data commit, so a row with
+    * `applied = true` proves that some batch committed data, and the
+    * FIRST data-carrying batch is always the build: a build committed.
+    * Then `_built = -1` (the batch-API owner id) is stamped and the
+    * append path taken. With no such row the dir holds at worst a
+    * crashed partial build, and `None` keeps the converging
+    * all-overwrite build.
     */
-  private def resolveBuiltMarker(spark: SparkSession, dir: String, fs: FileSystem,
-      finalPiece: String): Option[Long] = {
-    val marked = Similarity.readBuiltMarker(spark, dir)
-    if (marked.isDefined) return marked
-    val logP = new Path(s"$dir/batchlog")
-    if (!fs.exists(logP)) return None
-    import org.apache.spark.sql.functions.col
-    // explicit schema: legacy log files lack `applied` (reads null)
-    val log = spark.read.schema("batch_id LONG, applied BOOLEAN").parquet(logP.toString)
-    val committed =
-      !log.filter(col("applied") === true).isEmpty ||
-        (!log.filter(col("applied").isNull).isEmpty &&
-          fs.exists(new Path(s"$dir/$finalPiece/_SUCCESS")))
-    if (committed) {
-      Similarity.writeBuiltMarker(spark, dir, -1L)
-      Some(-1L)
-    } else None
-  }
+  private def resolveBuiltMarker(spark: SparkSession, dir: String): Option[Long] =
+    BatchLog.readBuiltMarker(spark, dir).orElse {
+      if (!BatchLog.anyApplied(spark, dir)) None
+      else {
+        BatchLog.writeBuiltMarker(spark, dir, -1L)
+        Some(-1L)
+      }
+    }
 
   /** Replace each live sub-table `dir/<sub>` by its merged form: the
     * one compaction swap. `tables` maps each sub-table to a THUNK of
@@ -244,7 +213,7 @@ private[graft] object IndexMaintenance {
         else if (fs.exists(old)) renameOrThrow(fs, old, live)
       }
     }
-    lazy val logged = loggedBatchIds(spark, dir)
+    lazy val logged = BatchLog.ids(spark, dir)
     sweep(fs, root, tables.map(_._1)) {
       case BatchFile(id) => !logged.contains(id.toLong)
       case _ => false

@@ -198,7 +198,7 @@ object Pq {
       () => encode(corpus, cb, m, dim).write.mode("overwrite").parquet(s"$dir/codes"),
       () => corpus.select($"vid", $"qv", $"nrm")
         .write.mode("overwrite").parquet(s"$dir/vectors"))
-    Similarity.writeBuiltMarker(spark, dir, builtBy)
+    graft.streaming.BatchLog.writeBuiltMarker(spark, dir, builtBy)
   }
 
   /** Read the (m, k, dim) a PQ index was built with (recorded in

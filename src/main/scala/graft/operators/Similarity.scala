@@ -208,47 +208,7 @@ object Similarity {
         .write.mode("overwrite").parquet(s"$dir/codes"),
       () => corpus.select($"vid", $"qv", $"nrm")
         .write.mode("overwrite").parquet(s"$dir/vectors"))
-    writeBuiltMarker(spark, dir, builtBy)
-  }
-
-  /** Build-commit marker protocol (closes the streaming first-batch
-    * replay window — see
-    * [[graft.streaming.StreamingIndex.applySq8Batch]]): every
-    * `build*Index` writes `dir/_built` containing the id of the batch
-    * that built it (−1 for the batch API) as its LAST step. A replayed
-    * streaming batch then distinguishes the three states a crash can
-    * leave: marker absent → the build never committed, re-run the
-    * all-overwrite build (converges over any partial output); marker
-    * == my batch id → MY build committed but the batchlog marker
-    * didn't, nothing to apply; marker != my batch id → a different
-    * batch (or the batch API) owns the build, take the append path.
-    * Before the marker existed, a crash between build and batchlog
-    * sent the replay down the append path and duplicated batch-0 rows
-    * (probes could return the same neighbor twice).
-    */
-  private[graft] def writeBuiltMarker(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      builtBy: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_built")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(builtBy.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The committed-build marker of an index dir, if any (see
-    * [[writeBuiltMarker]]).
-    */
-  private[graft] def readBuiltMarker(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_built")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-      finally in.close()
-    }
+    graft.streaming.BatchLog.writeBuiltMarker(spark, dir, builtBy)
   }
 
   /** Read back the dim-sized frozen (min, delta) stats of a persisted
@@ -775,7 +735,7 @@ object Similarity {
       // cell count C = n/size grows linearly and the hierarchical
       // per-vector assignment (≈ 2√C) grows as √n — n^1.5 total,
       // MEASURED: ivfSq8TopK alone 12.75 s at 200k vectors → 366.8 s
-      // at 2M (28.8× per 10× data ≈ 10^1.5, AnnOpBench round 13).
+      // at 2M (28.8× per 10× data ≈ 10^1.5, round 13, SCALE.md).
       // Growing the cell size ∝ √n instead keeps C ∝ √n: assignment
       // is bounded at n^1.25 and the probe's per-cell scan grows √n —
       // the classic IVF balance (FAISS-style C ≈ β√n, public). The
@@ -993,7 +953,7 @@ object Similarity {
       cellsFor(corpus, cents, 1, "m_")
         .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/members")
     }
-    writeBuiltMarker(corpus.sparkSession, dir, builtBy)
+    graft.streaming.BatchLog.writeBuiltMarker(corpus.sparkSession, dir, builtBy)
   }
 
   /** The persisted quantizer structure, dispatched on the layout the

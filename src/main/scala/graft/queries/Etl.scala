@@ -118,7 +118,7 @@ object Etl {
       // global aggregate (collect_list + sum over 3 rows) re-exploded
       // replaces the former unpartitioned window: same one-pass plan,
       // no WindowExec at all — this was the suite's ONLY unpartitioned
-      // window (WindowScan: 1/214) and the source of the r13
+      // window (1 of 214 queries) and the source of the r13
       // bench-tail "No Partition Defined" warning cluster.
       perShard
         .agg(collect_list(struct($"shard", $"n")).as("rows"),

@@ -42,7 +42,7 @@ object Pipeline {
     * without this every codec gate's synthesize+decode map ran as ONE
     * task — the H.264/FLAC/image family was effectively single-threaded
     * on a 32-core box (measured: q183's 4.8 s wall is ~3.5 s of
-    * one-core decode; CodecBench attributes it). Range partitioning
+    * one-core decode; docs/bench_notes.md attributes it). Range partitioning
     * (a) costs one bounded sample pass over the 8-byte id column,
     * (b) keeps consecutive ids in one partition, preserving the
     * per-group decode memos, and (c) sizes itself from the session's
@@ -261,7 +261,7 @@ object Pipeline {
   // guarantee restated as rank inequalities over the EXACT per-doc
   // signals; n = contributing documents (≥ 3 tokens), flags TRUE.
   // q50/q95_in_band assert the sketch estimates against pinned
-  // cross-SF exact-quantile envelopes (±3α, RepQuantileScan) — the
+  // cross-SF exact-quantile envelopes (±3α, measured at sf0.001/0.01/0.1) — the
   // gate-level drift detector for the composed quantiles.
   private val dashboardRepetitionOracle =
     """WITH d AS (SELECT string_split(text,' ') AS t FROM documents),
@@ -706,7 +706,7 @@ object Pipeline {
     // MULTI-PROBE LSH (Lv et al. VLDB'07): the query side also visits
     // its nProbe−1 lowest-margin neighbor buckets per table, so
     // recall rises from ~0.50 (q36's single-probe, bound 0.25) to
-    // ~0.86–0.89 measured across all gate SFs (tools/AnnRecall)
+    // ~0.86–0.89 measured across all gate SFs (SURVEY.md)
     // WITHOUT growing the corpus-side bucket rows — the knob that
     // buys recall at probe cost instead of index cost at 100 TB. The
     // gate holds the recall bound at 0.6, above anything single-probe
@@ -3823,7 +3823,7 @@ object Pipeline {
             docs.filter($"doc_id" % 2 =!= 0), "text", cols, idxDir, batchId = 1))
         require(applied == Seq(true, true, false),
           s"dashboard batchlog idempotence violated: $applied")
-        // PINNED TOLERANCE BANDS (RepQuantileScan, 2026-08): per
+        // PINNED TOLERANCE BANDS (measured 2026-08): per
         // signal, the cross-SF (sf0.001/0.01/0.1) envelope of the
         // EXACT q50/q95 widened by 3α — the α guarantee certifies the
         // sketch estimate within (1±α) of exact, so a sketch estimate
@@ -5755,7 +5755,7 @@ object Pipeline {
 
     // the q36 audit contract at a HIGHER bound (0.6) only multi-probe
     // reaches — measured 0.86-0.89 across gate SFs vs ~0.50
-    // single-probe (tools/AnnRecall); uplift also spec-pinned
+    // single-probe (SURVEY.md); uplift also spec-pinned
     "q227_ann_lsh_multiprobe" ->
       """SELECT least(count(*), 500) AS n_queries,
         | least(count(*), 500) * 5 AS n_truth,

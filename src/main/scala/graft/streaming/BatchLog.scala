@@ -1,152 +1,160 @@
 package graft.streaming
 
-import graft.functions.CallParam.param
-import org.apache.hadoop.fs.Path
+import graft.operators.IndexMaintenance.deleteOrThrow
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The appliers' idempotence log, as driver-side file operations.
+/** The one owner of an index directory's commit artifacts: its
+  * batchlog (`<dir>/batchlog`) and its build marker (`<dir>/_built`).
+  * No other code names, reads or writes either (a CatalogSpec test
+  * pins this). Every operation is a driver-side file operation and
+  * runs no Spark job, and both artifacts are published the same way:
+  * written under a dotted temp name, forced to stable storage, then
+  * renamed into place, so a crash never leaves a torn artifact under
+  * its real name and a replay discards the temp.
   *
-  * Every `apply*Batch` needs two one-row interactions with
-  * `dir/batchlog` per micro-batch: "is this batchId already logged?"
-  * and "log this batchId". As Spark jobs (a filtered read + a one-row
-  * append write) those two cost more than some whole family
-  * derivations at micro-batch scale, and on a cluster they are two
-  * scheduled jobs for what is semantically ONE namenode round-trip.
-  * This helper makes both O(1) driver-side calls:
+  * '''The log.''' `foreachBatch` is at-least-once, so every applier
+  * asks "is this batchId already logged?" and, after its data commit,
+  * "log this batchId". Each log row is its own parquet file
+  * `b<id>.parquet` with one schema for every applier:
+  * `batch_id LONG, applied BOOLEAN` (`applied` is false for an empty
+  * batch, which writes no data but is still logged). [[ids]] lists the
+  * row files' names and [[contains]] answers from that listing.
+  * Hidden names (temp files, checksums, `_SUCCESS`) are skipped; any
+  * other entry is a foreign file, and the listing throws naming it.
+  * So a log written by the pre-r16 appliers (Spark `part-*` rows) or
+  * rewritten by Spark fails loudly instead of being read: there is one
+  * format and one reader.
   *
-  *  - each log row is its OWN parquet file `b<id>.parquet`, written
-  *    with parquet-hadoop's ExampleParquetWriter (no job) to a dotted
-  *    temp name and PUBLISHED by rename — atomic on HDFS and local
-  *    fs, so a crash never leaves a torn row, and a replayed append
-  *    converges (the row file either exists or is re-created
-  *    identically);
-  *  - the membership check is `fs.exists(b<id>.parquet)`, with a
-  *    read-the-dir fallback for LEGACY logs whose rows live in Spark
-  *    `part-*` files (dirs written before this helper, and test
-  *    harnesses that rewrite the log with a Spark overwrite to
-  *    simulate crashes).
-  *
-  * Readers are unchanged: the row files are ordinary parquet, so
-  * `spark.read.parquet(dir/batchlog)` (resolveBuiltMarker, the gates'
-  * oracle re-derivations, DuckDB) sees exactly the rows it always
-  * saw; [[ids]] lists the ids from the row-file names instead.
-  * Schema matches the writers it replaced: `batch_id LONG`, plus
-  * `applied BOOLEAN` only for the appliers that record it (absent
-  * column reads null — the legacy distinction resolveBuiltMarker
-  * relies on is preserved).
+  * '''The marker.''' `_built` holds the id of the batch whose
+  * all-overwrite build committed (−1 for the batch API), written as
+  * every `build*Index`'s LAST step; see
+  * [[graft.operators.IndexMaintenance]] for how a replay uses it. A
+  * rebuild deletes the old marker before publishing (the local
+  * filesystem refuses a rename onto an existing file); a crash in
+  * between leaves the lost-marker state that
+  * `IndexMaintenance.resolveBuiltMarker` recovers from the log's
+  * `applied` rows ([[anyApplied]]).
   */
 private[graft] object BatchLog {
-  private def rowFile(batchId: Long) = s"b$batchId.parquet"
+  private val RowFile = "b(\\d+)\\.parquet".r
 
-  private def isRowFile(name: String): Boolean = {
-    val mid = name.stripPrefix("b").stripSuffix(".parquet")
-    name.startsWith("b") && name.endsWith(".parquet") &&
-      mid.nonEmpty && mid.forall(_.isDigit)
+  private def logDir(dir: String) = new Path(dir, "batchlog")
+  private def marker(dir: String) = new Path(dir, "_built")
+  private def fsOf(spark: SparkSession, p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The row files of `dir`'s log by batch id (empty when there is no
+    * log); throws on an entry that is no row file.
+    */
+  private def rowFiles(fs: FileSystem, dir: String): Map[Long, Path] = {
+    val log = logDir(dir)
+    if (!fs.exists(log)) Map.empty
+    else fs.listStatus(log).iterator.map(_.getPath)
+      .filterNot(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
+      .map { p =>
+        p.getName match {
+          case RowFile(id) => id.toLong -> p
+          case other => throw new IllegalStateException(
+            s"batchlog $log holds $other, which is no row file (b<id>.parquet): " +
+              "a log written by pre-r16 code or rewritten by Spark is not read")
+        }
+      }.toMap
   }
 
-  /** O(1) check with legacy fallback: is `batchId` recorded? */
-  def contains(spark: SparkSession, logPath: String,
-      batchId: Long): Boolean = {
-    val dirP = new Path(logPath)
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dirP)) return false
-    if (fs.exists(new Path(dirP, rowFile(batchId)))) return true
-    if (!hasLegacy(fs.listStatus(dirP))) return false
-    // the id is a CallParam so the check compiles once, not per batch
-    import org.apache.spark.sql.functions.col
-    !spark.read.schema("batch_id LONG, applied BOOLEAN")
-      .parquet(logPath).filter(col("batch_id") === param(batchId)).isEmpty
-  }
+  /** Every batch id logged in `dir` (empty when it has no log). */
+  def ids(spark: SparkSession, dir: String): Set[Long] =
+    rowFiles(fsOf(spark, logDir(dir)), dir).keySet
 
-  /** Every recorded batch id (empty when the dir does not exist): the
-    * row-file names, listed on the driver, with the same legacy
-    * fallback to a Spark read of the whole dir as [[contains]].
-    */
-  def ids(spark: SparkSession, logPath: String): Set[Long] = {
-    val dirP = new Path(logPath)
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dirP)) return Set.empty
-    val files = fs.listStatus(dirP)
-    if (hasLegacy(files))
-      spark.read.schema("batch_id LONG").parquet(logPath)
-        .collect().map(_.getLong(0)).toSet
-    else files.iterator.map(_.getPath.getName).filter(isRowFile)
-      .map(_.stripPrefix("b").stripSuffix(".parquet").toLong).toSet
-  }
+  /** Is `batchId` logged in `dir`? */
+  def contains(spark: SparkSession, dir: String, batchId: Long): Boolean =
+    ids(spark, dir).contains(batchId)
 
-  /** Legacy rows: present only in dirs written by the pre-r16
-    * appliers (or the BM25 applier's old catalog table) or rewritten
-    * whole by a test harness — the readers fall back to a Spark read
-    * whenever ANY data file that is not one of ours (b<id>.parquet /
-    * _SUCCESS-style markers / dotfiles) exists. Keying on a
-    * writer-specific name like part-* would silently double-apply a
-    * batch logged by a harness that coalesces or renames log files;
-    * the fallback direction is the safe one (it reads row files too,
-    * just slower).
+  /** Does any row of `dir`'s log record `applied = true`, i.e. some
+    * batch committed data? Reads the row files on the driver.
     */
-  private def hasLegacy(files: Array[org.apache.hadoop.fs.FileStatus]): Boolean =
-    files.exists { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith(".") && !n.startsWith("_") && !isRowFile(n)
-    }
-
-  /** Atomic driver-side append of one log row (`b<id>.parquet`). A
-    * re-run for an id whose row already exists is a no-op — the row
-    * content is a pure function of (batchId, applied).
-    */
-  def append(spark: SparkSession, logPath: String, batchId: Long,
-      applied: Option[Boolean] = None): Unit = {
-    val dirP = new Path(logPath)
+  def anyApplied(spark: SparkSession, dir: String): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = dirP.getFileSystem(conf)
-    fs.mkdirs(dirP)
-    val dest = new Path(dirP, rowFile(batchId))
+    rowFiles(fsOf(spark, logDir(dir)), dir).values.exists(p =>
+      graft.operators.TinyParquet.rows(conf, p.toString).exists(_.getBoolean("applied", 0)))
+  }
+
+  /** Log `batchId` in `dir`. A re-run for a logged id is a no-op: the
+    * row is a pure function of (batchId, applied).
+    */
+  def append(spark: SparkSession, dir: String, batchId: Long, applied: Boolean): Unit = {
+    val log = logDir(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = log.getFileSystem(conf)
+    fs.mkdirs(log)
+    val dest = new Path(log, s"b$batchId.parquet")
     if (fs.exists(dest)) return
-    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      if (applied.isDefined)
-        "message batchlog { optional int64 batch_id; optional boolean applied; }"
-      else "message batchlog { optional int64 batch_id; }")
-    val tmp = new Path(dirP, s".${rowFile(batchId)}.tmp")
+    publish(fs, dest) { tmp =>
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message batchlog { optional int64 batch_id; optional boolean applied; }")
+      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
+        .withType(schema)
+        .withConf(conf)
+        .build()
+      try {
+        val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
+          schema).newGroup()
+        g.add("batch_id", batchId)
+        g.add("applied", applied)
+        writer.write(g)
+      } finally writer.close()
+      val fr = graft.operators.TinyParquet.open(conf, tmp)
+      try require(fr.getRecordCount == 1L, s"torn batchlog row at $tmp")
+      finally fr.close()
+    }
+  }
+
+  /** Publish `_built = builtBy` in `dir`, replacing any marker there. */
+  def writeBuiltMarker(spark: SparkSession, dir: String, builtBy: Long): Unit = {
+    val dest = marker(dir)
+    val fs = fsOf(spark, dest)
+    deleteOrThrow(fs, dest)
+    publish(fs, dest) { tmp =>
+      val out = fs.create(tmp, true)
+      try out.write(builtBy.toString.getBytes("UTF-8")) finally out.close()
+    }
+  }
+
+  /** The committed-build marker of `dir`, if any. */
+  def readBuiltMarker(spark: SparkSession, dir: String): Option[Long] = {
+    val p = marker(dir)
+    val fs = fsOf(spark, p)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
+      finally in.close()
+    }
+  }
+
+  /** Write `dest` through `write(tmp)` to the dotted temp name, force
+    * it to stable storage, and rename it into place. Without the force
+    * a power loss after the rename could publish a torn file under the
+    * real name; on filesystems other than the local one, `append`'s
+    * footer check at least keeps a torn row unpublished. A `false`
+    * from the rename is a failure unless `dest` now exists (a
+    * concurrent or replayed publish of the same content won).
+    */
+  private def publish(fs: FileSystem, dest: Path)(write: Path => Unit): Unit = {
+    val tmp = new Path(dest.getParent, s".${dest.getName}.tmp")
     if (fs.exists(tmp)) fs.delete(tmp, false)
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
-      .withType(schema)
-      .withConf(conf)
-      .build()
-    try {
-      val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-        schema).newGroup()
-      g.add("batch_id", batchId)
-      applied.foreach(a => g.add("applied", a))
-      writer.write(g)
-    } finally writer.close()
-    // Durability before publish: ParquetWriter.close flushes to the
-    // OS but forces nothing to stable storage, and publishing a
-    // non-durable row by rename would be worse than the Spark-commit
-    // path it replaced (which never published outside _temporary) —
-    // after a power loss contains() would key on the existence of a
-    // torn file and report the batch as logged while every parquet
-    // read of the log dir fails on the corrupt footer. On local
-    // filesystems an fsync through a read-only FileChannel closes
-    // that window; elsewhere (HDFS post-close) the footer validation
-    // below at least bounds the failure to the crash windows already
-    // documented above (a torn tmp is discarded on replay, never
-    // published).
+    write(tmp)
     if ("file" == fs.getScheme) {
       val ch = java.nio.channels.FileChannel.open(
         java.nio.file.Paths.get(tmp.toUri.getPath),
         java.nio.file.StandardOpenOption.READ)
       try ch.force(true) finally ch.close()
     }
-    val fr = graft.operators.TinyParquet.open(conf, tmp)
-    try require(fr.getRecordCount == 1L, s"torn batchlog row at $tmp")
-    finally fr.close()
     if (!fs.rename(tmp, dest)) {
-      // a concurrent/replayed append published first — identical row
       fs.delete(tmp, false)
-      require(fs.exists(dest),
-        s"batchlog append failed to publish $dest")
+      if (!fs.exists(dest))
+        throw new java.io.IOException(s"batchlog: publishing $dest failed (rename refused)")
     }
-    ()
   }
 }

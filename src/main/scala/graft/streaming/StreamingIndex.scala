@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.IndexMaintenance
-import graft.operators.IndexMaintenance.Build
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -18,10 +17,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * directory-backed families (IVF, PQ, SQ8, LM, LM3, near-dup, split,
   * dashboard, profile, clip) commit through one protocol,
   * [[graft.operators.IndexMaintenance.applyBatch]]: a staged delta,
-  * deterministic `b<id>_<k>` renames, the batchlog row last. Its crash
-  * points are enumerated by `IndexFaultSpec`, which fails every
-  * mutating filesystem call of an IVF append, a near-dup append and a
-  * near-dup compaction in turn and checks that the replay converges.
+  * deterministic `b<id>_<k>` renames, the batchlog row last; IVF, PQ
+  * and SQ8 build on their first batch and publish the `_built` marker
+  * before that row. Its crash points are enumerated by
+  * `IndexFaultSpec`, which fails every mutating filesystem call of an
+  * IVF build, an IVF append, a near-dup append and a near-dup
+  * compaction in turn (a thrown `IOException`, a `false` return, a
+  * torn write) and checks that the replay converges. The batchlog and
+  * the marker have one format each ([[BatchLog]]): a directory written
+  * by pre-r16 code fails loudly at its first batch instead of being
+  * read.
   *
   * BM25 keeps its Hive catalog tables, and its partial-commit window
   * stays OPEN: its batchlog is the shared driver-side one, but the
@@ -54,20 +59,16 @@ object StreamingIndex {
     * false when the id was already in the batchlog (re-delivery) or
     * the batch was empty.
     *
-    * The batchlog is the appliers' shared driver-side [[BatchLog]] at
-    * `<database location>/batchlog`: the directory the managed
-    * `batchlog` table of earlier versions used, so ids logged as
-    * that table's rows are still found (BatchLog's legacy fallback).
-    * It is no catalog table, and `DROP DATABASE … CASCADE` removes it
-    * with the database's location.
+    * The batchlog is the appliers' shared driver-side [[BatchLog]] in
+    * the database's location, with the same row files as every other
+    * applier. It is no catalog table, and `DROP DATABASE … CASCADE`
+    * removes it with the database's location.
     */
   def applyBm25Batch(batch: DataFrame, idCol: String, textCol: String,
       db: String, batchId: Long, buckets: Int = 0): Boolean = {
     val spark = batch.sparkSession
-    val logPath = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(spark.catalog.getDatabase(db).locationUri),
-      "batchlog").toString
-    if (BatchLog.contains(spark, logPath, batchId)) return false
+    val loc = new org.apache.hadoop.fs.Path(spark.catalog.getDatabase(db).locationUri).toString
+    if (BatchLog.contains(spark, loc, batchId)) return false
     // cheap emptiness probe; an empty trigger still logs its id so a
     // re-delivered empty batch stays a no-op
     val applied =
@@ -82,7 +83,7 @@ object StreamingIndex {
             batch, idCol, textCol, db, buckets)
         true
       }
-    BatchLog.append(spark, logPath, batchId)
+    BatchLog.append(spark, loc, batchId, applied)
     applied
   }
 
@@ -96,8 +97,8 @@ object StreamingIndex {
   def applyIvfBatch(batch: DataFrame, dim: Int, dir: String,
       batchId: Long): Boolean =
     IndexMaintenance.applyBatch(batch, dir, batchId, Seq("members"),
-      build = Some(Build("members",
-        graft.operators.Similarity.buildIvfIndex(_, dim, dir, builtBy = batchId)))) {
+      build = Some(
+        graft.operators.Similarity.buildIvfIndex(_, dim, dir, builtBy = batchId))) {
       (mb, staging) =>
         graft.operators.Similarity.appendIvfIndex(mb.sparkSession, mb, dir, Some(staging))
     }
@@ -109,8 +110,8 @@ object StreamingIndex {
   def applyPqBatch(batch: DataFrame, dir: String, batchId: Long,
       m: Int = 8, dim: Int = 64): Boolean =
     IndexMaintenance.applyBatch(batch, dir, batchId, Seq("codes", "vectors"),
-      build = Some(Build("vectors",
-        graft.operators.Pq.buildPqIndex(_, dir, m = m, dim = dim, builtBy = batchId)))) {
+      build = Some(
+        graft.operators.Pq.buildPqIndex(_, dir, m = m, dim = dim, builtBy = batchId))) {
       (mb, staging) => graft.operators.Pq.appendPqIndex(mb.sparkSession, mb, dir, Some(staging))
     }
 
@@ -121,8 +122,8 @@ object StreamingIndex {
     */
   def applySq8Batch(batch: DataFrame, dir: String, batchId: Long): Boolean =
     IndexMaintenance.applyBatch(batch, dir, batchId, Seq("codes", "vectors"),
-      build = Some(Build("vectors",
-        graft.operators.Similarity.buildSq8Index(_, dir, builtBy = batchId)))) {
+      build = Some(
+        graft.operators.Similarity.buildSq8Index(_, dir, builtBy = batchId))) {
       (mb, staging) =>
         graft.operators.Similarity.appendSq8Index(mb.sparkSession, mb, dir, Some(staging))
     }
@@ -301,8 +302,9 @@ object StreamingIndex {
     // rebuild FROM CLEAN: delete the dir and bootstrap again.
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val preexisting = ("_built" +: DashboardSubs)
-      .filter(sub => fs.exists(new org.apache.hadoop.fs.Path(dirPath, sub)))
+    val preexisting =
+      BatchLog.readBuiltMarker(spark, dir).map(id => s"build marker $id").toSeq ++
+        DashboardSubs.filter(sub => fs.exists(new org.apache.hadoop.fs.Path(dirPath, sub)))
     require(preexisting.isEmpty,
       s"buildDashboard: refusing to bootstrap into non-empty dir $dir " +
         s"(found: ${preexisting.mkString(", ")}); the bootstrap appends " +
@@ -330,7 +332,7 @@ object StreamingIndex {
           idCol, textCol, dir)))),
         scala.concurrent.duration.Duration.Inf)
     } finally { if (shareScan) shared.unpersist(); () }
-    graft.operators.Similarity.writeBuiltMarker(spark, dir, -1L)
+    BatchLog.writeBuiltMarker(spark, dir, -1L)
   }
 
   /** Compact ALL of a composed dashboard directory's families in one

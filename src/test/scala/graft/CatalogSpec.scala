@@ -115,15 +115,18 @@ class CatalogSpec extends SparkSpec {
     assert(probe.getLong(1) >= 1L)
   }
 
+  /** The Scala sources under `root`, a directory of the project. */
+  private def scalaSources(root: String): Seq[java.nio.file.Path] = {
+    assert(Files.isDirectory(Paths.get(root)), s"run from the project root: $root")
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("one session definition: only GraftSession builds a session, and the suite runs its settings") {
     // spelled with \s* so that this line is no match itself
     val builderCall = """SparkSession\s*\.\s*builder""".r
-    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      assert(Files.isDirectory(Paths.get(root)), s"run from the project root: $root")
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap(scalaSources)
     assert(sources.exists(_.endsWith("GraftSession.scala")))
     val builders = sources.filterNot(_.endsWith("GraftSession.scala"))
       .filter(p => builderCall.findFirstIn(Files.readString(p)).isDefined)
@@ -140,6 +143,34 @@ class CatalogSpec extends SparkSpec {
       classOf[graft.io.NioLocalFileSystem].getName)
     assert(built.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
       classOf[graft.io.NioLocalFs].getName)
+  }
+
+  test("one owner of commit artifacts: only BatchLog names them, no spec writes a log") {
+    // one token: a string or char literal (group 1) or a comment
+    val token = """(?s)("{3}.*?"{3}|"(?:[^"\\\n]|\\.)*"|'(?:[^'\\\n]|\\.)')|//[^\n]*|/\*.*?\*/""".r
+    // a literal naming the log dir or the marker as a path component
+    val artifact = """["/](batchlog|_built)["/]""".r
+    val main = scalaSources("src/main/scala")
+    assert(main.exists(_.endsWith("streaming/BatchLog.scala")))
+    val namers = main.filterNot(_.endsWith("streaming/BatchLog.scala")).filter { p =>
+      token.findAllMatchIn(Files.readString(p))
+        .exists(m => m.group(1) != null && artifact.findFirstIn(m.group(1)).isDefined)
+    }
+    assert(namers.isEmpty,
+      s"only BatchLog may read or write a batchlog or _built; named in: ${namers.mkString(", ")}")
+    // a Spark write chain (continued on lines that start with a dot)
+    // that targets a batchlog; spelled with \s* so that this line is no
+    // match itself
+    val sparkWrite = """\.\s*write\b[^\n]*(?:\n\s*\.[^\n]*)*""".r
+    val rewriters = scalaSources("src/test/scala").filter { p =>
+      val code = token.replaceAllIn(Files.readString(p), m =>
+        scala.util.matching.Regex.quoteReplacement(
+          if (m.group(1) != null) m.matched else m.matched.replaceAll("[^\n]", " ")))
+      sparkWrite.findAllIn(code).exists(_.contains("batchlog"))
+    }
+    assert(rewriters.isEmpty,
+      s"a spec fakes a crash by deleting a row file, never by a Spark write of the log: " +
+        rewriters.mkString(", "))
   }
 
   test("graft_zorder rejects non-int children at analysis, not runtime") {

@@ -544,8 +544,8 @@ class DedupSpec extends SparkSpec {
       // crash replay: erase batch 2's log row (its b2_* deltas stay
       // orphaned in all FOUR subs), re-deliver — the sweep purges
       // index AND assignment before re-applying, converging exactly
-      Seq(0L, 1L).toDF("batch_id").write.mode("overwrite")
-        .parquet(s"$dir/batchlog")
+      val row2 = new org.apache.hadoop.fs.Path(s"$dir/batchlog/b2.parquet")
+      assert(row2.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(row2, false))
       assert(StreamingIndex.applySplitBatch(b2, "doc_id", "text", dir, 2L))
       assert(standing() == all, "replayed batch must converge exactly")
       // a re-delivered batch id no-ops

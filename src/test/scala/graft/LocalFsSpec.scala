@@ -97,8 +97,8 @@ class LocalFsSpec extends SparkSpec {
     val starts = processStarts {
       spark.range(0, 200).withColumn("p", $"id" % 4)
         .write.mode("overwrite").partitionBy("p").parquet(parts)
-      BatchLog.append(spark, s"$log/batchlog", 0L)
-      BatchLog.append(spark, s"$log/batchlog", 1L, Some(true))
+      BatchLog.append(spark, log, 0L, applied = false)
+      BatchLog.append(spark, log, 1L, applied = true)
       assert(StreamingIndex.applyIvfBatch(corpus.filter($"vid" % 2 === 0), 64, ivf, 0))
       assert(StreamingIndex.applyIvfBatch(corpus.filter($"vid" % 2 =!= 0), 64, ivf, 1))
       Similarity.compactIvfIndex(spark, ivf)
@@ -112,7 +112,7 @@ class LocalFsSpec extends SparkSpec {
     }
     assert(starts.isEmpty, s"${starts.size} process starts, e.g. ${starts.take(5).mkString("; ")}")
     assert(spark.read.parquet(parts).count() == 200)
-    assert(BatchLog.ids(spark, s"$log/batchlog") == Set(0L, 1L))
+    assert(BatchLog.ids(spark, log) == Set(0L, 1L))
     assert(spark.read.parquet(s"$ivf/members").count() == corpus.count())
     assert(spark.read.parquet(out).count() == 40)
     assert(Files.list(JPaths.get(ckpt, "commits")).iterator.asScala.nonEmpty)

@@ -68,8 +68,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q24 carries no window at all: total fans back through a bounded aggregate") {
-    // formerly the suite's ONLY unpartitioned window (WindowScan:
-    // 1/214, the r13 bench-tail warning source) — the 3-row shard
+    // formerly the suite's ONLY unpartitioned window (1 of 214
+    // queries, the r13 bench-tail warning source) — the 3-row shard
     // summary now totals through collect_list + re-explode, so the
     // plan has no WindowExec to warn about
     val df = graft.queries.Etl.queries("q24_shard_assign")(spark, sf)

@@ -6,6 +6,19 @@ import org.apache.spark.sql.streaming.Trigger
 
 class StreamingSpec extends SparkSpec {
 
+  /** The state a crash between a batch's data commit and its log row
+    * leaves: the data stays, the row file `batchlog/b<id>.parquet` is
+    * absent.
+    */
+  private def dropLogRow(dir: String, batchId: Long): Unit = {
+    val row = new org.apache.hadoop.fs.Path(s"$dir/batchlog/b$batchId.parquet")
+    assert(row.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(row, false),
+      s"no log row for batch $batchId in $dir")
+  }
+
+  /** The highest batch id logged in `dir`. */
+  private def lastLogged(dir: String): Long = graft.streaming.BatchLog.ids(spark, dir).max
+
   private def eventsDir: String = {
     // readStream wants a directory; stage the single events file into one
     val dir = java.nio.file.Files.createTempDirectory("graft-events").toString
@@ -1373,9 +1386,7 @@ class StreamingSpec extends SparkSpec {
     // crash between the count-segment commit and the marker write:
     // erase batch 1's marker, keep its data, re-deliver — the sweep
     // must drop the orphaned b1_* segments or counts double
-    val survivors = spark.read.parquet(s"$dir/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    survivors.toDF("batch_id").write.mode("overwrite").parquet(s"$dir/batchlog")
+    dropLogRow(dir, 1L)
     assert(StreamingIndex.applyLmBatch(docs.filter($"doc_id" % 2 =!= 0), "text", dir, 1))
     assert(rows() == want,
       "replay must converge to exactly-once counts (scores unchanged)")
@@ -1393,9 +1404,7 @@ class StreamingSpec extends SparkSpec {
     def counts() = (spark.read.parquet(s"$dir/codes").count(),
       spark.read.parquet(s"$dir/vectors").count())
     val n = counts()
-    val survivors = spark.read.parquet(s"$dir/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    survivors.toDF("batch_id").write.mode("overwrite").parquet(s"$dir/batchlog")
+    dropLogRow(dir, 1L)
     assert(StreamingIndex.applySq8Batch(corpus.filter($"vid" % 2 =!= 0), dir, 1))
     assert(counts() == n,
       "replay must converge to exactly one copy in codes AND vectors")
@@ -1413,9 +1422,7 @@ class StreamingSpec extends SparkSpec {
     def counts() = (spark.read.parquet(s"$dir/codes").count(),
       spark.read.parquet(s"$dir/vectors").count())
     val n = counts()
-    val survivors = spark.read.parquet(s"$dir/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    survivors.toDF("batch_id").write.mode("overwrite").parquet(s"$dir/batchlog")
+    dropLogRow(dir, 1L)
     assert(StreamingIndex.applyPqBatch(corpus.filter($"vid" % 2 =!= 0), dir, 1))
     assert(counts() == n,
       "replay must converge to exactly one copy in codes AND vectors")
@@ -1439,9 +1446,7 @@ class StreamingSpec extends SparkSpec {
     // simulate "crash between the members commit and the marker write":
     // erase batch 1's marker but keep its data, then re-deliver it —
     // the sweep must drop the orphaned b1_* files before re-committing
-    val survivors = spark.read.parquet(s"$dir/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    survivors.toDF("batch_id").write.mode("overwrite").parquet(s"$dir/batchlog")
+    dropLogRow(dir, 1L)
     assert(StreamingIndex.applyIvfBatch(b1, 64, dir, 1),
       "replay of the un-marked batch must apply")
     assert(spark.read.parquet(members).count() == n,
@@ -1496,9 +1501,7 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingIndex.applyClipBatch(clips.filter($"vid" < 6), dir2, 0))
     assert(StreamingIndex.applyClipBatch(clips.filter($"vid" >= 6), dir2, 1))
     val n = spark.read.parquet(s"$dir2/postings").count()
-    val survivors = spark.read.parquet(s"$dir2/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    survivors.toDF("batch_id").write.mode("overwrite").parquet(s"$dir2/batchlog")
+    dropLogRow(dir2, 1L)
     assert(StreamingIndex.applyClipBatch(clips.filter($"vid" >= 6), dir2, 1))
     assert(spark.read.parquet(s"$dir2/postings").count() == n,
       "replay must converge to exactly one copy of the batch's postings")
@@ -1550,31 +1553,36 @@ class StreamingSpec extends SparkSpec {
   }
 
 
-  test("BM25 batchlog: driver-side at the database location, honours the old table form, and starts over after a drop") {
+  test("BM25 batchlog: at the database location, refuses foreign files, resets on drop") {
     import graft.streaming.StreamingIndex
     import spark.implicits._
     import java.nio.file.{Files => JFiles, Paths}
+    import scala.jdk.CollectionConverters._
     val docs = Tables(spark, sf).documents.select("doc_id", "text")
     def applyB(db: String, id: Long) = StreamingIndex.applyBm25Batch(
       docs.filter($"doc_id" % 2 === id % 2), "doc_id", "text", db, id)
-    val (db, old) = ("bmlog", "bmlog_old")
-    val (loc, oldLoc) = (JFiles.createTempDirectory("graft-bmlog").toString,
-      JFiles.createTempDirectory("graft-bmlog-old").toString)
-    Seq(db, old).foreach(d => spark.sql(s"DROP DATABASE IF EXISTS $d CASCADE"))
+    val db = "bmlog"
+    val loc = JFiles.createTempDirectory("graft-bmlog").toString
+    def tree() = {
+      val w = JFiles.walk(Paths.get(loc))
+      try w.iterator.asScala.map(p => p.toString -> JFiles.size(p)).toSet finally w.close()
+    }
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
     try {
       spark.sql(s"CREATE DATABASE $db LOCATION '$loc'")
       assert(applyB(db, 0))
       assert(!applyB(db, 0), "a re-delivered id must be a no-op")
       assert(JFiles.exists(Paths.get(loc, "batchlog", "b0.parquet")))
       assert(!spark.catalog.tableExists(s"$db.batchlog"), "the batchlog is no catalog table")
-      // a database whose batchlog the old applier wrote as a managed
-      // table (part-* rows in <location>/batchlog)
-      spark.sql(s"CREATE DATABASE $old LOCATION '$oldLoc'")
-      Seq(0L).toDF("batch_id").write.mode("append").saveAsTable(s"$old.batchlog")
-      assert(!applyB(old, 0), "an id logged by the old table form must be a no-op")
-      assert(!spark.catalog.tableExists(s"$old.stats"))
-      assert(applyB(old, 1))
-      assert(graft.streaming.BatchLog.ids(spark, s"$oldLoc/batchlog") == Set(0L, 1L))
+      // a file that is no row file (the part file of a log that Spark
+      // wrote, as the pre-r16 table form did) fails the next batch,
+      // naming the file, before anything is written
+      JFiles.copy(Paths.get(loc, "batchlog", "b0.parquet"),
+        Paths.get(loc, "batchlog", "part-00000.parquet"))
+      val before = tree()
+      val e = intercept[IllegalStateException](applyB(db, 1))
+      assert(e.getMessage.contains("part-00000.parquet"), e.getMessage)
+      assert(tree() == before, "a refused batch must write nothing")
       // the drop takes the whole location, batchlog included, so a
       // re-created database applies batch 0 again
       spark.sql(s"DROP DATABASE $db CASCADE")
@@ -1582,7 +1590,7 @@ class StreamingSpec extends SparkSpec {
       spark.sql(s"CREATE DATABASE $db LOCATION '$loc'")
       assert(applyB(db, 0), "batch 0 must apply to a re-created database")
     } finally {
-      Seq(db, old).foreach(d => spark.sql(s"DROP DATABASE IF EXISTS $d CASCADE"))
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
     }
   }
 
@@ -1761,11 +1769,8 @@ class StreamingSpec extends SparkSpec {
       "streamed index must answer exactly like the one-shot delta-vs-corpus")
     // crash replay: drop the last batch's log row (orphaning its
     // b<id>_* postings/sets), re-deliver — converges to exactly-once
-    val lastId = spark.read.parquet(s"$dir/batchlog")
-      .agg(org.apache.spark.sql.functions.max($"batch_id")).head.getLong(0)
-    val surv = spark.read.parquet(s"$dir/batchlog")
-      .filter($"batch_id" =!= lastId).collect().map(_.getLong(0)).toSeq
-    surv.toDF("batch_id").write.mode("overwrite").parquet(s"$dir/batchlog")
+    val lastId = lastLogged(dir)
+    dropLogRow(dir, lastId)
     assert(StreamingIndex.applyNearDupBatch(
       spark.read.parquet(files.last), "doc_id", "text", dir, lastId))
     assert(probed() == want, "replay must converge (no duplicate postings)")
@@ -1901,11 +1906,8 @@ class StreamingSpec extends SparkSpec {
     // log row (its b<id>_* deltas stay orphaned in ALL NINE subs),
     // re-deliver it — the sweep must purge every family before
     // re-applying, or some family double-counts
-    val lastId = spark.read.parquet(s"$dir/batchlog")
-      .agg(org.apache.spark.sql.functions.max($"batch_id")).head.getLong(0)
-    val survivors = spark.read.parquet(s"$dir/batchlog")
-      .filter($"batch_id" =!= lastId).collect().map(_.getLong(0)).toSeq
-    survivors.toDF("batch_id").write.mode("overwrite").parquet(s"$dir/batchlog")
+    val lastId = lastLogged(dir)
+    dropLogRow(dir, lastId)
     val lastBatch = spark.read.parquet(files.last)
     assert(StreamingIndex.applyDashboardBatch(lastBatch, "text", cols, dir, lastId))
     assert(lmRows() == lmWant, "LM family must converge after composed replay")
@@ -2142,9 +2144,7 @@ class StreamingSpec extends SparkSpec {
     // crash between the state commit and the marker: erase batch 1's
     // marker, keep its data, re-deliver — the sweep must drop the
     // orphaned b1_* state rows or counts double
-    val survivors = spark.read.parquet(s"$dir/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    survivors.toDF("batch_id").write.mode("overwrite").parquet(s"$dir/batchlog")
+    dropLogRow(dir, 1L)
     assert(StreamingIndex.applyProfileBatch(
       li.filter($"l_orderkey" % 6 === 1), cols, dir, 1))
     assert(rows() == want, "replay must converge to exactly-once state")
@@ -2175,7 +2175,7 @@ class StreamingSpec extends SparkSpec {
     val fullN = corpus.count()
     def fsOf(dir: String) = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // modern dir: build + append committed, then the marker file is
+    // build + append committed, then the marker file is
     // LOST. The next batch must recover the committed state from the
     // batchlog's applied rows and APPEND — pre-fix it re-ran the
     // all-overwrite build and silently wiped batches 0 and 1.
@@ -2187,21 +2187,8 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/codes").count() == fullN,
       "lost marker must not wipe committed appends (codes)")
     assert(spark.read.parquet(s"$dir/vectors").count() == fullN)
-    assert(Similarity.readBuiltMarker(spark, dir).contains(-1L),
+    assert(graft.streaming.BatchLog.readBuiltMarker(spark, dir).contains(-1L),
       "recovery must re-stamp the marker with the batch-API owner id")
-    // legacy dir: batchlog rows predate the `applied` column (batch_id
-    // only) — with the build's final piece committed they still prove
-    // a committed build
-    val legacy = java.nio.file.Files.createTempDirectory("graft-sq8leg").toString
-    assert(StreamingIndex.applySq8Batch(b0, legacy, 0))
-    assert(StreamingIndex.applySq8Batch(b1, legacy, 1))
-    val ids = spark.read.parquet(s"$legacy/batchlog")
-      .select("batch_id").collect().map(_.getLong(0)).toSeq
-    ids.toDF("batch_id").write.mode("overwrite").parquet(s"$legacy/batchlog")
-    fsOf(legacy).delete(new org.apache.hadoop.fs.Path(s"$legacy/_built"), false)
-    assert(StreamingIndex.applySq8Batch(b2, legacy, 2))
-    assert(spark.read.parquet(s"$legacy/codes").count() == fullN,
-      "legacy (pre-applied-column) dirs must append, not rebuild")
     // NO committed evidence: an empty batch's applied=false row plus a
     // crashed pre-marker build must still take the converging rebuild,
     // not append against partial state
@@ -2231,9 +2218,7 @@ class StreamingSpec extends SparkSpec {
     def rows() = LangModel.scoreLmIndexed(spark, dir, scoreSet, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val want = rows()
-    val survivors = spark.read.parquet(s"$dir/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    survivors.toDF("batch_id").write.mode("overwrite").parquet(s"$dir/batchlog")
+    dropLogRow(dir, 1L)
     LangModel.compactLmCounts(spark, dir)
     assert(StreamingIndex.applyLmBatch(docs.filter($"doc_id" % 2 =!= 0), "text", dir, 1))
     assert(rows() == want,
@@ -2244,9 +2229,7 @@ class StreamingSpec extends SparkSpec {
     val vdir = java.nio.file.Files.createTempDirectory("graft-sqorph").toString
     assert(StreamingIndex.applySq8Batch(corpus.filter($"vid" % 2 === 0), vdir, 0))
     assert(StreamingIndex.applySq8Batch(corpus.filter($"vid" % 2 =!= 0), vdir, 1))
-    val vsurv = spark.read.parquet(s"$vdir/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    vsurv.toDF("batch_id").write.mode("overwrite").parquet(s"$vdir/batchlog")
+    dropLogRow(vdir, 1L)
     Similarity.compactSq8Index(spark, vdir)
     assert(StreamingIndex.applySq8Batch(corpus.filter($"vid" % 2 =!= 0), vdir, 1))
     assert(spark.read.parquet(s"$vdir/codes").count() == corpus.count(),
@@ -2257,9 +2240,7 @@ class StreamingSpec extends SparkSpec {
     val idir = java.nio.file.Files.createTempDirectory("graft-ivforph").toString
     assert(StreamingIndex.applyIvfBatch(corpus.filter($"vid" % 2 === 0), 64, idir, 0))
     assert(StreamingIndex.applyIvfBatch(corpus.filter($"vid" % 2 =!= 0), 64, idir, 1))
-    val isurv = spark.read.parquet(s"$idir/batchlog")
-      .filter($"batch_id" =!= 1L).collect().map(_.getLong(0)).toSeq
-    isurv.toDF("batch_id").write.mode("overwrite").parquet(s"$idir/batchlog")
+    dropLogRow(idir, 1L)
     Similarity.compactIvfIndex(spark, idir)
     assert(StreamingIndex.applyIvfBatch(corpus.filter($"vid" % 2 =!= 0), 64, idir, 1))
     assert(spark.read.parquet(s"$idir/members").count() == corpus.count(),
