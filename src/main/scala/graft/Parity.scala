@@ -26,8 +26,4 @@ object Parity {
   def sumRevenue(price: Column, discount: Column): Column =
     sum(dec2(price) * (lit(1).cast(DecimalType(18, 2)) - dec2(discount)))
       .cast("double")
-
-  /** AVG as exact-sum / count — deterministic, unlike native avg(). */
-  def avgD(c: Column): Column =
-    (sum(dec2(c)).cast("double") / count(c)).as("avg")
 }

@@ -1,6 +1,5 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Target-schema resolution — the engine's catalog component
@@ -36,11 +35,6 @@ final case class TargetSchema(
 }
 
 object TargetSchema {
-
-  /** From a registered catalog table (tests / lakehouse targets). */
-  def fromCatalog(spark: SparkSession, table: String,
-      shardingKey: Option[String] = None): TargetSchema =
-    TargetSchema(spark.table(table).schema, shardingKey)
 
   /** From explicit DDL, e.g. `"a INT, b STRING, dt DATE"` — the
     * config-driven path (no live target needed).

@@ -377,37 +377,6 @@ object QuantizeVec {
   def quantizeVec(v: Column): Column = column(QuantizeVec(expression(v)))
 }
 
-/** Identity wrapper that pins its child's evaluation to ONCE PER
-  * INPUT ROW. Whole-stage codegen splices a projected expression's
-  * code at its first USE site — for the stream side of a (broadcast)
-  * nested-loop join that site is INSIDE the per-pair inner loop, so a
-  * pure-codegen encode expression silently re-runs per PAIR (measured
-  * on q196: binaryTopK 0.99 s with the old CodegenFallback HOF encode
-  * — which was evaluated eagerly per row precisely BECAUSE it was
-  * fallback — vs 1.55 s after the encode became codegen-able and got
-  * deferred into the corpus×queries loop; at 100 TB that deferral
-  * multiplies a full-corpus encode by the query count). Wrapping the
-  * projected column in EvalOnce makes the projection CodegenFallback:
-  * the row's value is computed once by the expression's own
-  * interpreted eval (the kernels' nullSafeEval is the same tight loop
-  * the generated code runs) and downstream consumers read the
-  * materialized value.
-  */
-case class EvalOnce(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    child.eval(input)
-  override protected def withNewChildInternal(c: Expression): EvalOnce =
-    copy(child = c)
-}
-
-object EvalOnce {
-  def evalOnce(c: Column): Column = column(EvalOnce(expression(c)))
-}
-
 /** Hashing-trick vectorizer bucket of a token: the position-weighted
   * code-point sum `Σ cp_i·(i+1)` mod `dim` — the kernel of
   * [[graft.operators.Retrieval.hashedVectors]], which runs once per

@@ -8,16 +8,15 @@ import org.apache.spark.sql.graft.Bridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native sketch expressions: single-pass JVM loops replacing chains
-  * of interpreted higher-order functions (transform/aggregate lambdas
-  * run row-at-a-time in Spark) on the hot dedup/ANN paths.
-  *
-  * Each expression's kernel lives as a static method on [[SketchOps]]
-  * and `doGenCode` emits a direct static call — the expression stays
-  * inside whole-stage codegen (same pattern as [[Murmur3Hash64]]), no
-  * CodegenFallback virtual `eval(InternalRow)` round-trip and no
-  * interpreted-projection fallback in the surrounding span.
-  */
+// Native sketch expressions: single-pass JVM loops replacing chains
+// of interpreted higher-order functions (transform/aggregate lambdas
+// run row-at-a-time in Spark) on the hot dedup/ANN paths.
+//
+// Each expression's kernel lives as a static method on `SketchOps`
+// and `doGenCode` emits a direct static call — the expression stays
+// inside whole-stage codegen (same pattern as `Murmur3Hash64`), no
+// CodegenFallback virtual `eval(InternalRow)` round-trip and no
+// interpreted-projection fallback in the surrounding span.
 
 /** Static kernels shared by interpreted eval and generated code.
   * Plain object → the compiler emits static forwarders, so janino can
@@ -343,7 +342,7 @@ object ShingleHash64 {
   * struct(n, distinct, topTok, topBig, triUniq); see
   * [[SketchOps.repStats]]. The dominant cost of the composed ingest
   * dashboard at scale was this family's five separate text passes
-  * (DashBench sf100: 120.9 s of the 122.8 s separate total).
+  * (SCALE.md, sf100: 120.9 s of the 122.8 s separate total).
   */
 case class RepStats(child: Expression) extends UnaryExpression {
   override def dataType: DataType =

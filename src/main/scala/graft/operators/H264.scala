@@ -244,14 +244,6 @@ object H264 {
       profileIdc: Int, levelIdc: Int, width: Int, height: Int,
       nNals: Int, nIdr: Int, nSlices: Int, sliceChecksum: Long)
 
-  /** Scan NAL units between start codes (00 00 01 with any number of
-    * leading zeros), de-escape each, parse the SPS, and checksum the
-    * slice payloads weighted by slice index — None on any structural
-    * violation (no SPS, bad Exp-Golomb, truncation).
-    */
-  /** Start-code scan → (nalStart, nalEnd) pairs; header byte at
-    * nalStart. Handles any number of leading zeros before 01.
-    */
   /** Start-code NAL scan for container muxing ([[Multimodal
     * .synthesizeMp4Avc1]] re-frames these as AVCC length-prefixed
     * samples): (start, end) byte ranges with the header byte at
@@ -260,6 +252,9 @@ object H264 {
   private[graft] def nalUnits(p: Array[Byte]): Seq[(Int, Int)] =
     scanNals(p).toSeq
 
+  /** Start-code scan → (nalStart, nalEnd) pairs; header byte at
+    * nalStart. Handles any number of leading zeros before 01.
+    */
   private def scanNals(p: Array[Byte]): ArrayBuffer[(Int, Int)] = {
     val nals = new ArrayBuffer[(Int, Int)]()
     var i = 0
@@ -319,6 +314,11 @@ object H264 {
     Some(SpsInfo(profile, level, w, h, mbW, mbH))
   }
 
+  /** Scan NAL units between start codes (00 00 01 with any number of
+    * leading zeros), de-escape each, parse the SPS, and checksum the
+    * slice payloads weighted by slice index — None on any structural
+    * violation (no SPS, bad Exp-Golomb, truncation).
+    */
   def parseStream(p: Array[Byte]): Option[StreamMeta] = {
     try {
       val nals = scanNals(p)
@@ -796,12 +796,6 @@ object H264 {
     Some(out)
   }
 
-  /** Dequant (flat scaling matrices) + integer inverse 4x4 transform
-    * (8.5.12): returns 16 spatial residuals in raster order. Exact
-    * spec arithmetic — V-table by (qp%6, position class), << (qp/6)
-    * for qp ≥ 24 and the rounding shift below, row/column butterflies
-    * with the d1>>1 floor, final (x+32)>>6.
-    */
   /** CAVLC-encode one chroma DC 2x2 block (coefficients in the DC
     * scan order c(0,0), c(0,1), c(1,0), c(1,1)): coeff_token from the
     * nC == -1 column, then the same trailing-one/level machinery as
@@ -1025,6 +1019,12 @@ object H264 {
     else Array(29, 30, 31, 32, 32, 33, 34, 34, 35, 35, 36, 36, 37, 37,
       37, 38, 38, 38, 39, 39, 39, 39)(math.min(qp, 51) - 30)
 
+  /** Dequant (flat scaling matrices) + integer inverse 4x4 transform
+    * (8.5.12): returns 16 spatial residuals in raster order. Exact
+    * spec arithmetic — V-table by (qp%6, position class), << (qp/6)
+    * for qp ≥ 24 and the rounding shift below, row/column butterflies
+    * with the d1>>1 floor, final (x+32)>>6.
+    */
   private[operators] def dequantIdct4x4(scan: Array[Int], qp: Int): Array[Int] = {
     val vTab = Array(
       Array(10, 16, 13), Array(11, 18, 14), Array(13, 20, 16),
@@ -3822,18 +3822,18 @@ object H264 {
     out.toArray
   }
 
-  /** Per-(frame, partition) constant mvs of the B-PARTITION streams
-    * (quarter units, multiples of 8): partition 0 reuses the q169
-    * list constants ([[synthBiQ0]]/[[synthBiQ1]]); partition 1 gets
-    * its own per-list forms so the 16x8/8x16 split is observable in
-    * the pixels (identical mvs would decode like 16x16).
-    */
   /** (pred0, pred1) per Table 7-14 two-partition row group
     * ((mb_type − 4) / 2): 0 = L0, 1 = L1, 2 = Bi.
     */
   private[graft] val bPartModes: Array[(Int, Int)] = Array(
     (0, 0), (1, 1), (0, 1), (1, 0), (0, 2), (1, 2), (2, 0), (2, 1), (2, 2))
 
+  /** Per-(frame, partition) constant mvs of the B-PARTITION streams
+    * (quarter units, multiples of 8): partition 0 reuses the q169
+    * list constants ([[synthBiQ0]]/[[synthBiQ1]]); partition 1 gets
+    * its own per-list forms so the 16x8/8x16 split is observable in
+    * the pixels (identical mvs would decode like 16x16).
+    */
   private[graft] def synthBPartQ0b(seed: Long, f: Int): (Int, Int) =
     (8 * (((2L * seed + f + 1L) % 3).toInt - 1), 8 * (((seed + 5L * f) % 3).toInt - 1))
   private[graft] def synthBPartQ1b(seed: Long, f: Int): (Int, Int) =

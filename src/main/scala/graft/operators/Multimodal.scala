@@ -1220,6 +1220,19 @@ object Multimodal {
     out.write(pngBe32(crc.getValue), 0, 4)
   }
 
+  /** Integer straight-alpha OVER (the documented [[decodeApng]]
+    * contract): `denA = srcA·255 + dstA·(255−srcA)`,
+    * `outV = (srcV·srcA·255 + dstV·dstA·(255−srcA)) div denA` (0 when
+    * denA = 0), `outA = denA div 255`. Exact copy/keep at alpha
+    * 255/0; floor divisions everywhere else.
+    */
+  private[graft] def blendOver(sv: Int, sa: Int, dv: Int, da: Int): (Int, Int) = {
+    val denA = sa * 255 + da * (255 - sa)
+    val ov = if (denA == 0) 0
+      else ((sv.toLong * sa * 255 + dv.toLong * da * (255 - sa)) / denA).toInt
+    (ov, denA / 255)
+  }
+
   /** APNG frame walk (read-side counterpart of [[synthesizeApng]]):
     * CRC-validated chunk walk, acTL frame count cross-checked against
     * the fcTL count, per-frame zlib streams (IDAT concat when the
@@ -1252,19 +1265,6 @@ object Multimodal {
     * oracles. A plain single-image PNG (no acTL) returns None — it
     * is not an animation.
     */
-  /** Integer straight-alpha OVER (the documented [[decodeApng]]
-    * contract): `denA = srcA·255 + dstA·(255−srcA)`,
-    * `outV = (srcV·srcA·255 + dstV·dstA·(255−srcA)) div denA` (0 when
-    * denA = 0), `outA = denA div 255`. Exact copy/keep at alpha
-    * 255/0; floor divisions everywhere else.
-    */
-  private[graft] def blendOver(sv: Int, sa: Int, dv: Int, da: Int): (Int, Int) = {
-    val denA = sa * 255 + da * (255 - sa)
-    val ov = if (denA == 0) 0
-      else ((sv.toLong * sa * 255 + dv.toLong * da * (255 - sa)) / denA).toInt
-    (ov, denA / 255)
-  }
-
   def decodeApng(p: Array[Byte]): Option[(Int, Int, Int, Long, Long)] =
     apngCanvases(p).map { case (w, h, snaps) =>
       var sum = 0L; var weighted = 0L

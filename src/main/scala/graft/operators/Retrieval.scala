@@ -75,10 +75,7 @@ object Retrieval {
     *
     * @param queries (query_id, text) pairs; distinct query terms score
     *                with qtf=1.
-    * @return (query_id, rank, doc_id, score_fp) — rank 1-based by
-    *         (score desc, doc_id asc).
-    */
-  /** @param maxDfFraction stop-term guard: query terms whose document
+    * @param maxDfFraction stop-term guard: query terms whose document
     *                       frequency exceeds this fraction of the
     *                       corpus are skipped entirely (both candidate
     *                       generation and scoring). At 100 TB a single
@@ -89,6 +86,8 @@ object Retrieval {
     *                       default) disables the guard; the cutoff is
     *                       the exact integer test `df·1e6 <= frac·1e6·N`
     *                       so an oracle can mirror it.
+    * @return (query_id, rank, doc_id, score_fp) — rank 1-based by
+    *         (score desc, doc_id asc).
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
       queries: Seq[(Long, String)], k: Int,

@@ -72,22 +72,6 @@ object Similarity {
     rankTopK(pairs, k)
   }
 
-  /** SQ8 scalar-quantized top-k — the remaining member of the
-    * quantization family (LSH buckets, IVF cells, PQ codebooks, and
-    * now per-DIMENSION 8-bit affine codes, the faiss ScalarQuantizer
-    * design). Train is ONE corpus pass: per-dimension (min, max) via
-    * posexplode + map-side-combined min/max (the shuffle carries
-    * dim × partitions rows, not data); the dim-sized stats are
-    * bounded driver metadata folded into literal arrays. Encode packs
-    * each vector to `array<tinyint>` — one BYTE per dimension, the 4×
-    * (vs int) / 8× (vs double) compression that lets the flat scan's
-    * working set shrink accordingly at 100 TB. Scoring is asymmetric
-    * (uncompressed query against on-the-fly affine reconstruction —
-    * the ADC idea without codebooks), shortlists through the bounded
-    * TopKAgg, and exact-re-ranks only the shortlist. SQ8 compresses
-    * the scan rather than pruning it — compose with IVF cells when
-    * pruning is also wanted.
-    */
   /** One corpus pass of per-dimension (min, span/255) train stats —
     * dim-sized bounded driver metadata.
     */
@@ -150,16 +134,9 @@ object Similarity {
     // lambda (the QDot rationale); queries pre-cast to double once on
     // the broadcast side.
     import graft.functions.DDot.ddot
-    import graft.functions.EvalOnce.evalOnce
-    // EvalOnce: BOTH computed columns must be pinned to once-per-row —
-    // whole-stage codegen splices a pure-codegen projection at its
-    // first use site, which for this nested-loop join is inside the
-    // per-pair loop (the q196 deferral, graft.functions.EvalOnce
-    // scaladoc); rv was accidentally safe as a CodegenFallback HOF,
-    // rn (codegen ddot+sqrt) was not
     val rec = enc
-      .withColumn("rv", evalOnce(recon))
-      .withColumn("rn", evalOnce(sqrt(ddot($"rv", $"rv"))))
+      .withColumn("rv", recon)
+      .withColumn("rn", sqrt(ddot($"rv", $"rv")))
     val qd = broadcast(queries.select($"vid".as("q_vid"),
       transform($"qv", _.cast("double")).as("q_dv")))
     rec.join(qd, $"q_vid" =!= $"vid")
@@ -168,6 +145,22 @@ object Similarity {
           .otherwise(ddot($"q_dv", $"rv") / $"rn").as("cos"))
   }
 
+  /** SQ8 scalar-quantized top-k — the remaining member of the
+    * quantization family (LSH buckets, IVF cells, PQ codebooks, and
+    * now per-DIMENSION 8-bit affine codes, the faiss ScalarQuantizer
+    * design). Train is ONE corpus pass: per-dimension (min, max) via
+    * posexplode + map-side-combined min/max (the shuffle carries
+    * dim × partitions rows, not data); the dim-sized stats are
+    * bounded driver metadata folded into literal arrays. Encode packs
+    * each vector to `array<tinyint>` — one BYTE per dimension, the 4×
+    * (vs int) / 8× (vs double) compression that lets the flat scan's
+    * working set shrink accordingly at 100 TB. Scoring is asymmetric
+    * (uncompressed query against on-the-fly affine reconstruction —
+    * the ADC idea without codebooks), shortlists through the bounded
+    * TopKAgg, and exact-re-ranks only the shortlist. SQ8 compresses
+    * the scan rather than pruning it — compose with IVF cells when
+    * pruning is also wanted.
+    */
   def sq8TopK(queries: DataFrame, corpus: DataFrame, topK: Int,
       shortlistFactor: Int = 4): DataFrame = {
     val (mn, dl) = sq8Train(corpus)
@@ -366,14 +359,7 @@ object Similarity {
     // 100 TB the encode is a full corpus pass and the scoring loop is
     // corpus×queries. Packed words and distances are bit-identical.
     val thrA = array(thr.map(lit): _*)
-    // EvalOnce: the encode must run once per ROW — without the pin,
-    // whole-stage codegen defers the stream-side projection into the
-    // corpus×queries inner loop of the join below and the encode runs
-    // once per PAIR (see graft.functions.EvalOnce scaladoc; measured
-    // 2× on this gate at sf0.1, queries× at scale)
-    def signWords(v: Column): Column =
-      graft.functions.EvalOnce.evalOnce(
-        graft.functions.SignPack32.signPack(v, thrA))
+    def signWords(v: Column): Column = graft.functions.SignPack32.signPack(v, thrA)
     val enc = corpus.select($"vid", signWords($"qv").as("sig"))
     val q = broadcast(queries
       .select($"vid".as("q_vid"), signWords($"qv").as("q_sig")))
@@ -621,9 +607,9 @@ object Similarity {
 
   /** Lloyd's k-means over the quantized grid — the IVF coarse
     * quantizer trainer. Init is the deterministic stride sample; each
-    * round is (broadcast centroids → nearest-centroid argmax as a
-    * map-side partial `max(struct)` aggregation → per-cell elementwise
-    * mean via [[graft.functions.VecMeanAgg]]). No window shuffle, no
+    * round is (broadcast centroids → nearest-centroid assignment,
+    * [[cellsFor]] with n = 1 → per-cell elementwise mean via
+    * [[graft.functions.VecMeanAgg]]). No window shuffle, no
     * posexplode row blow-up: per round the shuffle carries one
     * (dim+1)-long partial per (partition, cell) — the classic scalable
     * k-means shape (centroids broadcast, data never re-partitioned).
@@ -642,33 +628,15 @@ object Similarity {
     var it = 0
     while (it < iters) {
       val bc = broadcast(cents.withColumn("c_nrm", normQ($"c_qv")))
-      cents = corpus.join(bc)
-        .withColumn("c_cos", cosineQ($"qv", $"c_qv", $"nrm", $"c_nrm"))
-        .groupBy($"vid")
-        // hash-aggregated argmax (TopKAgg k=1): max(struct(...)) with
-        // the vector payload is a SortAggregate that SORTS the whole
-        // corpus×centroid stream — the measured wall in the sf10
-        // assignment stages. any_value(qv) is deterministic (qv is
-        // functionally dependent on vid).
-        .agg(graft.functions.TopKAgg.topk_by_score($"c_cos", $"cid", 1).as("best"),
-          any_value($"qv").as("v"))
-        .groupBy($"best"(0)("id").as("cid"))
-        .agg(VecMeanAgg.vec_mean($"v", dim).as("c_qv"))
+      cents = cellsFor(corpus, bc, 1, "")
+        .groupBy($"cid")
+        .agg(VecMeanAgg.vec_mean($"qv", dim).as("c_qv"))
         .localCheckpoint()
       it += 1
     }
     cents.withColumn("c_nrm", normQ($"c_qv"))
   }
 
-  /** IVF (inverted-file) ANN: a coarse quantizer partitions the corpus
-    * into cells; queries probe their `nProbe` nearest cells and rank
-    * only those cells' members. The two joins are (corpus × centroids)
-    * with the centroid side broadcast, and a cell-keyed equi-join —
-    * both linear in corpus size. Centroids are the deterministic
-    * stride sample by default, or k-means-trained ([[trainCentroids]])
-    * when `trainIters > 0` — same assignment/probe machinery, tighter
-    * cells, better recall at equal probes.
-    */
   /** Broadcast coarse-quantizer centroids — trained k-means when
     * `trainIters > 0`, else the deterministic stride sample. Shared by
     * IVF, IVF-PQ and semantic dedup.
@@ -748,7 +716,7 @@ object Similarity {
       val adaptiveSize = math.max(targetCellSize,
         math.ceil(math.sqrt(n.toDouble) / 4).toInt)
       val (l1, l2) = hierQuantizer(corpus, dim, adaptiveSize, trainIters)
-      Quantizer(df => assignHier(df, l1, l2),
+      Quantizer(df => probeHier(df, l1, l2, nL1 = 1, nProbe = 1),
         (df, np) => probeHier(df, l1, l2, nL1 = 2, nProbe = np))
     } else {
       val cents = coarseCentroids(corpus, centroidStride, dim, trainIters)
@@ -799,7 +767,7 @@ object Similarity {
       l2 = asg1.join(bc, $"cid" === $"l1")
         .withColumn("c_cos", cosineQ($"qv", $"c_qv", $"nrm", $"c_nrm"))
         .groupBy($"vid")
-        // hash-aggregated argmax (see trainCentroids) — scids are
+        // hash-aggregated argmax (see cellsFor) — scids are
         // globally unique and a vector only scores its own L1 cell's
         // subs, so (l1, scid) regroups via any_value(cid)
         .agg(graft.functions.TopKAgg.topk_by_score($"c_cos", $"scid", 1).as("best"),
@@ -813,27 +781,12 @@ object Similarity {
     (l1, broadcast(l2))
   }
 
-  /** One-cell hierarchical assignment: L1 argmax (c1 scores) then
-    * argmax among that cell's sub-centroids. Emits (vid, qv, nrm, cid)
-    * with cid = the winning sub-centroid id. Inputs must be corpus
-    * members or share its vector space (every L1 cell has ≥1
-    * sub-centroid by construction, so the equi-join drops nothing).
-    */
-  private[graft] def assignHier(df: DataFrame, l1: DataFrame,
-      l2: DataFrame): DataFrame =
-    cellsFor(df, l1, 1, "")
-      .join(l2, $"cid" === $"l1")
-      .withColumn("c_cos", cosineQ($"qv", $"c_qv", $"nrm", $"c_nrm"))
-      .groupBy($"vid")
-      .agg(graft.functions.TopKAgg.topk_by_score($"c_cos", $"scid", 1).as("best"),
-        any_value($"qv").as("v"), any_value($"nrm").as("nm"))
-      .select($"vid", $"v".as("qv"), $"nm".as("nrm"),
-        $"best"(0)("id").as("cid"))
-
   /** Multi-cell hierarchical probe: nL1 nearest level-1 cells, then
     * the nProbe best sub-centroids among their unions — the two-level
     * probe every multi-index ANN system uses. One row per (vid,
-    * probed cid).
+    * probed cid); `nL1 = nProbe = 1` is the one-cell assignment (every
+    * L1 cell has ≥1 sub-centroid by construction, so the equi-join
+    * drops nothing).
     */
   private[graft] def probeHier(df: DataFrame, l1: DataFrame, l2: DataFrame,
       nL1: Int, nProbe: Int): DataFrame =
@@ -845,6 +798,15 @@ object Similarity {
         any_value($"qv").as("v"), any_value($"nrm").as("nm"))
       .select($"vid", $"v".as("qv"), $"nm".as("nrm"), explode($"cells.id").as("cid"))
 
+  /** IVF (inverted-file) ANN: a coarse quantizer partitions the corpus
+    * into cells; queries probe their `nProbe` nearest cells and rank
+    * only those cells' members. The two joins are (corpus × centroids)
+    * with the centroid side broadcast, and a cell-keyed equi-join —
+    * both linear in corpus size. Centroids are the deterministic
+    * stride sample by default, or k-means-trained ([[trainCentroids]])
+    * when `trainIters > 0` — same assignment/probe machinery, tighter
+    * cells, better recall at equal probes.
+    */
   def ivfTopK(corpus: DataFrame, k: Int, centroidStride: Int = 50,
       nProbe: Int = 2, dim: Int = 0, trainIters: Int = 0,
       queries: DataFrame = null): DataFrame = {
@@ -869,39 +831,28 @@ object Similarity {
     rankTopK(cands, k)
   }
 
-  /** Cell assignment against a broadcast centroid set — argmax
-    * centroid cosine (deterministic ties by cid). `n == 1` is the
-    * member-side single-cell argmax (the same map-side partial
-    * `max(struct)` shape trainCentroids uses: one partial row per
-    * (partition, vid) instead of a full row_number window shuffle over
-    * corpus×centroid scored rows); `n > 1` is the probe-side top-n via
-    * the bounded TopKAgg partial aggregate — one k-bounded partial row
-    * per (vid, map partition). qv/nrm are functionally dependent on
-    * vid (`any_value` is deterministic here), so the group stays
-    * narrow. Shared by IVF and the IVF-PQ composition.
+  /** The `n` nearest cells of each vector against a broadcast
+    * centroid set, by centroid cosine (deterministic ties by cid): one
+    * row per (vid, cell); `n = 1` is the one-cell assignment. The
+    * top-n runs as the bounded TopKAgg partial aggregate — one
+    * n-bounded partial row per (vid, map partition), no window shuffle
+    * over the corpus×centroid scored rows, and no struct-typed
+    * `max`, which plans a SortAggregate that sorts that whole stream
+    * (the sf10 assignment wall: 850 s of spill-merge CPU per task).
+    * qv/nrm are functionally dependent on vid (`any_value` is
+    * deterministic here), so the group stays narrow. Shared by IVF,
+    * k-means training, IVF-PQ and semantic dedup.
     */
   private[graft] def cellsFor(df: DataFrame, centroids: DataFrame,
-      n: Int, outPrefix: String): DataFrame = {
-    val scored = df.join(centroids)
+      n: Int, outPrefix: String): DataFrame =
+    df.join(centroids)
       .withColumn("c_cos", cosineQ($"qv", $"c_qv", $"nrm", $"c_nrm"))
-    if (n == 1)
-      scored.groupBy($"vid")
-        // TopKAgg(1), not max(struct(...)): a struct-typed max is a
-        // SortAggregate (struct buffers aren't hash-mutable), which
-        // SORTS the n×C scored stream — the assignment wall the sf10
-        // profile caught (850 s of spill-merge CPU per task)
-        .agg(graft.functions.TopKAgg.topk_by_score($"c_cos", $"cid", 1).as("best"),
-          any_value($"qv").as("v"), any_value($"nrm").as("nm"))
-        .select($"vid".as(s"${outPrefix}vid"), $"v".as(s"${outPrefix}qv"),
-          $"nm".as(s"${outPrefix}nrm"), $"best"(0)("id").as("cid"))
-    else
-      scored.groupBy($"vid")
-        .agg(
-          graft.functions.TopKAgg.topk_by_score($"c_cos", $"cid", n).as("cells"),
-          any_value($"qv").as("v"), any_value($"nrm").as("nm"))
-        .select($"vid".as(s"${outPrefix}vid"), $"v".as(s"${outPrefix}qv"),
-          $"nm".as(s"${outPrefix}nrm"), explode($"cells.id").as("cid"))
-  }
+      .groupBy($"vid")
+      .agg(
+        graft.functions.TopKAgg.topk_by_score($"c_cos", $"cid", n).as("cells"),
+        any_value($"qv").as("v"), any_value($"nrm").as("nm"))
+      .select($"vid".as(s"${outPrefix}vid"), $"v".as(s"${outPrefix}qv"),
+        $"nm".as(s"${outPrefix}nrm"), explode($"cells.id").as("cid"))
 
   /** PERSISTED IVF index — the q116 persisted-BM25 story for vectors:
     * at 100 TB you train the coarse quantizer once, not per query
@@ -942,7 +893,7 @@ object Similarity {
       // partition by the √C-bounded L1 cell and keep cid as a plain
       // column — the probe prunes partitions on l1 and row groups on
       // cid (parquet min/max after the per-l1 write clusters cids)
-      assignHier(corpus, l1, l2)
+      probeHier(corpus, l1, l2, nL1 = 1, nProbe = 1)
         .join(broadcast(l2.select($"scid".as("cid"), $"l1")), "cid")
         .select($"vid".as("m_vid"), $"qv".as("m_qv"), $"nrm".as("m_nrm"),
           $"cid", $"l1")
@@ -956,16 +907,16 @@ object Similarity {
     graft.streaming.BatchLog.writeBuiltMarker(corpus.sparkSession, dir, builtBy)
   }
 
-  /** The persisted quantizer structure, dispatched on the layout the
-    * build wrote (two-level tables when present, flat otherwise) —
-    * readers never need to know which scale regime built the index.
-    */
   /** The persisted layout: the quantizer rebuilt from the on-disk
     * tables, plus (two-level only) the tiny cid → l1 map that routes
     * rows to the bounded L1 directory partitioning.
     */
   private case class IvfLayout(quant: Quantizer, cidToL1: Option[DataFrame])
 
+  /** The persisted quantizer structure, dispatched on the layout the
+    * build wrote (two-level tables when present, flat otherwise) —
+    * readers never need to know which scale regime built the index.
+    */
   private def readLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String): IvfLayout = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/centroids_l1")
@@ -976,7 +927,7 @@ object Similarity {
       val l1 = broadcast(TinyParquet.local(spark, s"$dir/centroids_l1"))
       val l2 = broadcast(TinyParquet.local(spark, s"$dir/centroids_l2"))
       IvfLayout(
-        Quantizer(df => assignHier(df, l1, l2),
+        Quantizer(df => probeHier(df, l1, l2, nL1 = 1, nProbe = 1),
           (df, np) => probeHier(df, l1, l2, nL1 = 2, nProbe = np)),
         Some(l2.select($"scid".as("cid"), $"l1")))
     } else {

@@ -4,7 +4,7 @@ import graft.config.LoaderConfig
 import graft.functions.WireBytes
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StringType
 
 /** The reference mapper's per-row transform pipeline (SURVEY.md §2.A
   * ops #3-#10), re-expressed as pure column expressions so Catalyst
@@ -162,12 +162,4 @@ object TransformStage {
       concat_ws(cfg.clickhouseFormat.separator,
         withExtras.columns.map(col).toIndexedSeq: _*))
   }
-
-  /** Schema-arity check for columnar input (the typed-world analogue of
-    * op #10): fail fast if the frame doesn't match the target schema
-    * width.
-    */
-  def validateArity(df: DataFrame, target: StructType): Unit =
-    require(df.schema.length == target.length,
-      s"arity mismatch: input has ${df.schema.length} columns, target has ${target.length}")
 }

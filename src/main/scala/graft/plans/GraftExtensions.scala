@@ -5,10 +5,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
 /** SparkSessionExtensions entry point: exposes the engine's custom
-  * Catalyst expressions to SQL and adds one physical rule,
-  * [[DropMicroShuffles]], to AQE's query-stage preparation. Installed
-  * at session build time (`.withExtensions(new GraftExtensions)` in
-  * [[graft.GraftSession]]).
+  * Catalyst expressions to SQL and adds two physical rules:
+  * [[DropMicroShuffles]] to AQE's query-stage preparation, and
+  * [[StreamedColumnsOnce]] before the columnar transitions, with AQE
+  * on and off. Installed at session build time
+  * (`.withExtensions(new GraftExtensions)` in [[graft.GraftSession]]).
   *
   * SQL surface:
   *   graft_shard_code(s)        — murmur3_128(s).asInt & MaxInt (op #12)
@@ -34,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         (exprs: Seq[Expression]) => builder(exprs)))
     }
     e.injectQueryStagePrepRule(_ => DropMicroShuffles)
+    e.injectColumnar(_ => new StreamedColumnsOnce.Hook)
   }
 }
 

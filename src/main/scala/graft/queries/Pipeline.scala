@@ -17,15 +17,6 @@ object Pipeline {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** One-row recall audit for an approximate ANN result: the approx
-    * neighbor set is scored against the exact brute-force truth for
-    * the same (bounded) query set, so DuckDB can gate the output by
-    * value — n_queries/n_truth are predictable from the corpus size
-    * and `recall_in_bound` must come out TRUE. The ANN operator under
-    * test still runs in full; only its audit is aggregated. The truth
-    * side bounds its cost by the capped query set (the same cap the
-    * oracle's `least(count, cap)` mirrors).
-    */
   /** Recursive delete for per-query temp index directories (the
     * result DataFrame must be localCheckpoint'd first — probes read
     * the index lazily).
@@ -84,6 +75,15 @@ object Pipeline {
     }
   }
 
+  /** One-row recall audit for an approximate ANN result: the approx
+    * neighbor set is scored against the exact brute-force truth for
+    * the same (bounded) query set, so DuckDB can gate the output by
+    * value — n_queries/n_truth are predictable from the corpus size
+    * and `recall_in_bound` must come out TRUE. The ANN operator under
+    * test still runs in full; only its audit is aggregated. The truth
+    * side bounds its cost by the capped query set (the same cap the
+    * oracle's `least(count, cap)` mirrors).
+    */
   private[queries] def annRecallAudit(approx: DataFrame, queries: DataFrame,
       corpus: DataFrame, minRecall: Double): DataFrame = {
     val truth = Similarity.bruteForceTopK(queries, corpus, k = 5)
@@ -98,10 +98,6 @@ object Pipeline {
         (col("n_hits") / col("n_truth") >= minRecall).as("recall_in_bound"))
   }
 
-  /** Shared oracle SQL: exact word-3-gram Jaccard pairs >= 0.8.
-    * Used for both q31 (exact path) and q32 (minhash+LSH+verify path —
-    * identical output, miss probability < 5e-8 per pair).
-    */
   // q44's recursive closure: near-dup edges -> reachable-label walk ->
   // min label per doc. Shared by the direct (q44) and collapse-first
   // (q125) pipelines, which are output-identical by construction.
@@ -424,6 +420,10 @@ object Pipeline {
       |FROM terms GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin
 
+  /** Shared oracle SQL: exact word-3-gram Jaccard pairs >= 0.8.
+    * Used for both q31 (exact path) and q32 (minhash+LSH+verify path —
+    * identical output, miss probability < 5e-8 per pair).
+    */
   private val jaccardOracle =
     """WITH sp AS (SELECT doc_id, string_split(text,' ') AS sp FROM documents),
       |sh AS (SELECT DISTINCT doc_id, sp[i.g] || ' ' || sp[i.g+1] || ' ' || sp[i.g+2] AS sh
@@ -4482,10 +4482,6 @@ object Pipeline {
        |SELECT node, CAST(pr AS BIGINT) AS pr FROM p5 ORDER BY node""".stripMargin
   }
 
-  /** Unrolled MMR oracle: the q102 fusion chain, candidate pair-sims
-    * from the hashed vectors, then one CTE per greedy step — the same
-    * λ=1/2 integer contract `Retrieval.mmrRerank` runs.
-    */
   /** Unrolled facility-location oracle: the same fused-shortlist +
     * candidate-sim scaffolding as [[mmrOracle]], with each greedy step
     * an argmax of the weighted coverage gain
@@ -4563,6 +4559,10 @@ object Pipeline {
        |ORDER BY query_id, sel_rank""".stripMargin
   }
 
+  /** Unrolled MMR oracle: the q102 fusion chain, candidate pair-sims
+    * from the hashed vectors, then one CTE per greedy step — the same
+    * λ=1/2 integer contract `Retrieval.mmrRerank` runs.
+    */
   private def mmrOracle: String = {
     val steps = (2 to 5).map { t =>
       s"""sel$t AS (SELECT query_id, doc_id, CAST($t AS BIGINT) AS sel_rank FROM (

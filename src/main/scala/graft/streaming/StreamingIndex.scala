@@ -223,7 +223,8 @@ object StreamingIndex {
     * probe) and stages all nine sub-tables
     * (c12/c1/cw/c123/state/rep/bands/sets/docs) as CONCURRENT jobs —
     * composed cost ≈ scan + max-ish(per-family compute), not sum
-    * (measured: tools/DashBench). The order-3 leg adds ONE sub-table
+    * (measured at sf10 and sf100, SCALE.md: composed 14.0 s against
+    * 22.9 s separate at sf100). The order-3 leg adds ONE sub-table
     * (`c123`): its unigram table is byte-identical to the bigram
     * leg's `cw`, so both orders score off the shared copy
     * ([[graft.operators.LangModel.appendTrigramCounts]]). One commit
@@ -236,23 +237,13 @@ object StreamingIndex {
     * [[graft.operators.Profiling.profileIndexed]] /
     * [[graft.operators.IngestDashboard.repQuantilesIndexed]] /
     * [[graft.operators.Dedup.nearDupProbeIndexed]] unchanged.
-    *
-    * `shareScan` names the REGIME the composition assumes: true
-    * (default) persists the batch once and is right whenever the
-    * source is expensive to re-pull (remote object store, an upstream
-    * computation, a cold cluster read — the 100 TB shape); false
-    * skips the persist and lets each family re-scan the source,
-    * which WINS when re-pulls are near-free (page-cached local
-    * parquet — measured at sf100-local, DashBench: the
-    * materialization cost exceeds four extra cached scans). Both
-    * settings stage and commit identically and are value-exact.
     */
   def applyDashboardBatch(batch: DataFrame, textCol: String,
       numCols: Seq[String], dir: String, batchId: Long,
       p: Int = 12, alpha: Double = graft.operators.IngestDashboard.Alpha,
-      idCol: String = "doc_id", shareScan: Boolean = true): Boolean =
+      idCol: String = "doc_id"): Boolean =
     IndexMaintenance.applyBatch(batch, dir, batchId, DashboardSubs,
-        shareScan = shareScan) { (shared, staging) =>
+        shareScan = true) { (shared, staging) =>
       val spark = shared.sparkSession
       val st = Some(staging)
       import scala.concurrent.{Await, Future}
@@ -283,16 +274,13 @@ object StreamingIndex {
     * This is the sf100 regime answer for STANDING corpora: the
     * per-batch staging/rename/batchlog machinery exists for streaming
     * exactly-once and is pure overhead when bootstrapping a large
-    * static corpus; `shareScan` picks the scan regime exactly as in
-    * [[applyDashboardBatch]] (true = persist once, the remote/cold
-    * default at 100 TB; false = let each family re-scan a
-    * near-free source, the local/page-cached winner — DashBench
-    * measures both).
+    * static corpus. Like [[applyDashboardBatch]] it persists the
+    * corpus once for the five families.
     */
   def buildDashboard(docs: DataFrame, textCol: String,
       numCols: Seq[String], dir: String,
       p: Int = 12, alpha: Double = graft.operators.IngestDashboard.Alpha,
-      idCol: String = "doc_id", shareScan: Boolean = true): Unit = {
+      idCol: String = "doc_id"): Unit = {
     val spark = docs.sparkSession
     // Bootstrap REFUSES a non-empty dashboard dir: the family writers
     // below append directly (no staging/batchlog), so re-running over
@@ -311,12 +299,9 @@ object StreamingIndex {
         "directly and would double-count existing state — delete the " +
         "directory to rebuild, or use applyDashboardBatch for " +
         "incremental state")
-    val shared =
-      if (shareScan) docs.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else docs
+    val shared = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (shareScan) shared.count()
+      shared.count()
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       Await.result(Future.sequence(Seq(
@@ -331,7 +316,7 @@ object StreamingIndex {
         Future(graft.operators.Dedup.appendNearDupIndex(spark, shared,
           idCol, textCol, dir)))),
         scala.concurrent.duration.Duration.Inf)
-    } finally { if (shareScan) shared.unpersist(); () }
+    } finally { shared.unpersist(); () }
     BatchLog.writeBuiltMarker(spark, dir, -1L)
   }
 

@@ -148,15 +148,6 @@ class InterpretedParitySpec extends SparkSpec {
     val tie = compiled.find(_.getLong(0) == 900001L).get
     assert(tie.getSeq[java.lang.Long](1).take(2) == Seq(63L, -63L))
     assert(tie.getSeq[java.lang.Long](1).last == null)
-    // EvalOnce is a pure identity in both eval modes (the once-per-row
-    // pin changes WHERE codegen evaluates, never the value)
-    def buildPin = df.select($"vec_id",
-        EvalOnce.evalOnce(QuantizeVec.quantizeVec($"embedding")).as("pinned"),
-        QuantizeVec.quantizeVec($"embedding").as("plain"))
-      .orderBy($"vec_id")
-    val (cp, ip) = bothModes(buildPin)
-    assert(cp == ip)
-    assert(cp.forall(r => r.getSeq[java.lang.Long](1) == r.getSeq[java.lang.Long](2)))
   }
 
   test("QuantizeVec keeps HOF parity at |v·1000| ≈ 2^40 and fails like the " +

@@ -80,27 +80,55 @@ class PlanSpec extends SparkSpec {
     assert(df.collect().length == 3, "the totalled frame is the 3-row shard summary")
   }
 
-  test("nested-loop scoring keeps its EvalOnce per-row pins (q196/sq8 shape)") {
-    // whole-stage codegen splices a pure-codegen stream-side projection
-    // at its first use site — inside a nested-loop join's per-pair
-    // loop — so the encode/reconstruction columns feeding the ANN
-    // scoring joins must stay wrapped in EvalOnce (r18: q196's encode
-    // silently ran once per corpus×queries PAIR without it; at scale
-    // that multiplies a full-corpus encode by the query count). This
-    // pins the wrapper's presence in the analyzed plans so a
-    // refactor can't quietly drop it.
+  test("a nested-loop join computes its streamed columns once per row, with AQE on and off") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.Bridge.{column, expression}
+    // 200 streamed rows against 50 broadcast rows: a column computed
+    // in the join's per-pair loop would count 10,000
+    Seq("true", "false").foreach { aqe =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.adaptive.enabled", aqe)
+      s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      s.conf.set("spark.sql.codegen.fallback", "false")
+      val streamed = s.range(0, 200, 1, 4)
+        .select(column(CountedEval(expression(col("id")))).as("c"))
+      val build = broadcast(s.range(0, 50, 1, 1).select(col("id").as("b")))
+      val q = streamed.crossJoin(build).agg(sum(col("c") + col("b")))
+      CountedEval.evals.set(0)
+      assert(q.collect().head.getLong(0) == 50L * 19900 + 200L * 1225)
+      assert(CountedEval.evals.get == 200, s"AQE $aqe: ${CountedEval.evals.get} evaluations")
+    }
+  }
+
+  test("nested-loop scorers plan a codegen boundary above a computed streamed side, none over a plain scan") {
     import graft.operators.Similarity
-    val corpus = Similarity.prepare(Tables(spark, sf).embeddings, "vec_id", "embedding")
-    def evalOnceCount(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.analyzed.collect { case p =>
-        p.expressions.map(_.collect { case e: graft.functions.EvalOnce => e }.size).sum
-      }.sum
-    val bin = Similarity.binaryTopK(corpus.filter(org.apache.spark.sql.functions.col("vid") < 50), corpus, topK = 3)
-    assert(evalOnceCount(bin) >= 2, // corpus sig + query sig
-      "binaryTopK must pin both encode projections with EvalOnce")
-    val sq8 = Similarity.sq8TopK(corpus.filter(org.apache.spark.sql.functions.col("vid") < 50), corpus, topK = 3)
-    assert(evalOnceCount(sq8) >= 2, // rv + rn
-      "sq8 scan must pin rv/rn reconstruction columns with EvalOnce")
+    import graft.plans.CodegenBoundaryExec
+    import org.apache.spark.sql.functions._
+    // a plan no other spec caches: a cached `prepare(embeddings)` is an
+    // in-memory scan whose streamed side computes nothing
+    val corpus = Similarity.prepare(Tables(spark, sf).embeddings.where(col("vec_id") >= 0),
+      "vec_id", "embedding")
+    val queries = corpus.filter(col("vid") < 50)
+    // the boundary is placed when AQE plans each stage: read the final plan
+    def boundaries(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      Jobs.collect(df.queryExecution.executedPlan) { case b: CodegenBoundaryExec => b }.size
+    }
+    val cents = Similarity.coarseCentroids(corpus, 50, 0, 0)
+    Seq(
+      "binaryTopK" -> Similarity.binaryTopK(queries, corpus, topK = 3),
+      "sq8TopK" -> Similarity.sq8TopK(queries, corpus, topK = 3),
+      "bruteForceTopK" -> Similarity.bruteForceTopK(queries, corpus, 3),
+      "IVF assignment" -> Similarity.cellsFor(corpus, cents, 1, "")
+    ).foreach { case (name, df) => assert(boundaries(df) >= 1, name) }
+    val emb = Tables(spark, sf).embeddings
+    val plain = emb.join(broadcast(emb.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("q"), col("embedding").as("e"))), col("vec_id") =!= col("q"))
+      .select(col("q"), col("vec_id"), size(col("embedding")) + size(col("e")))
+    assert(boundaries(plain) == 0, s"a plain scan needs no boundary:\n${plain.queryExecution.executedPlan}")
+    assert(Jobs.collect(plain.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
+    }.size == 1)
   }
 
   test("q01 aggregation is two-phase (map-side partial before shuffle)") {
@@ -601,4 +629,21 @@ class PlanSpec extends SparkSpec {
       assert(got.nonEmpty && got == Jobs.ruleFree(spark)(rows(_, q)), q)
     }
   }
+}
+
+/** An identity whose generated code counts its evaluations. */
+case class CountedEval(child: org.apache.spark.sql.catalyst.expressions.Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+  override def dataType: org.apache.spark.sql.types.DataType = child.dataType
+  override def nullSafeEval(v: Any): Any = CountedEval.hit(v.asInstanceOf[Long])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.CountedEval.hit($c)")
+  override protected def withNewChildInternal(
+      c: org.apache.spark.sql.catalyst.expressions.Expression): CountedEval = copy(child = c)
+}
+
+object CountedEval {
+  val evals = new java.util.concurrent.atomic.AtomicLong
+  def hit(v: Long): Long = { evals.incrementAndGet(); v }
 }

@@ -1928,7 +1928,7 @@ class StreamingSpec extends SparkSpec {
     } finally { docs.unpersist(); () }
   }
 
-  test("buildDashboard bootstrap + incremental batch == one-shot, under both shareScan regimes") {
+  test("buildDashboard bootstrap + incremental batch == one-shot") {
     import graft.operators.{Dedup, IngestDashboard, LangModel, Profiling}
     import graft.streaming.StreamingIndex
     import spark.implicits._
@@ -1970,29 +1970,24 @@ class StreamingSpec extends SparkSpec {
       val kn3Want = LangModel.kneserNey3Surprisal(docs, score, "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       assert(lmWant.nonEmpty && ndWant.nonEmpty && kn3Want.nonEmpty)
-      Seq(true, false).foreach { share =>
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft-dashboot-$share").toString
-        try {
-          // bootstrap (no batchlog) — marker committed last — then one
-          // incremental batch layered on top under the same regime
-          StreamingIndex.buildDashboard(boot, "text", cols, dir,
-            shareScan = share)
-          val fs = new org.apache.hadoop.fs.Path(dir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_built")),
-            "bootstrap must commit the _built marker")
-          assert(StreamingIndex.applyDashboardBatch(delta, "text", cols,
-            dir, batchId = 0, shareScan = share))
-          assert(probeAll(dir) == ((lmWant, profWant, repWant, ndWant, kn3Want)),
-            s"bootstrap+batch (shareScan=$share) must equal the one-shot answers")
-        } finally {
-          def rm(p: java.io.File): Unit = {
-            val kids = p.listFiles(); if (kids != null) kids.foreach(rm)
-            p.delete(); ()
-          }
-          rm(new java.io.File(dir))
+      val dir = java.nio.file.Files.createTempDirectory("graft-dashboot").toString
+      try {
+        // bootstrap (no batchlog) — marker committed last — then one
+        // incremental batch layered on top
+        StreamingIndex.buildDashboard(boot, "text", cols, dir)
+        val fs = new org.apache.hadoop.fs.Path(dir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_built")),
+          "bootstrap must commit the _built marker")
+        assert(StreamingIndex.applyDashboardBatch(delta, "text", cols, dir, batchId = 0))
+        assert(probeAll(dir) == ((lmWant, profWant, repWant, ndWant, kn3Want)),
+          "bootstrap+batch must equal the one-shot answers")
+      } finally {
+        def rm(p: java.io.File): Unit = {
+          val kids = p.listFiles(); if (kids != null) kids.foreach(rm)
+          p.delete(); ()
         }
+        rm(new java.io.File(dir))
       }
       ndProbe.unpersist(); score.unpersist(); ()
     } finally { docs.unpersist(); () }
